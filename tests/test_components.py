@@ -136,6 +136,45 @@ def test_reliable_checkpoint_files_freed(spark, tmp_path):
     assert rdd_dirs() == []
 
 
+def test_free_checkpoint_deletes_files_when_unpersist_fails(
+    spark, tmp_path, monkeypatch
+):
+    """Block unpersist and file delete are independent cleanups: a failed
+    unpersist (a py4j hiccup) must not leak the reliable checkpoint's
+    rdd-* directory."""
+    import os
+
+    from webdedup import joins
+
+    reliable_dir = str(tmp_path / "ckpt")
+    df = joins.checkpointer(spark, reliable_dir)(spark.range(10))
+    real = joins._checkpoint_rdd
+
+    class _UnpersistRaises:
+        def __init__(self, rdd):
+            self._rdd = rdd
+
+        def unpersist(self, blocking):
+            raise RuntimeError("unpersist failed")
+
+        def __getattr__(self, name):
+            return getattr(self._rdd, name)
+
+    monkeypatch.setattr(
+        joins, "_checkpoint_rdd", lambda d: _UnpersistRaises(real(d))
+    )
+
+    def rdd_dirs():
+        return [
+            d for _, dirs, _ in os.walk(reliable_dir)
+            for d in dirs if d.startswith("rdd-")
+        ]
+
+    assert len(rdd_dirs()) == 1
+    joins.free_checkpoint(df)
+    assert rdd_dirs() == []
+
+
 def _n_persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 

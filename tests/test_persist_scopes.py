@@ -12,7 +12,7 @@ from webdedup.config import DedupConfig
 from webdedup.fixtures import pages_dataframe
 from webdedup.incremental import IncrementalDedup
 from webdedup.joins import release_persisted, scoped_persists, track_persist
-from webdedup.pipeline import dedup
+from webdedup.pipeline import collect_counters, dedup
 
 CFG = DedupConfig(
     number_of_hash_functions=128, rows_per_band=4, shingle_size=3,
@@ -166,3 +166,26 @@ def test_scope_stack_is_thread_local(spark):
         assert len(captured["worker"]) == 1
         assert captured["worker"][0] is not mdf
         ms.release()
+
+
+def test_dedup_release_loop_keeps_persisted_rdds_flat(spark):
+    """pairs, clusters and the lazy counters read caches and checkpoint
+    blocks the run's scope owns. Materializing all of them and then
+    releasing leaves nothing pinned, so a loop of runs stays flat."""
+    pages, _ = pages_dataframe(spark, n=60, seed=21)
+    pages = pages.select("url", "text")
+    jsc = spark.sparkContext._jsc
+    base = jsc.getPersistentRDDs().size()
+    sizes = []
+    for _ in range(3):
+        res = dedup(pages, CFG)
+        counters = collect_counters(res)
+        n_rows = res.clusters.count()
+        assert counters["pages"] == n_rows == 60
+        assert counters["verified_pairs"] == res.pairs.count() > 0
+        assert counters["clusters"] == (
+            res.clusters.select("cluster_id").distinct().count()
+        )
+        assert res.release() > 0
+        sizes.append(jsc.getPersistentRDDs().size())
+    assert sizes == [base] * 3

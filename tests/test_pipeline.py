@@ -133,6 +133,63 @@ def test_cluster_ids_are_member_min(result):
         assert r["cluster_id"] == r["m"]
 
 
+def test_edge_plan_reads_featurize_leaf_not_lineage(result):
+    """Every branch downstream of featurize plans against ONE checkpoint
+    leaf: the analyzed plan of the edge set must not contain the featurize
+    pandas UDF at all (a lazily persisted feat frame repeated its whole
+    lineage, UDF included, once per branch)."""
+    plan = result.pairs._jdf.queryExecution().analyzed().toString()
+    assert plan.count("featurize(") == 0
+    assert "LogicalRDD" in plan
+
+
+def test_simhash_key_expr_matches_column_tree(spark):
+    """The block-triple keys built as one SQL expression emit exactly the
+    (doc_id, tbl, key) rows of the same keys built as an F.* Column tree,
+    over the full signed-64 simhash range."""
+    from webdedup import lsh
+
+    rng = np.random.default_rng(5)
+    i64 = np.iinfo(np.int64)
+    sims = [int(x) for x in rng.integers(i64.min, i64.max, 300, dtype=np.int64)]
+    sims += [0, -1, int(i64.min), int(i64.max)]
+    df = spark.createDataFrame(list(enumerate(sims)), "doc_id long, simhash long")
+
+    for t in (CFG.simhash_hamming_threshold, 0, 7):
+        widths, starts, combos = lsh._simhash_tables(t)
+
+        def block(i):
+            mask = (1 << widths[i]) - 1
+            return F.shiftright(F.col("simhash"), starts[i]).bitwiseAND(F.lit(mask))
+
+        tree = F.array(
+            *[
+                F.struct(
+                    F.lit(ci).alias("tbl"),
+                    (
+                        F.shiftleft(block(a), widths[b] + widths[c])
+                        + F.shiftleft(block(b), widths[c])
+                        + block(c)
+                    ).alias("key"),
+                )
+                for ci, (a, b, c) in enumerate(combos)
+            ]
+        )
+
+        def rows(keys):
+            return df.select("doc_id", F.explode(keys).alias("k")).select(
+                "doc_id", "k.tbl", "k.key"
+            )
+
+        got, want = rows(lsh._simhash_key_col(t)), rows(tree)
+        assert got.dtypes == want.dtypes == [
+            ("doc_id", "bigint"), ("tbl", "int"), ("key", "bigint")
+        ]
+        assert got.count() == want.count() == len(sims) * len(combos)
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+
+
 def test_near_cap_bucket_pair_budget(spark):
     """A band bucket just under max_bin_size must emit exactly B(B-1)/2
     in-bucket candidate pairs (quadratic but bounded by the cap: worst case

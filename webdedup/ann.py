@@ -195,7 +195,7 @@ def ivf_topk(
         # and tasks racing a cold cache re-run the UDF per side (block-
         # level dedup is per-BlockManager — on a cluster the fusion would
         # silently degrade back to two full passes; same pathology the
-        # dedup pipeline's eager feat fill guards against)
+        # dedup pipeline's eager feat checkpoint guards against)
         both.count()
         data = both.select("vec_id", "_v", F.col("_cp.cell").alias("cell"))
         probes = both.select(

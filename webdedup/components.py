@@ -35,6 +35,8 @@ import threading
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from webdedup.joins import checkpointer, free_checkpoint, track_release
+
 
 class _ThreadLocalStats:
     """Per-thread diagnostics dict (ADVICE r5: a shared module dict could
@@ -71,39 +73,6 @@ class _ThreadLocalStats:
 #: claim rests on that curve, BENCH r5). ``rounds`` counts hash-min
 #: iterations to fixpoint in EITHER path (driver numpy or distributed).
 LAST_STATS = _ThreadLocalStats()
-
-
-def _free_ckpt(df: DataFrame) -> None:
-    """Release a checkpointed frame's RDD blocks (and files) NOW.
-
-    ``spark.catalog.clearCache()``/``DataFrame.unpersist()`` cannot reach
-    them (they belong to the checkpoint RDD, not the CacheManager), and
-    waiting for the ContextCleaner needs a driver GC cycle that may come
-    only after the heap is already full. In RELIABLE-checkpoint mode
-    (``checkpoint_dir``) each round additionally owns an ``rdd-N``
-    directory under the checkpoint dir that Spark never deletes by
-    default (``spark.cleaner.referenceTracking.cleanCheckpoints`` is off
-    and GC-timed anyway) — a long-lived session would otherwise grow one
-    directory per CC round until the volume fills, so the files are
-    deleted here too. Only call once nothing will ever re-materialize a
-    plan derived from ``df`` (the blocks/files ARE the truncated lineage —
-    a later action would raise CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND or a
-    missing-file error, not recompute).
-    """
-    try:
-        rdd = df._jdf.queryExecution().analyzed().rdd()
-        rdd.unpersist(False)
-    except Exception:
-        return  # session gone / plan shape changed — best-effort
-    try:
-        f = rdd.getCheckpointFile()  # scala Option; empty for localCheckpoint
-        if f is not None and f.isDefined():
-            sc = df.sparkSession.sparkContext
-            p = sc._jvm.org.apache.hadoop.fs.Path(f.get())
-            fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-            fs.delete(p, True)
-    except Exception:
-        pass  # non-RDD plan / fs unreachable — best-effort
 
 
 def _driver_labels(sym_pdf):
@@ -148,38 +117,24 @@ def connected_components(
     run the shuffle loop with per-round lineage truncation.
 
     ``checkpoint_dir``: opt-in RELIABLE checkpointing for the distributed
-    loop (VERDICT r5 #5). localCheckpoint blocks live on executors — an
-    executor loss mid-loop loses truncated lineage and fails the job. On
-    clusters with executor churn pass a (HDFS/object-store) directory:
-    each round then writes a reliable checkpoint there instead. Labels
-    are identical either way (gated by
-    tests/test_components.py::test_reliable_checkpoint_matches). The
-    env fallback WEBDEDUP_CC_CHECKPOINT_DIR applies when the argument is
-    None (callers like the pipeline don't thread it through).
+    loop (VERDICT r5 #5), with the env fallback WEBDEDUP_CC_CHECKPOINT_DIR
+    — the policy lives in :func:`webdedup.joins.checkpointer`. Labels are
+    identical either way (gated by
+    tests/test_components.py::test_reliable_checkpoint_matches).
     """
-    if checkpoint_dir is None:
-        checkpoint_dir = os.environ.get("WEBDEDUP_CC_CHECKPOINT_DIR") or None
-    if checkpoint_dir:
-        vertices.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # reliable checkpoints survive executor loss (cluster mode);
-        # localCheckpoint is the fast local default
-        return (
-            df.checkpoint(eager=True)
-            if checkpoint_dir
-            else df.localCheckpoint(eager=True)
-        )
+    _ckpt = checkpointer(vertices.sparkSession, checkpoint_dir)
 
     sym = (
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     )
     # one eager materialization of the (possibly expensive) upstream edge
-    # DAG serves BOTH paths: the count that drives the size gate, and then
-    # either the Arrow collect or the iterative loop
-    sym = _ckpt(sym)
-    n_edges = sym.count()
+    # DAG serves BOTH paths: its observed row count drives the size gate
+    # (no separate count job), and the stored rows feed either the Arrow
+    # collect or the iterative loop
+    ob = Observation()
+    sym = _ckpt(sym.observe(ob, F.count(F.lit(1)).alias("n")))
+    n_edges = ob.get["n"]
     limit = (
         collect_edge_limit
         if collect_edge_limit is not None
@@ -190,7 +145,7 @@ def connected_components(
         ids, labels, rounds = (
             _driver_labels(sym.toPandas()) if n_edges else (None, None, 0)
         )
-        _free_ckpt(sym)
+        free_checkpoint(sym)
         LAST_STATS.update(rounds=rounds, n_sym_edges=n_edges)
         if ids is None:
             return vertices.select("id", F.col("id").alias("cluster_id"))
@@ -204,8 +159,6 @@ def connected_components(
         )
 
     # ---- distributed loop (edge set above the driver gate) ----
-    from webdedup.joins import track_release
-
     # Size the loop's shuffles to the edge count, not the session default:
     # dup edges are tiny relative to the corpus and per-iteration latency is
     # dominated by task scheduling when partitions are near-empty.
@@ -257,7 +210,7 @@ def connected_components(
         # the old round's checkpoint blocks are dead the moment the new
         # checkpoint is materialized — free them NOW (VERDICT r5 #1: they
         # are pinned for the session's lifetime otherwise)
-        _free_ckpt(labels)
+        free_checkpoint(labels)
         labels = new_labels
         LAST_STATS.update(rounds=it + 1, n_sym_edges=n_edges)
         if (ob.get["changed"] or 0) == 0:
@@ -274,12 +227,12 @@ def connected_components(
             " returning partial labels (components may be over-split)",
             RuntimeWarning,
         )
-    _free_ckpt(sym)
+    free_checkpoint(sym)
     # the FINAL labels checkpoint backs the returned lazy frame: hand its
     # blocks to the caller's persist scope so result.release() /
     # release_persisted() frees them once outputs are materialized
     final_labels = labels
-    track_release(lambda: _free_ckpt(final_labels))
+    track_release(lambda: free_checkpoint(final_labels))
     # fold isolated vertices back in with their own id as the label
     return vertices.select("id").join(labels, "id", "left").select(
         "id", F.coalesce("cluster_id", "id").alias("cluster_id")

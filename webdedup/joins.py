@@ -1,4 +1,6 @@
-"""Size-gated semi-join helper + per-run persist tracking.
+"""Size-gated semi-join helper, per-run persist tracking, and the one
+eager-checkpoint policy (local vs reliable) the pipeline and connected
+components share.
 
 The pipeline repeatedly carves "rows whose id appears in this (usually
 small) id set" out of a wide cached table. A forced ``F.broadcast`` hint is
@@ -24,6 +26,7 @@ the default scope AND every still-registered run scope.
 
 from __future__ import annotations
 
+import os
 import threading
 
 from pyspark.sql import DataFrame, functions as F
@@ -35,6 +38,88 @@ from pyspark.sql import DataFrame, functions as F
 _SCOPES_LOCK = threading.Lock()
 
 
+def persist_level():
+    """Storage level for every cache and local checkpoint a run takes:
+    the ``pyspark.StorageLevel`` named by ``WEBDEDUP_PERSIST_LEVEL`` (e.g.
+    MEMORY_AND_DISK, measured in BASELINE.md round 4), else the DataFrame
+    default MEMORY_AND_DISK_DESER (also Spark's localCheckpoint default).
+    """
+    from pyspark import StorageLevel
+
+    level = os.environ.get("WEBDEDUP_PERSIST_LEVEL")
+    if not level:
+        return StorageLevel.MEMORY_AND_DISK_DESER
+    if not isinstance(getattr(StorageLevel, level, None), StorageLevel):
+        raise ValueError(
+            f"invalid WEBDEDUP_PERSIST_LEVEL={level!r}; expected a "
+            "pyspark.StorageLevel name like MEMORY_AND_DISK"
+        )
+    return getattr(StorageLevel, level)
+
+
+def checkpointer(spark, checkpoint_dir: str | None = None):
+    """Return ``fn(df)`` that materializes ``df`` NOW as a lineage-free
+    ``LogicalRDD`` leaf: every plan built on the result reads the stored
+    rows instead of re-planning (and re-running) the upstream DAG.
+
+    localCheckpoint at :func:`persist_level` is the fast default. Its
+    blocks live on executors, so an executor loss fails the job; on
+    clusters with executor churn pass ``checkpoint_dir`` (an HDFS /
+    object-store directory) for RELIABLE checkpoints instead. The env
+    fallback ``WEBDEDUP_CC_CHECKPOINT_DIR`` applies when the argument is
+    None. Free the result with :func:`free_checkpoint` once nothing will
+    re-materialize a plan derived from it.
+    """
+    if checkpoint_dir is None:
+        checkpoint_dir = os.environ.get("WEBDEDUP_CC_CHECKPOINT_DIR") or None
+    if checkpoint_dir:
+        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+        return lambda df: df.checkpoint(eager=True)
+    level = persist_level()
+    return lambda df: df.localCheckpoint(eager=True, storageLevel=level)
+
+
+def _checkpoint_rdd(df: DataFrame):
+    return df._jdf.queryExecution().analyzed().rdd()
+
+
+def free_checkpoint(df: DataFrame) -> None:
+    """Release a checkpointed frame's RDD blocks (and files) NOW.
+
+    ``spark.catalog.clearCache()``/``DataFrame.unpersist()`` cannot reach
+    them (they belong to the checkpoint RDD, not the CacheManager), and
+    waiting for the ContextCleaner needs a driver GC cycle that may come
+    only after the heap is already full. A RELIABLE checkpoint also owns
+    an ``rdd-N`` directory that Spark never deletes by default
+    (``spark.cleaner.referenceTracking.cleanCheckpoints`` is off and
+    GC-timed anyway) — a long-lived session would otherwise grow one
+    directory per checkpoint until the volume fills, so the files are
+    deleted here too. The two steps are independent best-effort cleanups:
+    a failed unpersist never skips the file delete. Only call once nothing
+    will ever re-materialize a plan derived from ``df`` (the blocks/files
+    ARE the truncated lineage — a later action would raise
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND or a missing-file error, not
+    recompute).
+    """
+    try:
+        rdd = _checkpoint_rdd(df)
+    except Exception:
+        return  # session gone / non-RDD plan — nothing to free
+    try:
+        rdd.unpersist(False)
+    except Exception:
+        pass  # best-effort; the file delete below still runs
+    try:
+        f = rdd.getCheckpointFile()  # scala Option; empty for localCheckpoint
+        if f is not None and f.isDefined():
+            sc = df.sparkSession.sparkContext
+            p = sc._jvm.org.apache.hadoop.fs.Path(f.get())
+            fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+            fs.delete(p, True)
+    except Exception:
+        pass  # fs unreachable — best-effort
+
+
 class PersistScope:
     """Frames persisted by one pipeline run, released together.
 
@@ -43,7 +128,8 @@ class PersistScope:
     For plain persisted frames a lazy frame consumed afterwards merely
     recomputes instead of reading the cache (correct, just slower) — but a
     scope can also hold ``add_callback`` release actions that free
-    checkpoint blocks/files (connected-components labels), and a frame
+    checkpoint blocks/files (the pipeline's featurize leaf, the
+    connected-components labels), and a frame
     whose lineage such a callback truncates CANNOT be re-materialized
     after release (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), so the
     materialize-before-release rule is a hard contract, not a perf hint.
@@ -56,23 +142,7 @@ class PersistScope:
             _LIVE_SCOPES.append(self)
 
     def add(self, df: DataFrame) -> DataFrame:
-        import os
-
-        level = os.environ.get("WEBDEDUP_PERSIST_LEVEL")
-        if level:
-            from pyspark import StorageLevel
-
-            # e.g. MEMORY_AND_DISK (serialized columnar batches) vs the
-            # DataFrame default MEMORY_AND_DISK_DESER — scaling-lever knob
-            # (BASELINE.md round 4 measures both under core contention)
-            if not isinstance(getattr(StorageLevel, level, None), StorageLevel):
-                raise ValueError(
-                    f"invalid WEBDEDUP_PERSIST_LEVEL={level!r}; expected a "
-                    "pyspark.StorageLevel name like MEMORY_AND_DISK"
-                )
-            df.persist(getattr(StorageLevel, level))
-        else:
-            df.persist()
+        df.persist(persist_level())
         self._frames.append(df)
         # a scope can be bulk-released (release_persisted on another
         # thread) while still active on this thread's stack; the moment it

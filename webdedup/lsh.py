@@ -121,56 +121,22 @@ def _simhash_tables(t: int):
     return widths, starts, combos
 
 
-#: per-process cache of the block-triple key Column for each hamming
-#: threshold: the expression is ~56 structs × shift arithmetic ≈ 800 py4j
-#: round-trips to build — a measurable driver-side cost per pipeline run.
-#: Column objects are immutable unresolved expressions bound to the
-#: process-wide JVM gateway, so reuse across queries/sessions is safe.
-#: Entries are (gateway_weakref, keys) per threshold: a (rare) full JVM
-#: restart in one Python process must not serve a Column bound to the dead
-#: gateway, and identity is validated through a WEAK reference — keying by
-#: ``id(gateway)`` would be unsound because a GC'd gateway's id can be
-#: reused by its replacement object.
-_SIMHASH_KEYS_CACHE: dict = {}
-
-
 def _simhash_key_col(t: int):
-    import weakref
-
-    from pyspark import SparkContext
-
-    gw = getattr(SparkContext, "_gateway", None)
-    entry = _SIMHASH_KEYS_CACHE.get(t)
-    if entry is not None:
-        ref, keys = entry
-        live = ref() if ref is not None else None
-        if gw is not None and live is gw:
-            return keys
+    """The C(nb, 3) block-triple keys of column ``simhash`` as ONE SQL
+    expression → array<struct<tbl: int, key: bigint>>. The JVM parses the
+    string in a single py4j call; the same tree built from ``F.*`` Column
+    calls costs ~800 round-trips (~340 ms warm) per pipeline run."""
     widths, starts, combos = _simhash_tables(t)
 
     def block(i):
-        mask = (1 << widths[i]) - 1
-        return F.shiftright(F.col("simhash"), starts[i]).bitwiseAND(F.lit(mask))
+        return f"(shiftright(simhash, {starts[i]}) & {(1 << widths[i]) - 1})"
 
-    keys = F.array(
-        *[
-            F.struct(
-                F.lit(ci).alias("tbl"),
-                (
-                    F.shiftleft(block(a), widths[b] + widths[c])
-                    + F.shiftleft(block(b), widths[c])
-                    + block(c)
-                ).alias("key"),
-            )
-            for ci, (a, b, c) in enumerate(combos)
-        ]
+    keys = ", ".join(
+        f"named_struct('tbl', {ci}, 'key', shiftleft({block(a)}, "
+        f"{widths[b] + widths[c]}) + shiftleft({block(b)}, {widths[c]}) + {block(c)})"
+        for ci, (a, b, c) in enumerate(combos)
     )
-    if gw is not None:
-        try:
-            _SIMHASH_KEYS_CACHE[t] = (weakref.ref(gw), keys)
-        except TypeError:
-            pass  # gateway type not weakref-able: skip caching, stay correct
-    return keys
+    return F.expr(f"array({keys})")
 
 
 def simhash_candidate_pairs(

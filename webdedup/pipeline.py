@@ -1,8 +1,12 @@
 """End-to-end near-duplicate detection + clustering pipeline.
 
 read → exact-dup collapse → featurize (shingle/MinHash/SimHash) → LSH bands
-(salted, hot-bucket-killed) → exact Jaccard verify → [substring pass] →
-connected components → (url, doc_id, cluster_id).
+(one-aggregate census, hot-bucket-killed) → exact Jaccard verify →
+[substring pass] → connected components → (url, doc_id, cluster_id).
+
+The featurize output is materialized once, eagerly, as a checkpoint leaf:
+``dedup()`` runs the featurize job before it returns, and every later
+stage plans against that leaf rather than the featurize lineage.
 
 This is the set-oriented equivalent of the reference's fused
 ``fit_kneighbors(X, X)`` self-query (nearestNeighbors_PythonInterface.cpp:
@@ -40,9 +44,12 @@ from webdedup.components import connected_components
 from webdedup.config import DedupConfig
 from webdedup.joins import (
     PersistScope,
+    checkpointer,
+    free_checkpoint,
     scoped_persists,
     semi_join_ids,
     track_persist,
+    track_release,
 )
 from webdedup.signatures import featurize
 from webdedup.substring import substring_pairs
@@ -50,12 +57,23 @@ from webdedup.substring import substring_pairs
 
 @dataclass
 class DedupResult:
+    """Lazy outputs of one :func:`dedup` run plus the caches backing them.
+
+    ``clusters``, ``pairs`` and the ``counters`` callables all read blocks
+    owned by ``scope``: the featurize checkpoint leaf, the docs/edges
+    caches and, on the distributed CC path, the final labels checkpoint.
+    Materialize every output you need — write or collect ``pairs`` and
+    ``clusters``, run ``collect_counters`` — BEFORE ``release()``. After
+    it, ``pairs`` in particular cannot be recomputed: its lineage is cut
+    at the freed featurize checkpoint, so an action on it raises instead
+    of re-running the pipeline.
+    """
+
     clusters: DataFrame        # (doc_id, url?, cluster_id)
     pairs: DataFrame           # verified (a, b, jaccard, kind)
     counters: dict = field(default_factory=dict)
-    #: caches persisted by this run; call release() once clusters/pairs/
-    #: counters have been fully materialized. Releasing here never touches
-    #: caches belonging to other in-flight runs.
+    #: caches persisted by this run; releasing here never touches caches
+    #: belonging to other in-flight runs.
     scope: PersistScope | None = None
 
     def release(self) -> int:
@@ -111,9 +129,13 @@ def dedup(
     one whose optimized plan contains joins/aggregates/UDF stages — is
     persisted automatically first, so the transformation computes exactly
     once instead of once for the count and again per downstream stage.
+    The featurize stage runs inside this call as one eager checkpoint
+    action, and so does the CC stage (it materializes the edge set);
+    ``clusters`` and the counters stay lazy.
 
-    Caches persisted by the run are collected into ``result.scope``;
-    call ``result.release()`` after materializing the outputs.
+    Caches and checkpoints taken by the run are collected into
+    ``result.scope``; call ``result.release()`` after materializing the
+    outputs (see :class:`DedupResult`).
     """
     cfg = cfg or DedupConfig()
     with scoped_persists() as scope:
@@ -178,7 +200,7 @@ def _dedup_impl(
     # ---- stage 1: featurize unique docs (Arrow-vectorized kernels)
     # The fused UDF emits the substring fingerprints alongside the LSH
     # features, so the corpus text crosses the Arrow boundary ONCE. The
-    # feat cache stays text-free: the substring verify pulls texts for
+    # feat leaf stays text-free: the substring verify pulls texts for
     # candidate ids only, re-carving uniq from the already-persisted docs
     # cache (a broadcast semi-join over cached narrow+text columns), so
     # text bytes are cached once (docs), not twice.
@@ -188,49 +210,17 @@ def _dedup_impl(
     feat = featurize(
         uniq, cfg, text_col=text_col, with_substring_fps=True
     ).select(*feat_cols)
-    # materialize the cache BEFORE any downstream action: the LSH / SimHash
-    # / verify / substring branches all consume feat inside one downstream
-    # job, and concurrently scheduled stages would otherwise race past the
-    # cold cache and re-run the featurize UDF once per branch. The fill
-    # job runs on a background thread so the DRIVER-side construction of
-    # that downstream DAG (py4j chatter, ~1.3 s of idle driver time
-    # otherwise serialized behind the count) overlaps it (guide §2.6).
-    # Everything until the join point is lazy ONLY below the broadcast
-    # gate: above cfg.broadcast_id_limit the verify/substring stages run
-    # eager semi-join gating counts (webdedup.joins), so there the thread
-    # is joined BEFORE stage 3 — the overlap win is forfeited exactly
-    # where gating job barriers already serialize the DAG, and no eager
-    # action can ever scan the still-cold feat cache concurrently with
-    # the fill. Profile mode counts per stage → stays sequential.
-    feat = track_persist(feat)
+    # Cut the DAG here: feat becomes ONE eager checkpoint leaf, so every
+    # LSH / SimHash / verify / substring branch below plans against a
+    # LogicalRDD instead of carrying its own copy of scan → exact-dup
+    # semi-join → featurize UDF (a lazily persisted feat kept ~60 copies
+    # of that lineage in the edge plan). The UDF boundary is crossed once,
+    # by this action. The leaf's blocks belong to the run's persist scope.
     t0 = time.perf_counter()
-    fill_err: list = []
-    fill_thread = None
+    feat = checkpointer(pages.sparkSession)(feat)
+    track_release(lambda leaf=feat: free_checkpoint(leaf))
     if os.environ.get("WEBDEDUP_PROFILE"):
-        feat.count()
         print(f"[profile] featurize: {time.perf_counter()-t0:.1f}s", flush=True)
-    else:
-        from pyspark import InheritableThread
-
-        def _fill():
-            try:
-                feat.count()
-            except BaseException as e:  # noqa: BLE001 — re-raised at join
-                fill_err.append(e)
-
-        fill_thread = InheritableThread(target=_fill, daemon=True)
-        fill_thread.start()
-
-    def _join_fill():
-        nonlocal fill_thread
-        if fill_thread is not None:
-            fill_thread.join()
-            fill_thread = None
-            if fill_err:
-                raise fill_err[0]
-
-    if n_docs > cfg.broadcast_id_limit:
-        _join_fill()
 
     # ---- stage 2: candidate pairs (MinHash LSH bands + SimHash blocks).
     # Per-branch multi-band dedupe is skipped when the union below collapses
@@ -282,9 +272,6 @@ def _dedup_impl(
     probe("edges", edges)
 
     # ---- stage 6: connected components → cluster ids
-    # the feat cache MUST be materialized before CC triggers the first
-    # downstream action (see the fill-thread comment above)
-    _join_fill()
     t0 = time.perf_counter()
     vertices = docs.select(F.col("doc_id").alias("id"))
     labels = connected_components(vertices, edges.select("a", "b"))
