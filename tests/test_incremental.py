@@ -131,7 +131,12 @@ def test_metrics_files_written(spark, tmp_root):
     saved = json.load(open(path))
     assert saved["featurize"]["pages_shingled"] > 0
     assert saved["featurize"]["signatures_emitted"] > 0
-    assert "candidate_pairs" in saved["candidates"]
+    # the observed candidate count is exact: one batch into an empty store
+    # makes the stored features both the new and the whole side
+    feat = inc.work.read(spark, "features")
+    want = inc._new_touching_pairs(feat, feat, CFG).count()
+    assert want > 0
+    assert saved["candidates"]["candidate_pairs"] == want
     assert isinstance(saved["partition_lineage"], list)
 
 

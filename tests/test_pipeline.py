@@ -143,6 +143,39 @@ def test_edge_plan_reads_featurize_leaf_not_lineage(result):
     assert "LogicalRDD" in plan
 
 
+def test_edge_plan_runs_each_candidate_subtree_once(result):
+    """The materialized edge cache's final plan evaluates the exact-Jaccard
+    UDF once per pair and runs each candidate self-join once: the pair-id
+    sets read the deduped pairs' exchange instead of a mid-DAG cache or a
+    second copy of the band joins. The docs cache is the only cache the
+    edge plan reads."""
+    from capture_plans import edge_cache_plan, plan_shape
+
+    result.pairs.count()
+    shape = plan_shape(edge_cache_plan(result.pairs))
+    assert shape["jaccard_udf_evals"] == 1, shape
+    assert shape["lsh_band_joins"] == 1, shape
+    assert shape["simhash_band_joins"] == 1, shape
+    assert shape["other_caches"] == 0, shape
+
+
+def test_broadcast_id_limit_shuffled_semi_joins_match_default(spark, pages, result):
+    """Above broadcast_id_limit every id-set semi-join takes the persisted,
+    counted, shuffled path; the edges and clusters must not change."""
+    from dataclasses import replace
+
+    pages_df, _ = pages
+    res = dedup(pages_df, replace(CFG, broadcast_id_limit=1))
+    try:
+        cols = ["a", "b", "jaccard", "kind"]
+        assert sorted(res.pairs.select(*cols).collect()) == sorted(
+            result.pairs.select(*cols).collect()
+        )
+        assert sorted(res.clusters.collect()) == sorted(result.clusters.collect())
+    finally:
+        res.release()
+
+
 def test_simhash_key_expr_matches_column_tree(spark):
     """The block-triple keys built as one SQL expression emit exactly the
     (doc_id, tbl, key) rows of the same keys built as an F.* Column tree,

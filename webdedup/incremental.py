@@ -29,7 +29,9 @@ from webdedup import lsh, verify
 from webdedup.catalog import Catalog
 from webdedup.components import connected_components
 from webdedup.config import DedupConfig
-from webdedup.joins import scoped_persists, semi_join_ids, track_persist
+from webdedup.joins import (
+    scoped_persists, semi_join_ids, track_checkpoint, track_persist,
+)
 from webdedup.metrics import PipelineMetrics, partition_lineage
 from webdedup.signatures import featurize
 from webdedup.substring import substring_pairs
@@ -227,10 +229,13 @@ class IncrementalDedup:
             feat_all = stored.select(*cols).unionByName(
                 feat_new.select(*cols)
             )
-        track_persist(feat_all)
+        # one eager checkpoint leaf for the band join, verify and substring
+        # subtrees to share through exchange reuse (pipeline.py docstring)
+        feat_all = track_checkpoint(feat_all)
 
         cand = self._new_touching_pairs(feat_new, feat_all, cfg)
         cand = mx.observe(cand, "candidates", F.count(F.lit(1)).alias("candidate_pairs"))
+        track_persist(cand)  # verify reads cand twice; observe it once
         near = verify.verified_pairs(
             cand, feat_all, cfg.jaccard_threshold, cfg.broadcast_id_limit,
             known_max=n_corpus,

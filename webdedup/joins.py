@@ -238,6 +238,14 @@ def track_release(fn) -> None:
     _stack()[-1].add_callback(fn)
 
 
+def track_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager :func:`checkpointer` leaf of ``df``, freed with this thread's
+    innermost scope."""
+    leaf = checkpointer(df.sparkSession)(df)
+    track_release(lambda: free_checkpoint(leaf))
+    return leaf
+
+
 def release_persisted() -> int:
     """Unpersist EVERY tracked frame in every live scope; returns the count.
 

@@ -8,6 +8,14 @@ The featurize output is materialized once, eagerly, as a checkpoint leaf:
 ``dedup()`` runs the featurize job before it returns, and every later
 stage plans against that leaf rather than the featurize lineage.
 
+Caching rule for everything below the leaf: inside one plan, a subtree
+with several consumers (a candidate set feeding both its id set and its
+verify join) shares its work through exchange reuse, not a cache. The
+reuse fails when the subtree reads a cached relation, so a frame that
+several subtrees read, or that sits above a Python UDF, becomes an eager
+checkpoint leaf like ``feat``. A plain cache is kept only above an
+``observe()``, so its metric is counted once.
+
 This is the set-oriented equivalent of the reference's fused
 ``fit_kneighbors(X, X)`` self-query (nearestNeighbors_PythonInterface.cpp:
 43-56) followed by graph clustering (cluster/minHashDBSCAN.py), re-expressed
@@ -44,12 +52,10 @@ from webdedup.components import connected_components
 from webdedup.config import DedupConfig
 from webdedup.joins import (
     PersistScope,
-    checkpointer,
-    free_checkpoint,
     scoped_persists,
     semi_join_ids,
+    track_checkpoint,
     track_persist,
-    track_release,
 )
 from webdedup.signatures import featurize
 from webdedup.substring import substring_pairs
@@ -217,8 +223,7 @@ def _dedup_impl(
     # of that lineage in the edge plan). The UDF boundary is crossed once,
     # by this action. The leaf's blocks belong to the run's persist scope.
     t0 = time.perf_counter()
-    feat = checkpointer(pages.sparkSession)(feat)
-    track_release(lambda leaf=feat: free_checkpoint(leaf))
+    feat = track_checkpoint(feat)
     if os.environ.get("WEBDEDUP_PROFILE"):
         print(f"[profile] featurize: {time.perf_counter()-t0:.1f}s", flush=True)
 

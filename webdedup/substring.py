@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from webdedup.config import DedupConfig
-from webdedup.joins import semi_join_ids, track_persist
+from webdedup.joins import semi_join_ids, track_checkpoint
 from webdedup.signatures import make_substring_fp_udf
 
 
@@ -36,27 +36,25 @@ def substring_pairs(
     contains-verify join from a separate frame (e.g. the pipeline's already-
     persisted docs cache) so ``df`` need not carry — or cache — the text
     column at all when ``fps_col`` is set.
+
+    Without ``fps_col`` the fingerprint UDF runs in this call, as one eager
+    checkpoint owned by the caller's persist scope: materialize the result
+    before releasing that scope.
     """
     if fps_col is not None:
-        rows = (
-            df.select("doc_id", F.col(fps_col).alias("_fps"))
-            .withColumn("n_fp", F.size("_fps"))
-            .where(F.col("n_fp") > 0)
-            .select("doc_id", "n_fp", F.explode("_fps").alias("fp"))
-        )
+        fps = df.select("doc_id", F.col(fps_col).alias("_fps"))
     else:
+        # the fingerprint UDF feeds both the hot-count agg and the self-join:
+        # run it once, into a checkpoint leaf (pipeline.py module docstring)
         fp_udf = make_substring_fp_udf(cfg)
-        rows = (
-            df.select("doc_id", F.col(text_col).alias("_t"))
-            .withColumn("_fps", fp_udf("_t"))
-            .withColumn("n_fp", F.size("_fps"))
-            .where(F.col("n_fp") > 0)
-            .select("doc_id", "n_fp", F.explode("_fps").alias("fp"))
+        fps = track_checkpoint(
+            df.select("doc_id", fp_udf(F.col(text_col)).alias("_fps"))
         )
-    # persist: the (Python-UDF or exploded-from-cache) fingerprints feed
-    # both the hot-count agg and the self-join — without it the upstream
-    # runs once per consumer
-    rows = track_persist(rows)
+    rows = (
+        fps.withColumn("n_fp", F.size("_fps"))
+        .where(F.col("n_fp") > 0)
+        .select("doc_id", "n_fp", F.explode("_fps").alias("fp"))
+    )
     # kill hot fingerprints (boilerplate) — same tombstone idea as LSH
     # buckets. The hot list is tiny ⇒ broadcast ANTI-join; joining against
     # the non-hot list instead would shuffle the full exploded table twice.
@@ -104,13 +102,9 @@ def substring_pairs(
     # widest column in the table — the size-gated broadcast semi-join
     # (webdedup.joins) keeps the two text shuffles proportional to
     # candidates, not corpus, and degrades to a shuffle join instead of
-    # OOMing when candidate volume outgrows the limit.
-    shared = track_persist(shared)
-    pair_ids = (
-        shared.select(F.col("a").alias("doc_id"))
-        .union(shared.select(F.col("b").alias("doc_id")))
-        .distinct()
-    )
+    # OOMing when candidate volume outgrows the limit. The id set is an
+    # explode, as in verify.attach_shingles, so it reuses `shared`'s exchange.
+    pair_ids = shared.select(F.explode(F.array("a", "b")).alias("doc_id")).distinct()
     text_src = texts_df if texts_df is not None else df
     texts = semi_join_ids(
         text_src.select("doc_id", F.col(text_col).alias("_t")),

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-from webdedup.joins import semi_join_ids, track_persist
+from webdedup.joins import semi_join_ids
 
 
 @pandas_udf(DoubleType())
@@ -49,17 +49,11 @@ def attach_shingles(
     pairs: DataFrame, feat: DataFrame, max_broadcast_ids: int = 2_000_000,
     known_max: int | None = None,
 ) -> DataFrame:
-    """Join (a, b) pairs to both sides' shingle arrays."""
-    # narrow feat to ids that appear in a pair first (size-gated broadcast
-    # semi-join, webdedup.joins): the two wide shingle-blob joins then
-    # shuffle only candidate rows, not the whole corpus; above the limit the
-    # semi-join degrades to a shuffle instead of OOMing on a forced hint
-    pairs = track_persist(pairs)
-    pair_ids = (
-        pairs.select(F.col("a").alias("doc_id"))
-        .union(pairs.select(F.col("b").alias("doc_id")))
-        .distinct()
-    )
+    """Join (a, b) pairs to both sides' shingle arrays, narrowing feat to
+    the pair ids first (size-gated semi-join, webdedup.joins). The id set
+    explodes ``pairs``: no distinct is pushed through a Generate, so it
+    reuses the deduped pairs' exchange instead of re-running the joins."""
+    pair_ids = pairs.select(F.explode(F.array("a", "b")).alias("doc_id")).distinct()
     sh = semi_join_ids(
         feat.select(F.col("doc_id"), F.col("shingles"), F.col("n_shingles")),
         pair_ids,
@@ -93,14 +87,16 @@ def exact_jaccard_gate(pairs_with_shingles: DataFrame, threshold: float) -> Data
     so pairs whose sizes already rule out the threshold never reach the
     Python kernel — the analogue of the reference's precomputed dot
     products, sparseMatrix.h:60-123), then the exact Jaccard kernel and
-    the threshold cut. Input needs columns sh_a/sh_b/n_a/n_b; output
-    keeps all input columns plus ``jaccard``.
+    the threshold cut. The kernel is marked nondeterministic so the cut
+    stays above it: pushed below, the cut would call it a second time per
+    pair. Input needs columns sh_a/sh_b/n_a/n_b; output keeps all input
+    columns plus ``jaccard``.
     """
     size_bound = F.least("n_a", "n_b") / F.greatest("n_a", "n_b")
     return (
         pairs_with_shingles.where((F.col("n_a") > 0) & (F.col("n_b") > 0))
         .where(size_bound >= F.lit(threshold))
-        .withColumn("jaccard", jaccard_udf("sh_a", "sh_b"))
+        .withColumn("jaccard", jaccard_udf.asNondeterministic()("sh_a", "sh_b"))
         .where(F.col("jaccard") >= F.lit(threshold))
     )
 
