@@ -5,8 +5,6 @@ Sub-commands:
   --queries [names...]   time each headline query with the bench's own
                          .count() protocol (3 reps, per-query seconds) and
                          dump .explain("formatted") to plans/r06/.
-  --profile-dedup        WEBDEDUP_PROFILE=1 stage breakdown of the dedup
-                         pipeline at sf scale.
   --stage-lsh            isolate featurize vs candidate-join cost inside
                          q_lsh_candidate_pairs.
 
@@ -116,32 +114,6 @@ def run_queries(names=None, reps: int = 3, suffix: str | None = None):
 
     medians = {n: med([r[n] for r in all_reps]) for n in suite}
     print(json.dumps({"medians": medians, "reps": all_reps, "cpus": CPUS}))
-    spark.stop()
-
-
-def profile_dedup():
-    os.environ["WEBDEDUP_PROFILE"] = "1"
-    import __spark_entry__ as E
-    from webdedup.joins import release_persisted
-    from webdedup.pipeline import dedup
-
-    spark = _spark()
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    dedup(docs.limit(2000), E.CFG, id_col="doc_id").clusters.count()
-    spark.catalog.clearCache()
-    release_persisted()
-    for rep in range(2):
-        t0 = time.perf_counter()
-        res = dedup(
-            spark.read.parquet(f"{SF_DIR}/documents.parquet"), E.CFG, id_col="doc_id"
-        )
-        n = res.clusters.count()
-        print(
-            f"[rep {rep}] total={time.perf_counter()-t0:.2f}s clusters={n}",
-            flush=True,
-        )
-        spark.catalog.clearCache()
-        release_persisted()
     spark.stop()
 
 
@@ -307,8 +279,6 @@ if __name__ == "__main__":
         bpe_corpus(sys.argv[sys.argv.index("--bpe-corpus") + 1])
     elif "--knn-corpus" in sys.argv:
         knn_corpus(sys.argv[sys.argv.index("--knn-corpus") + 1])
-    elif "--profile-dedup" in sys.argv:
-        profile_dedup()
     elif "--stage-lsh" in sys.argv:
         stage_lsh()
     else:

@@ -7,6 +7,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from webdedup import lsh
 from webdedup.catalog import Catalog
 from webdedup.config import DedupConfig
 from webdedup.fixtures import pages_dataframe
@@ -132,9 +133,14 @@ def test_metrics_files_written(spark, tmp_root):
     assert saved["featurize"]["pages_shingled"] > 0
     assert saved["featurize"]["signatures_emitted"] > 0
     # the observed candidate count is exact: one batch into an empty store
-    # makes the stored features both the new and the whole side
+    # touches every pair, so it equals the batch candidate union
     feat = inc.work.read(spark, "features")
-    want = inc._new_touching_pairs(feat, feat, CFG).count()
+    want = (
+        lsh.candidate_pairs(feat, CFG)
+        .union(lsh.simhash_candidate_pairs(feat, CFG))
+        .distinct()
+        .count()
+    )
     assert want > 0
     assert saved["candidates"]["candidate_pairs"] == want
     assert isinstance(saved["partition_lineage"], list)

@@ -239,20 +239,49 @@ def test_near_cap_bucket_pair_budget(spark):
     )
     feat_rows = spark.createDataFrame(rows, "doc_id long, band int, band_hash long")
     # feed the bucket rows directly through the tombstone + self-join
-    ok = lsh.surviving_buckets(feat_rows, cfg)
+    keys = ["band", "band_hash"]
+    ok = lsh.drop_hot(feat_rows, keys, cfg.max_bin_size)
     assert ok.where("band_hash = 2222").count() == 0
-    l, r = ok.alias("l"), ok.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    pairs = lsh.key_pairs(ok, keys).dropDuplicates(["a", "b"])
     assert pairs.count() == under * (under - 1) // 2
+
+
+def test_touching_pairs_match_full_then_filter(spark, pages):
+    """``touching`` restricts MinHash and SimHash candidates to exactly the
+    unrestricted pairs with a side in the touching set. A planted bucket
+    of max_bin_size docs, only a quarter of them touching, stays
+    tombstoned: the census counts every row, not only the touching ones."""
+    from webdedup import lsh
+    from webdedup.signatures import featurize
+
+    pages_df, _ = pages
+    cfg = DedupConfig(max_bin_size=40)
+    docs = pages_df.select(F.xxhash64("url").alias("doc_id"), "text")
+    real = featurize(docs, cfg).select("doc_id", "bands", "simhash")
+    # one band vector and one fingerprint shared by max_bin_size docs: every
+    # band bucket and SimHash key of theirs sits exactly at the cap
+    base = -1_000_000
+    planted = spark.range(cfg.max_bin_size).select(
+        (F.lit(base) - F.col("id")).alias("doc_id"),
+        F.array_repeat(F.lit(777).cast("long"), cfg.num_bands).alias("bands"),
+        F.lit(0x5A5A5A5A).cast("long").alias("simhash"),
+    )
+    feat = real.unionByName(planted).localCheckpoint()
+    new = feat.where(F.col("doc_id") % 4 == 0).select("doc_id")
+    new_ids = {r.doc_id for r in new.collect()}
+    planted_ids = {base - i for i in range(cfg.max_bin_size)}
+    assert 0 < len(new_ids & planted_ids) < cfg.max_bin_size
+
+    for gen in (lsh.candidate_pairs, lsh.simhash_candidate_pairs):
+        full = {(r.a, r.b) for r in gen(feat, cfg).collect()}
+        want = {(a, b) for a, b in full if a in new_ids or b in new_ids}
+        rows = gen(feat, cfg, touching=new).collect()
+        got = {(r.a, r.b) for r in rows}
+        assert want, gen.__name__
+        assert len(rows) == len(got), gen.__name__  # deduped, each a < b
+        assert all(a < b for a, b in got), gen.__name__
+        assert got == want, gen.__name__
+        assert not any(a in planted_ids or b in planted_ids for a, b in got)
 
 
 def test_substring_fused_fps_path_matches_udf_path(spark, pages):

@@ -29,6 +29,7 @@ from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from webdedup import kernels as K
 from webdedup.components import connected_components
+from webdedup.lsh import drop_hot
 
 
 def _signature_udf(
@@ -367,14 +368,7 @@ class MinHashNeighbors:
         entirely at query time, matching inverseIndex.cpp:555's bucket-size
         guard with B2 tombstone semantics.
         """
-        idx = self._index
-        hot = (
-            idx.groupBy("slot", "hash")
-            .agg(F.count("*").alias("bsz"))
-            .where(F.col("bsz") >= self.max_bin_size)
-            .select("slot", "hash")
-        )
-        idx_ok = idx.join(F.broadcast(hot), ["slot", "hash"], "left_anti").select(
+        idx_ok = drop_hot(self._index, ["slot", "hash"], self.max_bin_size).select(
             F.col("id").alias("cand_id"), "slot", "hash"
         )
         q = query_feat.select(

@@ -59,7 +59,6 @@ def build_config(args) -> DedupConfig:
         max_bin_size=args.max_bin_size,
         use_simhash=not args.no_simhash,
         use_substring_pass=not args.no_substring,
-        target_partitions=args.partitions,
         shuffle_partitions=args.partitions,
     )
 

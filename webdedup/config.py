@@ -28,17 +28,11 @@ class DedupConfig:
     substring_window: int = 96            # winnowing window; guarantee: any shared
                                           # run >= window+k-1 = 159 bytes fingerprints
                                           # (whole-page embeds; ~3x sparser than k=48/w=32)
-    min_tokens: int = 1                   # drop empty docs
     broadcast_id_limit: int = 2_000_000   # max id-set size for broadcast semi-joins
                                           # (webdedup.joins); above it the join
                                           # degrades to a shuffle instead of OOMing
     # --- execution ---
     shuffle_partitions: int = 32
-    target_partitions: int = 32           # band-shuffle width hint; the candidate
-                                          # join deliberately relies on its own
-                                          # ENSURE_REQUIREMENTS shuffle (AQE can
-                                          # skew-split it; a user repartition()
-                                          # cannot be split — see lsh.candidate_pairs)
 
     @property
     def num_bands(self) -> int:

@@ -322,41 +322,18 @@ class IncrementalDedup:
     def _new_touching_pairs(
         self, feat_new: DataFrame, feat_all: DataFrame, cfg: DedupConfig
     ) -> DataFrame:
-        """LSH + SimHash candidate pairs with >= 1 new-doc side.
-
-        Join new band rows against all band rows (both orientations folded
-        into a < b), with the same hot-bucket tombstone census as the
-        batch path.
-        """
-        rows_all = lsh.explode_bands(feat_all)
-        ok_all = lsh.surviving_buckets(rows_all, cfg).select(
-            "band", "band_hash", "doc_id"
-        )
+        """LSH + SimHash candidate pairs with >= 1 new-doc side: the batch
+        candidate generators restricted by ``touching``, over tombstones
+        counted on the whole store."""
         new_ids = feat_new.select("doc_id")
-        rows_new = ok_all.join(new_ids, "doc_id", "left_semi")
-        l, r = rows_new.alias("l"), ok_all.alias("r")
-        pairs = (
-            l.join(
-                r,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.band_hash") == F.col("r.band_hash"))
-                & (F.col("l.doc_id") != F.col("r.doc_id")),
-            )
-            .select(
-                F.least("l.doc_id", "r.doc_id").alias("a"),
-                F.greatest("l.doc_id", "r.doc_id").alias("b"),
-            )
-            .dropDuplicates(["a", "b"])
-        )
+        pairs = lsh.candidate_pairs(feat_all, cfg, dedupe=False, touching=new_ids)
         if cfg.use_simhash:
-            sims = lsh.simhash_candidate_pairs(feat_all, cfg)
-            sims_new = sims.join(
-                new_ids.withColumnRenamed("doc_id", "a"), "a", "left_semi"
-            ).unionByName(
-                sims.join(new_ids.withColumnRenamed("doc_id", "b"), "b", "left_semi")
+            pairs = pairs.unionByName(
+                lsh.simhash_candidate_pairs(
+                    feat_all, cfg, dedupe=False, touching=new_ids
+                )
             )
-            pairs = pairs.unionByName(sims_new).dropDuplicates(["a", "b"])
-        return pairs
+        return pairs.dropDuplicates(["a", "b"])
 
     def clusters(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.work_root, "clusters"))

@@ -9,6 +9,9 @@ on (band, band_hash).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from webdedup.config import DedupConfig
@@ -21,54 +24,88 @@ def explode_bands(feat: DataFrame) -> DataFrame:
     )
 
 
-def bucket_sizes(bucket_rows: DataFrame) -> DataFrame:
-    """Per-(band, band_hash) member count as ONE two-phase hash aggregate.
-
-    Hot buckets (boilerplate shingles shared by ~30% of the web) cannot
-    skew a COUNT: Spark's map-side partial aggregation emits at most one
-    partial row per mapper per key, so the reducer owning a hot key merges
-    |mappers| counters, not |members| rows — the partial agg IS the salt.
-    (An explicit (band, hash, salt) pre-aggregation — this function's r1-r5
-    shape, then named ``bucket_sizes_salted`` with a ``cfg.salt_buckets``
-    fan-out knob — added a full extra exchange + AQE stage for a combine
-    the map side already performs; even under partial-agg hash-table
-    overflow the spill path still emits partial counts, never raw rows.
-    Removed in r6: one less shuffle per census at identical output, and
-    the explicit salt knob went with it.)
-    """
-    return (
-        bucket_rows.groupBy("band", "band_hash")
-        .agg(F.count("*").alias("bucket_size"))
-    )
-
-
-def surviving_buckets(bucket_rows: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Bucket rows with hot buckets killed.
+def drop_hot(rows: DataFrame, keys: list[str], max_bin_size: int) -> DataFrame:
+    """``rows`` without every bucket (rows sharing all ``keys``) that has
+    ``max_bin_size`` or more members.
 
     Reference parity: a bucket reaching max_bin_size is dropped ENTIRELY
-    (tombstone semantics, inverseIndexStorageUnorderedMap.cpp:70-81) — filter
-    on the full count, never a limit/truncate. The hot list is tiny by
-    construction ⇒ broadcast anti-join (no second shuffle of the exploded
-    band table). Size-1 buckets need no explicit prune: they produce no
-    self-join matches (the reference's prune(), :162-187, falls out free).
+    (tombstone semantics, inverseIndexStorageUnorderedMap.cpp:70-81) —
+    filter on the full count, never a limit/truncate. Size-1 buckets need
+    no explicit prune: they produce no self-join matches (the reference's
+    prune(), :162-187, falls out free).
+
+    The census is ONE two-phase hash aggregate. Hot buckets (boilerplate
+    shingles shared by ~30% of the web) cannot skew a COUNT: Spark's
+    map-side partial aggregation emits at most one partial row per mapper
+    per key, so the reducer owning a hot key merges |mappers| counters, not
+    |members| rows — the partial agg IS the salt. An explicit (key, salt)
+    pre-aggregation would add a full exchange + AQE stage for a combine the
+    map side already performs; even under partial-agg hash-table overflow
+    the spill path still emits partial counts, never raw rows. The hot list
+    is tiny by construction ⇒ broadcast anti-join, no second shuffle of
+    ``rows``.
     """
     hot = (
-        bucket_sizes(bucket_rows)
-        .where(F.col("bucket_size") >= F.lit(cfg.max_bin_size))
-        .select("band", "band_hash")
+        rows.groupBy(*keys)
+        .agg(F.count("*").alias("bucket_size"))
+        .where(F.col("bucket_size") >= F.lit(max_bin_size))
+        .select(*keys)
     )
-    return bucket_rows.join(F.broadcast(hot), ["band", "band_hash"], "left_anti")
+    return rows.join(F.broadcast(hot), keys, "left_anti")
+
+
+def key_pairs(
+    rows: DataFrame, keys: list[str], touching: DataFrame | None = None
+) -> DataFrame:
+    """One (a, b) row per bucket collision: two rows of ``rows`` with
+    different ``doc_id`` and equal ``keys``, a < b.
+
+    Every other column ``c`` of ``rows`` is carried as ``c_a`` / ``c_b``,
+    the value on doc a's / doc b's row. A pair colliding in several
+    buckets appears once per bucket; callers dedupe.
+
+    ``touching`` (a frame with a ``doc_id`` column) keeps only pairs with
+    at least one side in it: its rows join all rows, and each side's
+    values are ordered into a < b afterwards. A pair with both sides in
+    ``touching`` then also appears once per orientation. Without it, the
+    join condition ``l.doc_id < r.doc_id`` halves the output instead.
+    """
+    payload = [c for c in rows.columns if c != "doc_id" and c not in keys]
+    left = rows
+    if touching is not None:
+        left = rows.join(touching.select("doc_id"), "doc_id", "left_semi")
+    l, r = left.alias("l"), rows.alias("r")
+    lt = F.col("l.doc_id") < F.col("r.doc_id")
+
+    def ordered(c):
+        """(doc a's, doc b's) value of column ``c``."""
+        lv, rv = F.col(f"l.{c}"), F.col(f"r.{c}")
+        if touching is None:
+            return lv, rv
+        return F.when(lt, lv).otherwise(rv), F.when(lt, rv).otherwise(lv)
+
+    a, b = ordered("doc_id")
+    cols = [a.alias("a"), b.alias("b")]
+    for c in payload:
+        va, vb = ordered(c)
+        cols += [va.alias(f"{c}_a"), vb.alias(f"{c}_b")]
+    differ = lt if touching is None else F.col("l.doc_id") != F.col("r.doc_id")
+    on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys] + [differ]
+    return l.join(r, reduce(operator.and_, on)).select(*cols)
 
 
 def candidate_pairs(
-    feat: DataFrame, cfg: DedupConfig, dedupe: bool = True
+    feat: DataFrame, cfg: DedupConfig, dedupe: bool = True,
+    touching: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct (a, b) candidate doc-id pairs from MinHash LSH bands.
 
     ``dedupe=False`` skips the trailing multi-band-collision collapse for
     callers that union several candidate sources and dropDuplicates ONCE
     over the union (the pipeline) — one less exchange, identical final
-    pair set.
+    pair set. ``touching`` keeps only pairs with a side in that doc-id
+    frame (see :func:`key_pairs`); the hot-bucket census still counts
+    every row of ``feat``, so the tombstones match the unrestricted run.
 
     The equi-self-join on (band, band_hash) is the reference's collision
     lookup (inverseIndex.cpp:530-561) done set-at-a-time; a < b ordering
@@ -84,21 +121,11 @@ def candidate_pairs(
     configured width with one task reading the whole bucket; without it AQE
     splits the skewed partition ~4x (66 tasks vs 16). The
     ENSURE_REQUIREMENTS shuffle clusters by exactly the same keys, so
-    co-location is unchanged (tests/test_pipeline.py skew gate).
+    co-location is unchanged (tests/test_skew_gate.py).
     """
-    rows = explode_bands(feat)
-    ok = surviving_buckets(rows, cfg).select("band", "band_hash", "doc_id")
-    left = ok.alias("l")
-    right = ok.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-    )
+    keys = ["band", "band_hash"]
+    rows = drop_hot(explode_bands(feat), keys, cfg.max_bin_size)
+    pairs = key_pairs(rows, keys, touching)
     return pairs.dropDuplicates(["a", "b"]) if dedupe else pairs
 
 
@@ -140,13 +167,14 @@ def _simhash_key_col(t: int):
 
 
 def simhash_candidate_pairs(
-    feat: DataFrame, cfg: DedupConfig, dedupe: bool = True
+    feat: DataFrame, cfg: DedupConfig, dedupe: bool = True,
+    touching: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct (a, b) pairs with SimHash hamming distance <= threshold.
 
     Candidates from block-triple key tables (see _simhash_tables), exact
     bit_count(xor) filter JVM-side (no Python in the hot path).
-    ``dedupe=False`` as in :func:`candidate_pairs`.
+    ``dedupe`` and ``touching`` as in :func:`candidate_pairs`.
     """
     t = cfg.simhash_hamming_threshold
     keys = _simhash_key_col(t)
@@ -154,24 +182,10 @@ def simhash_candidate_pairs(
         "_k", F.explode(keys)
     ).select("doc_id", "simhash", F.col("_k.tbl").alias("tbl"), F.col("_k.key").alias("key"))
     # hot-key tombstone (degenerate fingerprints, e.g. near-empty docs)
-    hot = (
-        rows.groupBy("tbl", "key")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= F.lit(cfg.max_bin_size))
-        .select("tbl", "key")
-    )
-    rows = rows.join(F.broadcast(hot), ["tbl", "key"], "left_anti")
-    l, r = rows.alias("l"), rows.alias("r")
+    rows = drop_hot(rows, ["tbl", "key"], cfg.max_bin_size)
     out = (
-        l.join(
-            r,
-            (F.col("l.tbl") == F.col("r.tbl"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .where(
-            F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))) <= F.lit(t)
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
+        key_pairs(rows, ["tbl", "key"], touching)
+        .where(F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))) <= F.lit(t))
+        .select("a", "b")
     )
     return out.dropDuplicates(["a", "b"]) if dedupe else out

@@ -27,25 +27,9 @@ semantics as the reference's signature store (inverseIndex.cpp:442-464,
 
 from __future__ import annotations
 
-import os
-import time
-
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def _profiler():
-    """WEBDEDUP_PROFILE=1 → force-materialize each stage and print timings
-    (distorts total wall time slightly; diagnosis only)."""
-    if not os.environ.get("WEBDEDUP_PROFILE"):
-        return lambda name, df: df
-    def probe(name, df):
-        t0 = time.perf_counter()
-        n = df.count()
-        print(f"[profile] {name}: {time.perf_counter()-t0:.1f}s rows={n}", flush=True)
-        return df
-    return probe
 
 from webdedup import lsh, verify
 from webdedup.components import connected_components
@@ -157,7 +141,6 @@ def _dedup_impl(
     id_col: str | None,
 ) -> DedupResult:
     has_url = "url" in pages.columns
-    probe = _profiler()
 
     # One cheap corpus count up front (parquet footer metadata when pages is
     # a plain scan) bounds EVERY id set below — rep ids, candidate-pair ids,
@@ -201,7 +184,6 @@ def _dedup_impl(
     uniq = semi_join_ids(
         docs, rep_ids, "doc_id", cfg.broadcast_id_limit, known_max=n_docs
     ).select("doc_id", text_col)
-    probe("uniq", uniq)
 
     # ---- stage 1: featurize unique docs (Arrow-vectorized kernels)
     # The fused UDF emits the substring fingerprints alongside the LSH
@@ -222,21 +204,14 @@ def _dedup_impl(
     # semi-join → featurize UDF (a lazily persisted feat kept ~60 copies
     # of that lineage in the edge plan). The UDF boundary is crossed once,
     # by this action. The leaf's blocks belong to the run's persist scope.
-    t0 = time.perf_counter()
     feat = track_checkpoint(feat)
-    if os.environ.get("WEBDEDUP_PROFILE"):
-        print(f"[profile] featurize: {time.perf_counter()-t0:.1f}s", flush=True)
 
     # ---- stage 2: candidate pairs (MinHash LSH bands + SimHash blocks).
     # Per-branch multi-band dedupe is skipped when the union below collapses
     # everything anyway (dedupe once, not three times — two fewer exchanges)
     cand = lsh.candidate_pairs(feat, cfg, dedupe=not cfg.use_simhash)
-    probe("lsh_candidates", cand)
     if cfg.use_simhash:
-        sim = probe(
-            "simhash_candidates",
-            lsh.simhash_candidate_pairs(feat, cfg, dedupe=False),
-        )
+        sim = lsh.simhash_candidate_pairs(feat, cfg, dedupe=False)
         cand = cand.union(sim).dropDuplicates(["a", "b"])
 
     # ---- stage 3: exact Jaccard verify
@@ -244,7 +219,6 @@ def _dedup_impl(
         cand, feat, cfg.jaccard_threshold, cfg.broadcast_id_limit,
         known_max=n_docs,
     ).withColumn("kind", F.lit("near"))
-    probe("verify", near)
 
     # ---- stage 4: exact-substring pass (optional)
     if cfg.use_substring_pass:
@@ -256,7 +230,6 @@ def _dedup_impl(
             feat, cfg, text_col=text_col, known_max=n_docs,
             fps_col="substr_fps", texts_df=docs,
         ).withColumn("kind", F.lit("substring"))
-        probe("substring", sub)
         all_pairs = near.unionByName(sub).dropDuplicates(["a", "b"])
     else:
         all_pairs = near
@@ -274,14 +247,10 @@ def _dedup_impl(
     )
     edges = all_pairs.unionByName(exact_edges)
     track_persist(edges)
-    probe("edges", edges)
 
     # ---- stage 6: connected components → cluster ids
-    t0 = time.perf_counter()
     vertices = docs.select(F.col("doc_id").alias("id"))
     labels = connected_components(vertices, edges.select("a", "b"))
-    if os.environ.get("WEBDEDUP_PROFILE"):
-        print(f"[profile] cc: {time.perf_counter()-t0:.1f}s", flush=True)
 
     out_cols = [F.col("doc_id"), F.col("cluster_id")]
     if has_url:

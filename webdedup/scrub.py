@@ -263,12 +263,12 @@ def near_decontaminate(
     once) and self-joins NEVER — candidates come from a broadcast-hash
     join against the eval suite's exploded bands (eval suites are
     thousands of docs; their band and shingle tables are a few MB).
-    Corpus hot buckets are tombstoned first (lsh.surviving_buckets), so
+    Corpus hot buckets are tombstoned first (lsh.drop_hot), so
     a boilerplate band hash cannot fan the broadcast join out. The
     verify stage touches candidate rows only.
     """
     from webdedup.config import DedupConfig
-    from webdedup.lsh import explode_bands, surviving_buckets
+    from webdedup.lsh import drop_hot, explode_bands
     from webdedup.signatures import featurize
     from webdedup.verify import exact_jaccard_gate
 
@@ -285,15 +285,11 @@ def near_decontaminate(
                 F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
             ),
             cfg,
-        ).select(
-            F.col("doc_id").alias("bench_id"), "shingles", "n_shingles", "bands"
-        )
+        ).select("doc_id", "shingles", "n_shingles", "bands")
     )
-    bband = bfeat.select(
-        "bench_id", F.posexplode("bands").alias("band", "band_hash")
-    )
+    bband = explode_bands(bfeat).withColumnRenamed("doc_id", "bench_id")
     cand = (
-        surviving_buckets(explode_bands(corp), cfg)
+        drop_hot(explode_bands(corp), ["band", "band_hash"], cfg.max_bin_size)
         .join(F.broadcast(bband), ["band", "band_hash"])
         .select("doc_id", "bench_id")
         .dropDuplicates(["doc_id", "bench_id"])
@@ -308,7 +304,7 @@ def near_decontaminate(
     ).join(
         F.broadcast(
             bfeat.select(
-                "bench_id",
+                F.col("doc_id").alias("bench_id"),
                 F.col("shingles").alias("sh_b"),
                 F.col("n_shingles").alias("n_b"),
             )

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from webdedup.config import DedupConfig
 from webdedup.joins import semi_join_ids, track_checkpoint
+from webdedup.lsh import drop_hot, key_pairs
 from webdedup.signatures import make_substring_fp_udf
 
 
@@ -55,26 +56,11 @@ def substring_pairs(
         .where(F.col("n_fp") > 0)
         .select("doc_id", "n_fp", F.explode("_fps").alias("fp"))
     )
-    # kill hot fingerprints (boilerplate) — same tombstone idea as LSH
-    # buckets. The hot list is tiny ⇒ broadcast ANTI-join; joining against
-    # the non-hot list instead would shuffle the full exploded table twice.
-    hot = (
-        rows.groupBy("fp")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= cfg.max_bin_size)
-        .select("fp")
-    )
-    rows = rows.join(F.broadcast(hot), "fp", "left_anti")
-
-    l, r = rows.alias("l"), rows.alias("r")
+    # kill hot fingerprints (boilerplate) — the LSH bucket tombstone
+    rows = drop_hot(rows, ["fp"], cfg.max_bin_size)
     shared = (
-        l.join(r, (F.col("l.fp") == F.col("r.fp")) & (F.col("l.doc_id") < F.col("r.doc_id")))
-        .groupBy(
-            F.col("l.doc_id").alias("a"),
-            F.col("r.doc_id").alias("b"),
-            F.col("l.n_fp").alias("n_a"),
-            F.col("r.n_fp").alias("n_b"),
-        )
+        key_pairs(rows, ["fp"])
+        .groupBy("a", "b", F.col("n_fp_a").alias("n_a"), F.col("n_fp_b").alias("n_b"))
         .agg(F.count("*").alias("n_shared"))
         # Containment gate compatible with the winnowing guarantee: if the
         # shorter text is contained in the longer, every fingerprint selected

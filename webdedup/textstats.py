@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from webdedup.joins import track_persist
+from webdedup.lsh import drop_hot, key_pairs
 
 PPM = 1_000_000
 
@@ -70,15 +71,7 @@ def exact_dup_pairs(docs: DataFrame) -> DataFrame:
     fp = docs.select(
         "doc_id", F.md5(F.col("text").cast("binary")).alias("fingerprint")
     )
-    l, r = fp.alias("l"), fp.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.fingerprint") == F.col("r.fingerprint"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-    )
+    return key_pairs(fp, ["fingerprint"])
 
 
 def ngram_sets(docs: DataFrame, n: int = 3) -> DataFrame:
@@ -106,7 +99,7 @@ def ngram_jaccard_pairs(
     10^12 path (that's webdedup.pipeline).
 
     ``max_gram_freq`` tombstones grams shared by >= that many docs (same
-    broadcast-anti-join kill as the LSH hot buckets, lsh.py:44): a
+    broadcast-anti-join kill as the LSH hot buckets, lsh.drop_hot): a
     boilerplate gram shared by f docs otherwise emits f²/2 join rows, which
     is the first thing to die at scale. Dropping a hot gram shrinks the
     intersection AND both set sizes, so near-dup Jaccard values move by
@@ -127,27 +120,14 @@ def ngram_jaccard_pairs(
         # persist: the exploded gram rows feed the hot-count agg, the sizes
         # agg, and BOTH sides of the self-join — four gram-construction
         # passes without it
-        rows = track_persist(rows)
-        hot = (
-            rows.groupBy("gram")
-            .agg(F.count("*").alias("c"))
-            .where(F.col("c") >= F.lit(max_gram_freq))
-            .select("gram")
-        )
-        rows = rows.join(F.broadcast(hot), "gram", "left_anti")
+        rows = drop_hot(track_persist(rows), ["gram"], max_gram_freq)
         # sizes must count the SURVIVING grams so |A|,|B| stay consistent
         # with the intersection counts below
         sizes = rows.groupBy("doc_id").agg(F.count("*").alias("n"))
     else:
         sizes = g.select("doc_id", F.size("gs").alias("n"))
-    l, r = rows.alias("l"), rows.alias("r")
     inter = (
-        l.join(
-            r,
-            (F.col("l.gram") == F.col("r.gram"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
+        key_pairs(rows, ["gram"]).groupBy("a", "b")
         .agg(F.count("*").alias("n_inter"))
     )
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na"))
