@@ -1,5 +1,6 @@
 """Catalog snapshots + checkpoint-resume incremental dedup tests."""
 
+import dataclasses
 import json
 import os
 import shutil
@@ -47,12 +48,16 @@ def _split_pages(spark, n=300):
     return pages, p1, p2
 
 
-def test_incremental_matches_batch(spark, tmp_root):
+@pytest.mark.parametrize("use_substring_pass", [False, True])
+def test_incremental_matches_batch(spark, tmp_root, use_substring_pass):
+    """With the substring pass on, incremental's touching restriction of
+    the substring pairs is compared with batch too."""
+    cfg = dataclasses.replace(CFG, use_substring_pass=use_substring_pass)
     pages, p1, p2 = _split_pages(spark)
     cat = Catalog(os.path.join(tmp_root, "src"))
     cat.append("pages", p1)
 
-    inc = IncrementalDedup(spark, cat, os.path.join(tmp_root, "work"), CFG)
+    inc = IncrementalDedup(spark, cat, os.path.join(tmp_root, "work"), cfg)
     m1 = inc.process("pages")
     assert m1 is not None and m1["source_snapshot"] == 1
 
@@ -64,7 +69,7 @@ def test_incremental_matches_batch(spark, tmp_root):
     # url (incremental doc ids are keyed (url, snapshot), batch by url)
     urls = inc.work.read(spark, "docs").select("doc_id", "url")
     inc_cl = inc.clusters().join(urls, "doc_id")
-    batch = dedup(pages, CFG)
+    batch = dedup(pages, cfg)
 
     def groups(rows):
         by = {}

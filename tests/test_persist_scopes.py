@@ -1,4 +1,4 @@
-"""Per-run persist scoping + dedup()'s derived-input auto-guard +
+"""Per-run persist scoping + dedup()'s compute-once input contract +
 substr_fps config-trust gate (ADVICE r3 / VERDICT r3 ask #4)."""
 
 import os
@@ -64,9 +64,10 @@ def test_dedup_result_release_drops_only_its_caches(spark):
 
 def test_derived_input_computes_transformation_exactly_once(spark):
     """dedup()'s upfront gating count must not re-run an expensive upstream
-    transformation: a cold derived input is persisted automatically, so a
-    counting UDF in its lineage evaluates exactly n_rows times across the
-    whole pipeline run."""
+    transformation: the count fills the docs cache, the only reader of the
+    input, so a counting UDF in its lineage evaluates exactly n_rows times
+    across the whole pipeline run, and the input itself is never cached
+    (its text would sit in memory twice)."""
     from pyspark.sql.types import StringType
 
     acc = spark.sparkContext.accumulator(0)
@@ -84,6 +85,7 @@ def test_derived_input_computes_transformation_exactly_once(spark):
     res.clusters.count()
     res.pairs.count()
     assert acc.value == n, f"transformation ran {acc.value}x for {n} rows"
+    assert derived.storageLevel == StorageLevel.NONE
     res.release()
 
 

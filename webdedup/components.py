@@ -8,7 +8,7 @@ threshold over these edges IS connectivity).
 Two execution paths, chosen by a size gate on the symmetric edge count
 (the same gate philosophy as webdedup.joins.semi_join_ids):
 
-* **small edge sets** (<= WEBDEDUP_CC_COLLECT_LIMIT sym rows, default 4M
+* **small edge sets** (<= ``collect_edge_limit`` sym rows, default 4M
   ≈ 64 MB collected): one Arrow collect + a vectorized numpy hash-min /
   pointer-jumping loop on the driver. Dup edges are a tiny fraction of any
   real corpus (343k sym edges at 1M bench pages), and the distributed loop
@@ -30,7 +30,6 @@ Two execution paths, chosen by a size gate on the symmetric edge count
 
 from __future__ import annotations
 
-import os
 import threading
 
 from pyspark.sql import DataFrame, Observation, functions as F
@@ -135,12 +134,7 @@ def connected_components(
     ob = Observation()
     sym = _ckpt(sym.observe(ob, F.count(F.lit(1)).alias("n")))
     n_edges = ob.get["n"]
-    limit = (
-        collect_edge_limit
-        if collect_edge_limit is not None
-        else int(os.environ.get("WEBDEDUP_CC_COLLECT_LIMIT", 4_000_000))
-    )
-
+    limit = 4_000_000 if collect_edge_limit is None else collect_edge_limit
     if n_edges <= limit:
         ids, labels, rounds = (
             _driver_labels(sym.toPandas()) if n_edges else (None, None, 0)

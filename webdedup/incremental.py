@@ -8,10 +8,12 @@ sparseMatrix.h:187-231 — append, never reallocate):
 1. new docs → fingerprint; exact dups of *known* texts short-circuit to an
    exact edge (compute-once-per-unique-row, inverseIndex.cpp:442-464)
 2. new unique docs → featurize → appended to the features store
-3. LSH/SimHash candidates restricted to pairs touching >= 1 new doc
-   (old-old pairs were found when "old" was new)
-4. verify → edges appended; connected components re-resolved over the full
-   edge store (cheap: edges ~ O(dups), not O(corpus))
+3. the batch edge stage (``pipeline.candidates`` → ``pipeline.verified_edges``:
+   LSH/SimHash candidates, exact verify, substring pass) over store ∪ batch
+   features, restricted to pairs touching >= 1 new doc (old-old pairs were
+   found when "old" was new); hot buckets are still counted store-wide
+4. edges appended; connected components re-resolved over the full edge
+   store (cheap: edges ~ O(dups), not O(corpus))
 5. state.json advanced ONLY after outputs land; a crash mid-run leaves
    state behind and the next run rolls the work stores back to the last
    committed state before reprocessing (idempotent resume).
@@ -25,7 +27,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from webdedup import lsh, verify
 from webdedup.catalog import Catalog
 from webdedup.components import connected_components
 from webdedup.config import DedupConfig
@@ -33,8 +34,8 @@ from webdedup.joins import (
     scoped_persists, semi_join_ids, track_checkpoint, track_persist,
 )
 from webdedup.metrics import PipelineMetrics, partition_lineage
-from webdedup.signatures import featurize
-from webdedup.substring import substring_pairs
+from webdedup.pipeline import candidates, verified_edges
+from webdedup.signatures import featurize, make_substring_fp_udf
 
 DOCS = "docs"          # (doc_id, url, fingerprint, src_snapshot)
 FEATURES = "features"  # (doc_id, text, shingles, bands, simhash, n_shingles, src_snapshot)
@@ -207,62 +208,41 @@ class IncrementalDedup:
         # arrays when the pass is off, values frozen at write-time k/window —
         # so column presence alone would silently miss substring duplicates
         # against previously stored docs after a config change. On any
-        # mismatch (or a pre-meta store) the per-pass UDF recomputes
-        # fingerprints for the whole corpus under the current config.
+        # mismatch (or a pre-meta store) the stored side's fingerprints are
+        # recomputed under the current config before the checkpoint below.
         fps_cfg = {
             "substr_k": cfg.substring_k,
             "substr_window": cfg.substring_window,
             "enabled": bool(cfg.use_substring_pass),
         }
-        feat_all = feat_new
+        cols = ["doc_id", text_col, "shingles", "bands", "simhash", "n_shingles"]
+        if cfg.use_substring_pass:
+            cols.append("substr_fps")
+        feat_all = feat_new.select(*cols)
         store_has_col = True
-        fps_trusted = True
         if self.work.exists(FEATURES):
             stored = self.work.read(self.spark, FEATURES)
             store_has_col = "substr_fps" in stored.columns
             stored_cfg = self.work.meta(FEATURES).get("substr_fps_cfg")
-            fps_trusted = store_has_col and stored_cfg == fps_cfg
-            cols = ["doc_id", text_col, "shingles", "bands", "simhash",
-                    "n_shingles"]
-            if store_has_col:
-                cols.append("substr_fps")
-            feat_all = stored.select(*cols).unionByName(
-                feat_new.select(*cols)
-            )
+            if cfg.use_substring_pass and not (
+                store_has_col and stored_cfg == fps_cfg
+            ):
+                fp_udf = make_substring_fp_udf(cfg)
+                stored = stored.withColumn("substr_fps", fp_udf(F.col(text_col)))
+            feat_all = stored.select(*cols).unionByName(feat_all)
         # one eager checkpoint leaf for the band join, verify and substring
         # subtrees to share through exchange reuse (pipeline.py docstring)
         feat_all = track_checkpoint(feat_all)
 
-        cand = self._new_touching_pairs(feat_new, feat_all, cfg)
+        # the batch edge stage, restricted to pairs with a new side; the
+        # hot-bucket censuses still count the whole store
+        new_ids = feat_new.select("doc_id")
+        cand = candidates(feat_all, cfg, touching=new_ids)
         cand = mx.observe(cand, "candidates", F.count(F.lit(1)).alias("candidate_pairs"))
         track_persist(cand)  # verify reads cand twice; observe it once
-        near = verify.verified_pairs(
-            cand, feat_all, cfg.jaccard_threshold, cfg.broadcast_id_limit,
-            known_max=n_corpus,
-        ).withColumn("kind", F.lit("near"))
-        if cfg.use_substring_pass:
-            new_ids = feat_new.select("doc_id")
-            if fps_trusted:
-                sub = substring_pairs(
-                    feat_all.select("doc_id", text_col, "substr_fps"), cfg,
-                    text_col=text_col, known_max=n_corpus,
-                    fps_col="substr_fps",
-                )
-            else:
-                sub = substring_pairs(
-                    feat_all.select("doc_id", text_col), cfg,
-                    text_col=text_col, known_max=n_corpus,
-                )
-            sub = (
-                sub.join(new_ids.withColumnRenamed("doc_id", "a"), "a", "left_semi")
-                .unionByName(
-                    sub.join(new_ids.withColumnRenamed("doc_id", "b"), "b", "left_semi")
-                )
-                .dropDuplicates(["a", "b"])
-                .withColumn("kind", F.lit("substring"))
-            )
-            near = near.unionByName(sub).dropDuplicates(["a", "b"])
-        edges_new = near.unionByName(exact_edges)
+        edges_new = verified_edges(
+            cand, feat_all, cfg, n_corpus, text_col, touching=new_ids
+        ).unionByName(exact_edges)
         edges_new = mx.observe(
             edges_new, "verified", F.count(F.lit(1)).alias("verified_dups")
         )
@@ -318,22 +298,6 @@ class IncrementalDedup:
         self._commit_state(st)
 
         return metrics
-
-    def _new_touching_pairs(
-        self, feat_new: DataFrame, feat_all: DataFrame, cfg: DedupConfig
-    ) -> DataFrame:
-        """LSH + SimHash candidate pairs with >= 1 new-doc side: the batch
-        candidate generators restricted by ``touching``, over tombstones
-        counted on the whole store."""
-        new_ids = feat_new.select("doc_id")
-        pairs = lsh.candidate_pairs(feat_all, cfg, dedupe=False, touching=new_ids)
-        if cfg.use_simhash:
-            pairs = pairs.unionByName(
-                lsh.simhash_candidate_pairs(
-                    feat_all, cfg, dedupe=False, touching=new_ids
-                )
-            )
-        return pairs.dropDuplicates(["a", "b"])
 
     def clusters(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.work_root, "clusters"))

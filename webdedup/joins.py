@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 #: guards every _LIVE_SCOPES mutation: a streaming micro-batch thread can
@@ -38,23 +39,10 @@ from pyspark.sql import DataFrame, functions as F
 _SCOPES_LOCK = threading.Lock()
 
 
-def persist_level():
-    """Storage level for every cache and local checkpoint a run takes:
-    the ``pyspark.StorageLevel`` named by ``WEBDEDUP_PERSIST_LEVEL`` (e.g.
-    MEMORY_AND_DISK, measured in BASELINE.md round 4), else the DataFrame
-    default MEMORY_AND_DISK_DESER (also Spark's localCheckpoint default).
-    """
-    from pyspark import StorageLevel
-
-    level = os.environ.get("WEBDEDUP_PERSIST_LEVEL")
-    if not level:
-        return StorageLevel.MEMORY_AND_DISK_DESER
-    if not isinstance(getattr(StorageLevel, level, None), StorageLevel):
-        raise ValueError(
-            f"invalid WEBDEDUP_PERSIST_LEVEL={level!r}; expected a "
-            "pyspark.StorageLevel name like MEMORY_AND_DISK"
-        )
-    return getattr(StorageLevel, level)
+#: storage level for every cache and local checkpoint a run takes: the
+#: DataFrame default (also Spark's localCheckpoint default). The serialized
+#: MEMORY_AND_DISK measured slower at 8 cores (BASELINE.md round 4).
+PERSIST_LEVEL = StorageLevel.MEMORY_AND_DISK_DESER
 
 
 def checkpointer(spark, checkpoint_dir: str | None = None):
@@ -62,7 +50,7 @@ def checkpointer(spark, checkpoint_dir: str | None = None):
     ``LogicalRDD`` leaf: every plan built on the result reads the stored
     rows instead of re-planning (and re-running) the upstream DAG.
 
-    localCheckpoint at :func:`persist_level` is the fast default. Its
+    localCheckpoint at :data:`PERSIST_LEVEL` is the fast default. Its
     blocks live on executors, so an executor loss fails the job; on
     clusters with executor churn pass ``checkpoint_dir`` (an HDFS /
     object-store directory) for RELIABLE checkpoints instead. The env
@@ -75,8 +63,7 @@ def checkpointer(spark, checkpoint_dir: str | None = None):
     if checkpoint_dir:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
         return lambda df: df.checkpoint(eager=True)
-    level = persist_level()
-    return lambda df: df.localCheckpoint(eager=True, storageLevel=level)
+    return lambda df: df.localCheckpoint(eager=True, storageLevel=PERSIST_LEVEL)
 
 
 def _checkpoint_rdd(df: DataFrame):
@@ -142,7 +129,7 @@ class PersistScope:
             _LIVE_SCOPES.append(self)
 
     def add(self, df: DataFrame) -> DataFrame:
-        df.persist(persist_level())
+        df.persist(PERSIST_LEVEL)
         self._frames.append(df)
         # a scope can be bulk-released (release_persisted on another
         # thread) while still active on this thread's stack; the moment it

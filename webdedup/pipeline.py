@@ -70,36 +70,6 @@ class DedupResult:
         return self.scope.release() if self.scope is not None else 0
 
 
-#: optimized-plan markers whose recompute is expensive — a cold input frame
-#: containing any of these is persisted before the upfront gating count so
-#: the transformation runs exactly once (a plain parquet scan, possibly with
-#: pushed filters/projections, matches none of them and stays uncached: the
-#: docs cache right below would otherwise double-cache the text bytes)
-_EXPENSIVE_PLAN_NODES = (
-    "Join", "Aggregate", "Generate", "Window", "Sort",
-    "EvalPython", "InPandas", "MapPartitions", "MapElements", "Union",
-)
-
-
-def _recompute_is_expensive(df: DataFrame) -> bool:
-    # Inspect NODE CLASS NAMES from the logical plan's JSON, not the
-    # pretty-printed tree: the toString() form embeds column names and
-    # file paths, so a corpus with a 'JoinDate' column or a
-    # '/data/UnionSquare/' path would false-positive on substring
-    # matching and double-cache a plain scan.
-    import re
-
-    try:
-        plan_json = df._jdf.queryExecution().optimizedPlan().toJSON()
-    except Exception:
-        return True  # can't inspect — persist defensively
-    classes = re.findall(r'"class"\s*:\s*"([^"]+)"', plan_json)
-    node_names = {c.rsplit(".", 1)[-1] for c in classes}
-    return any(
-        tok in name for name in node_names for tok in _EXPENSIVE_PLAN_NODES
-    )
-
-
 def dedup(
     pages: DataFrame,
     cfg: DedupConfig | None = None,
@@ -114,11 +84,11 @@ def dedup(
     the returned DataFrames lazily via the counters dict of callables
     materialized by ``collect_counters``.
 
-    ``pages`` is counted once up front to bound the broadcast-gating id
-    sets (metadata-only for a plain file scan). A cold DERIVED frame —
-    one whose optimized plan contains joins/aggregates/UDF stages — is
-    persisted automatically first, so the transformation computes exactly
-    once instead of once for the count and again per downstream stage.
+    The run's narrow ``docs`` projection of ``pages`` (url?, doc_id, text,
+    fingerprint) is cached and counted once up front; the count bounds the
+    broadcast-gating id sets. ``docs`` is the only frame that reads
+    ``pages``, so a derived input's transformation computes exactly once
+    and its text is cached once; ``pages`` itself is never persisted.
     The featurize stage runs inside this call as one eager checkpoint
     action, and so does the CC stage (it materializes the edge set);
     ``clusters`` and the counters stay lazy.
@@ -142,19 +112,6 @@ def _dedup_impl(
 ) -> DedupResult:
     has_url = "url" in pages.columns
 
-    # One cheap corpus count up front (parquet footer metadata when pages is
-    # a plain scan) bounds EVERY id set below — rep ids, candidate-pair ids,
-    # substring-pair ids are all sets of doc ids, so |set| <= n_docs. This
-    # replaces three blocking persist().count() gating actions per run
-    # (VERDICT r2: their fixed job-barrier latency dominated the toy bench
-    # and the parallelism-independent scaling floor). Above the broadcast
-    # limit the bound stops helping and the per-call gate re-engages.
-    from pyspark import StorageLevel
-
-    if pages.storageLevel == StorageLevel.NONE and _recompute_is_expensive(pages):
-        track_persist(pages)
-    n_docs = pages.count()
-
     # ---- stage 0: ids + exact-duplicate collapse (compute once per unique text)
     if id_col is not None:
         docs = pages.select(
@@ -170,6 +127,14 @@ def _dedup_impl(
         )
     docs = docs.withColumn("fingerprint", F.md5(F.col(text_col).cast("binary")))
     track_persist(docs)
+    # One corpus count up front, filling the docs cache, bounds EVERY id set
+    # below — rep ids, candidate-pair ids, substring-pair ids are all sets of
+    # doc ids, so |set| <= n_docs. This replaces three blocking
+    # persist().count() gating actions per run (VERDICT r2: their fixed
+    # job-barrier latency dominated the toy bench and the
+    # parallelism-independent scaling floor). Above the broadcast limit the
+    # bound stops helping and the per-call gate re-engages.
+    n_docs = docs.count()
     # Narrow-column exact-dup collapse: the groupBy and every join below
     # move only (fingerprint, doc_id) — the wide text column never shuffles.
     # uniq is carved out of the cached docs scan with a size-gated semi-join
@@ -206,33 +171,14 @@ def _dedup_impl(
     # by this action. The leaf's blocks belong to the run's persist scope.
     feat = track_checkpoint(feat)
 
-    # ---- stage 2: candidate pairs (MinHash LSH bands + SimHash blocks).
-    # Per-branch multi-band dedupe is skipped when the union below collapses
-    # everything anyway (dedupe once, not three times — two fewer exchanges)
-    cand = lsh.candidate_pairs(feat, cfg, dedupe=not cfg.use_simhash)
-    if cfg.use_simhash:
-        sim = lsh.simhash_candidate_pairs(feat, cfg, dedupe=False)
-        cand = cand.union(sim).dropDuplicates(["a", "b"])
-
-    # ---- stage 3: exact Jaccard verify
-    near = verify.verified_pairs(
-        cand, feat, cfg.jaccard_threshold, cfg.broadcast_id_limit,
-        known_max=n_docs,
-    ).withColumn("kind", F.lit("near"))
-
-    # ---- stage 4: exact-substring pass (optional)
-    if cfg.use_substring_pass:
-        # texts come straight off the cached docs scan: candidate pair ids
-        # are rep ids by construction, so the (wider) docs table joins
-        # identically to uniq — and skips re-deriving the uniq semi-join
-        # once per text side (two broadcast joins per dedup run)
-        sub = substring_pairs(
-            feat, cfg, text_col=text_col, known_max=n_docs,
-            fps_col="substr_fps", texts_df=docs,
-        ).withColumn("kind", F.lit("substring"))
-        all_pairs = near.unionByName(sub).dropDuplicates(["a", "b"])
-    else:
-        all_pairs = near
+    # ---- stages 2-4: candidates → exact Jaccard verify → [substring pass].
+    # Texts for the substring verify come straight off the cached docs
+    # scan: candidate pair ids are rep ids by construction, so the (wider)
+    # docs table joins identically to uniq — and skips re-deriving the uniq
+    # semi-join once per text side (two broadcast joins per dedup run)
+    all_pairs = verified_edges(
+        candidates(feat, cfg), feat, cfg, n_docs, text_col, texts_df=docs
+    )
 
     # ---- stage 5: fan exact duplicates back in as edges to their representative
     exact_edges = (
@@ -274,6 +220,70 @@ def _dedup_impl(
         or 0,
     }
     return DedupResult(clusters=clusters, pairs=edges, counters=counters)
+
+
+def candidates(
+    feat: DataFrame, cfg: DedupConfig, touching: DataFrame | None = None
+) -> DataFrame:
+    """(a, b) candidate pairs: MinHash LSH bands ∪ SimHash blocks, deduped
+    once. ``touching`` keeps only pairs with a side in that doc-id frame
+    (see :func:`webdedup.lsh.key_pairs`); the hot-bucket censuses still
+    count every row of ``feat``."""
+    # Per-branch multi-band dedupe is skipped when the union below collapses
+    # everything anyway (dedupe once, not three times — two fewer exchanges)
+    cand = lsh.candidate_pairs(
+        feat, cfg, dedupe=not cfg.use_simhash, touching=touching
+    )
+    if cfg.use_simhash:
+        sim = lsh.simhash_candidate_pairs(
+            feat, cfg, dedupe=False, touching=touching
+        )
+        cand = cand.union(sim).dropDuplicates(["a", "b"])
+    return cand
+
+
+def verified_edges(
+    cand: DataFrame,
+    feat: DataFrame,
+    cfg: DedupConfig,
+    known_max: int,
+    text_col: str,
+    texts_df: DataFrame | None = None,
+    touching: DataFrame | None = None,
+) -> DataFrame:
+    """(a, b, jaccard, kind) edges: ``cand`` pairs passing the exact
+    Jaccard gate (kind "near"), plus, with ``cfg.use_substring_pass``, the
+    substring pairs over ``feat``'s ``substr_fps`` (kind "substring"),
+    deduped on (a, b). ``known_max`` bounds every id set (see
+    :func:`webdedup.joins.semi_join_ids`); ``texts_df`` supplies the
+    (doc_id, text) side of the substring verify when ``feat`` has no text.
+
+    ``touching`` keeps only substring pairs with a side in that doc-id
+    frame. It filters the finished pairs rather than the fingerprint
+    self-join: restricted there, a pair with both sides in ``touching``
+    would be emitted once per orientation and double its shared
+    fingerprint count in the containment gate.
+    """
+    near = verify.verified_pairs(
+        cand, feat, cfg.jaccard_threshold, cfg.broadcast_id_limit,
+        known_max=known_max,
+    ).withColumn("kind", F.lit("near"))
+    if not cfg.use_substring_pass:
+        return near
+    sub = substring_pairs(
+        feat, cfg, text_col=text_col, known_max=known_max,
+        fps_col="substr_fps", texts_df=texts_df,
+    )
+    if touching is not None:
+        sub = (
+            sub.join(touching.withColumnRenamed("doc_id", "a"), "a", "left_semi")
+            .unionByName(
+                sub.join(touching.withColumnRenamed("doc_id", "b"), "b", "left_semi")
+            )
+            .dropDuplicates(["a", "b"])
+        )
+    sub = sub.withColumn("kind", F.lit("substring"))
+    return near.unionByName(sub).dropDuplicates(["a", "b"])
 
 
 def collect_counters(result: DedupResult) -> dict:

@@ -60,10 +60,7 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("WEBDEDUP_ARROW_BATCH", "4096"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("WEBDEDUP_DRIVER_MEM", "8g"))
