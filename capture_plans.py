@@ -1,30 +1,42 @@
 #!/usr/bin/env python
-"""Capture the plans of dedup()'s edge frame (``DedupResult.pairs``).
+"""Capture the plans of dedup()'s edge frame (``DedupResult.pairs``) or of
+the benchmark's ``MinHashNeighbors.kneighbors()`` self-query.
 
-Usage: python capture_plans.py <round> <pages parquet dir> <suffix>
+Usage: python capture_plans.py <round> <pages parquet dir> <suffix> [dedup|kneighbors]
 
   <round>              plan directory name, e.g. r08 -> plans/r08/
-  <pages parquet dir>  e.g. the benchmark's seeded 2,000-page input,
-                       .perfbench/inputs/n2000-s1/pages after one
-                       ``perfbench/run.py --workload dedup_2k --seed 1`` run
+  <pages parquet dir>  a seeded benchmark input, e.g.
+                       .perfbench/inputs/n2000-s1/pages (dedup, after one
+                       ``perfbench/run.py --workload dedup_2k --seed 1`` run)
+                       or .perfbench/inputs/n5000-s1/pages (kneighbors, after
+                       ``--workload kneighbors_5k --seed 1``)
   <suffix>             'before' (run as ``python -P`` with PYTHONPATH pointing
                        at a checkout of the previous commit; -P keeps this
                        script's directory off sys.path) or 'after' (this
                        tree)
+  dedup|kneighbors     target, default dedup
 
-Two files land in plans/<round>/ next to this script, whichever tree ran:
-dedup_edges_analyzed_<suffix>.txt (the analyzed plan) and
+The files land in plans/<round>/ next to this script, whichever tree ran.
+dedup: dedup_edges_analyzed_<suffix>.txt (the analyzed plan) and
 dedup_edges_final_<suffix>.txt (the final adaptive plan of the edge cache,
-read after the edge frame is materialized; nested cache fills included),
-with input file locations shown as ``file:<pages>``.
-The script prints the plan-shape counts tests/test_pipeline.py asserts.
+read after the edge frame is materialized; nested cache fills included).
+kneighbors: kneighbors_final_<suffix>.txt, the final adaptive plan of the
+collected edge frame of the ``kneighbors_5k`` call (k=3, 32 hashes,
+max_bin_size=50, fast=False, jaccard) over the pages' token-id sets.
+Input file locations are shown as ``file:<pages>``. The script prints the
+plan-shape counts tests/test_pipeline.py asserts (dedup), or the cache and
+checkpoint scans and query stages of the final plan (kneighbors).
 """
 
 import os
 import re
 import sys
 
+from pyspark.sql import functions as F
+
+from webdedup.api import MinHashNeighbors
 from webdedup.config import DedupConfig
+from webdedup.joins import release_persisted
 from webdedup.pipeline import dedup
 from webdedup.session import get_spark
 
@@ -90,28 +102,64 @@ def plan_shape(plan: str) -> dict:
     }
 
 
-if __name__ == "__main__":
-    ROUND, PAGES, SUFFIX = sys.argv[1], sys.argv[2], sys.argv[3]
-    plan_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "plans", ROUND
-    )
-    spark = get_spark(f"plans-{SUFFIX}", cores=4, shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    pages = spark.read.parquet(PAGES).select("url", "warc_ts", "text", "lang")
+def capture_dedup(spark, pages_path: str) -> dict:
+    """Plans of a materialized ``DedupResult.pairs``, by file stem."""
+    pages = spark.read.parquet(pages_path).select("url", "warc_ts", "text", "lang")
     res = dedup(pages, DedupConfig())
     analyzed = res.pairs._jdf.queryExecution().analyzed().toString()
     res.pairs.count()
     final = edge_cache_plan(res.pairs)
-    os.makedirs(plan_dir, exist_ok=True)
-    for kind, plan in (("analyzed", analyzed), ("final", final)):
-        with open(os.path.join(plan_dir, f"dedup_edges_{kind}_{SUFFIX}.txt"), "w") as f:
-            f.write(re.sub(r"file:[^\],\s]*", "file:<pages>", plan))
     shape = plan_shape(final)
     print(
-        f"{SUFFIX}: final plan {len(final.splitlines())} lines "
+        f"final plan {len(final.splitlines())} lines "
         f"({len(final_sections(final).splitlines())} in final sections), "
         + ", ".join(f"{k} {v}" for k, v in shape.items()),
         flush=True,
     )
     res.release()
+    return {"dedup_edges_analyzed": analyzed, "dedup_edges_final": final}
+
+
+def capture_kneighbors(spark, pages_path: str) -> dict:
+    """Final plan of the collected ``kneighbors_5k`` edge frame."""
+    feats = spark.read.parquet(pages_path).select(
+        F.col("pid").alias("id"),
+        F.array_distinct(F.transform(F.split("text", " "), F.crc32)).alias("features"),
+    )
+    nn = MinHashNeighbors(
+        n_neighbors=3, number_of_hash_functions=32, max_bin_size=50,
+        fast=False, metric="jaccard",
+    ).fit(feats)
+    edges = nn.kneighbors()
+    edges.collect()
+    final = edges._jdf.queryExecution().executedPlan().toString()
+    body = final_sections(final)
+    stages = len(re.findall(r"QueryStage \d+", body))
+    print(
+        f"final plan {len(final.splitlines())} lines "
+        f"({len(body.splitlines())} in final sections), "
+        f"cache scans {body.count('InMemoryRelation [')}, "
+        f"checkpoint scans {body.count('Scan ExistingRDD')}, "
+        f"query_stages {stages}",
+        flush=True,
+    )
+    return {"kneighbors_final": final}
+
+
+if __name__ == "__main__":
+    ROUND, PAGES, SUFFIX = sys.argv[1:4]
+    target = sys.argv[4] if len(sys.argv) > 4 else "dedup"
+    capture = {"dedup": capture_dedup, "kneighbors": capture_kneighbors}[target]
+    plan_dir = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "plans", ROUND
+    )
+    spark = get_spark(f"plans-{SUFFIX}", cores=4, shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    print(f"{SUFFIX}: ", end="")
+    plans = capture(spark, PAGES)
+    os.makedirs(plan_dir, exist_ok=True)
+    for stem, plan in plans.items():
+        with open(os.path.join(plan_dir, f"{stem}_{SUFFIX}.txt"), "w") as f:
+            f.write(re.sub(r"file:[^\],\s]*", "file:<pages>", plan))
+    release_persisted()
     spark.stop()

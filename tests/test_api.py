@@ -83,6 +83,27 @@ def test_kneighbors_distances_exact_when_slow_path(spark, data):
         assert r["distance"] == pytest.approx(want, abs=1e-9)
 
 
+def test_kneighbors_without_expansion_is_round_one_top_k(spark, data):
+    """neighbor_of_neighbor=False: round 1's exact top k, ranked by
+    rank() over (distance asc, cand_id asc) within each query."""
+    df, _, rows, _ = data
+    k = 3
+    nn = MinHashNeighbors(
+        n_neighbors=k, number_of_hash_functions=64, max_bin_size=10_000
+    ).fit(df)
+    by_q: dict = {}
+    for r in nn.kneighbors(neighbor_of_neighbor=False).collect():
+        q, c = r["query_id"], r["cand_id"]
+        assert q != c and r["rnk"] <= k
+        want = 1.0 - K.jaccard_sorted(rows[q], rows[c])
+        assert r["distance"] == pytest.approx(want, abs=1e-9)
+        by_q.setdefault(q, []).append(r)
+    assert len(by_q) == len(rows)
+    for rs in by_q.values():
+        ranked = sorted(rs, key=lambda r: (r["distance"], r["cand_id"]))
+        assert [r["rnk"] for r in ranked] == list(range(1, len(rs) + 1))
+
+
 def test_fast_path_distance_transform(spark, data):
     """fast=True distances must be 1 - collisions/sig_len in [0, 1]."""
     df, _, _, _ = data

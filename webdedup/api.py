@@ -29,6 +29,7 @@ from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from webdedup import kernels as K
 from webdedup.components import connected_components
+from webdedup.joins import track_checkpoint, track_persist, track_release
 from webdedup.lsh import drop_hot
 
 
@@ -146,6 +147,25 @@ def _metric_udf(metric: str):
     return met
 
 
+def _graph(edges: DataFrame, mode: str, symmetric: bool) -> DataFrame:
+    """O3/O4: (query_id, cand_id, distance) edges → (src, dst, weight);
+    symmetric=True averages the two directed weights ((w_ij+w_ji)/2,
+    parsePythonToCpp.h:206-221); mode='connectivity' sets weight 1.0."""
+    e = edges.select(
+        F.col("query_id").alias("src"), F.col("cand_id").alias("dst"), "distance"
+    )
+    if symmetric:
+        e = (
+            e.unionByName(
+                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "distance")
+            )
+            .groupBy("src", "dst")
+            .agg(F.avg("distance").alias("distance"))
+        )
+    weight = F.lit(1.0) if mode == "connectivity" else F.col("distance")
+    return e.select("src", "dst", weight.alias("weight"))
+
+
 class MinHashNeighbors:
     """Approximate nearest neighbors over sparse feature-id sets.
 
@@ -211,6 +231,7 @@ class MinHashNeighbors:
         self._index: DataFrame | None = None   # (id, slot, hash) bucket rows
         self._fitted: DataFrame | None = None  # (id, features[, values], bands)
         self._labels: DataFrame | None = None
+        self._released = False  # the scope owning the fitted leaf was released
         self._has_values = False
         self._sig_len = (
             number_of_hash_functions // shingle_size if shingle else number_of_hash_functions
@@ -253,27 +274,54 @@ class MinHashNeighbors:
             idx = idx.where(F.col("hash").bitwiseAND(F.lit(mask)) == F.lit(mask))
         return idx
 
+    def _set_fitted(self, feat: DataFrame) -> None:
+        """Make ``feat`` the fitted data: one eager checkpoint leaf owned by
+        the caller's persist scope, with the index rebuilt over it.
+        Releasing that scope un-fits the model unless a later leaf replaced
+        this one."""
+        leaf = track_checkpoint(feat)
+        self._fitted, self._released = leaf, False
+        self._index = self._build_index(leaf)
+
+        def unfit():
+            if self._fitted is leaf:
+                self._fitted = self._index = None
+                self._released = True
+
+        track_release(unfit)
+
+    def _check_fitted(self) -> None:
+        if self._released:
+            raise RuntimeError(
+                "the fitted data was released with the persist scope that owned "
+                "it (scope.release() / release_persisted()); fit again"
+            )
+        if self._fitted is None:
+            raise RuntimeError("fit first")
+
     def fit(self, X: DataFrame, y: DataFrame | None = None) -> "MinHashNeighbors":
         """X: (id long, features array<long>[, values array<double>]);
         y: optional (id, label). ``values`` is the reference CSR ``data``
         array aligned with ``features`` — read by WTA signatures and the
-        euclidean/cosine exact refinement; MinHash ignores it."""
+        euclidean/cosine exact refinement; MinHash ignores it.
+
+        Runs the featurize job now; its output is an eager checkpoint leaf
+        in the caller's persist scope, and releasing that scope un-fits the
+        model. In a loop use one ``scoped_persists()`` per fit and its
+        queries, released once their results are materialized."""
         self._has_values = "values" in X.columns
-        feat = self._featurize(X)
-        feat.persist()
-        self._fitted = feat
-        self._index = self._build_index(feat)
+        self._set_fitted(self._featurize(X))
         self._labels = y
         return self
 
     def partial_fit(self, X: DataFrame, y: DataFrame | None = None) -> "MinHashNeighbors":
         """Append new rows to the fitted index (reference S2) — a union, no
-        reallocation (append-only snapshots at scale, SURVEY.md §1.2)."""
-        if self._fitted is None:
+        reallocation (append-only snapshots at scale, SURVEY.md §1.2),
+        checkpointed as the new fitted leaf."""
+        if self._fitted is None and not self._released:
             return self.fit(X, y)
-        feat = self._featurize(X)
-        self._fitted = self._fitted.unionByName(feat)
-        self._index = self._build_index(self._fitted)
+        self._check_fitted()
+        self._set_fitted(self._fitted.unionByName(self._featurize(X)))
         if y is not None and self._labels is not None:
             self._labels = self._labels.unionByName(y)
         return self
@@ -323,8 +371,7 @@ class MinHashNeighbors:
         import json
         import os
 
-        if self._fitted is None:
-            raise RuntimeError("fit first")
+        self._check_fitted()
         self._fitted.write.mode("overwrite").parquet(os.path.join(path, "fitted"))
         if self._labels is not None:
             self._labels.write.mode("overwrite").parquet(os.path.join(path, "labels"))
@@ -350,10 +397,8 @@ class MinHashNeighbors:
         lsb = cfg.pop("lsb_bits")
         obj = cls(**cfg, store_value_with_least_sigificant_bit=lsb)
         feat = spark.read.parquet(os.path.join(path, "fitted"))
-        feat.persist()
-        obj._fitted = feat
         obj._has_values = "values" in feat.columns
-        obj._index = obj._build_index(feat)
+        obj._set_fitted(feat)
         lab = os.path.join(path, "labels")
         if os.path.exists(lab):
             obj._labels = spark.read.parquet(lab)
@@ -460,13 +505,9 @@ class MinHashNeighbors:
         Metric per ``_resolved_metric`` — squared euclidean / cosine over
         (feature, value) rows exactly like the reference's refinement
         (nearestNeighbors.cpp:150-190 → sparseMatrix.h:231-316), or Jaccard
-        for the presence-only dedup default.
-
-        The reference's Q8 neighbor-of-neighbor expansion is demand-driven
-        memoization; set-at-a-time the full candidate edge table already
-        covers each query's round-1 neighborhood, and a 2-hop expansion is
-        available via ``expand_two_hop`` (kept out of the default path: for
-        Jaccard dedup it changes results only below the radius of interest).
+        for the presence-only dedup default. ``kneighbors`` runs it twice on
+        the default path: over the LSH candidates (round 1) and over round 1
+        plus its neighbor-of-neighbor pairs (Q8 + round 2).
         """
         w = self._rank_order(self._resolved_metric())
         return (
@@ -495,78 +536,59 @@ class MinHashNeighbors:
         (Q9, :326-382). Disable the expansion with
         ``neighbor_of_neighbor=False``.
 
-        fast=False persists the round-1 edge table into the CALLER's
-        persist scope (it feeds three downstream subtrees); a loop issuing
-        many kneighbors calls outside any ``scoped_persists`` block should
-        release between materialized results (``release_persisted()``, or
-        wrap each call in its own scope) or the default scope accumulates
-        one cached edge table per call.
+        fast=False with the expansion caches the round-1 edge table in the
+        CALLER's persist scope. In a loop use one ``scoped_persists()`` per
+        call, released once the result is materialized (a release also
+        un-fits a model fitted inside that scope).
         """
-        if self._fitted is None:
-            raise RuntimeError("fit first")
+        self._check_fitted()
         k = n_neighbors or self.n_neighbors
         self_query = X is None
         qf = self._fitted if self_query else self._featurize(X)
         approx = self._approx_neighbors(qf, k, cut=self_query)
         if self.fast:
-            w = Window.partitionBy("query_id").orderBy(
-                F.desc("collisions"), F.asc("cand_id")
-            )
-            return (
-                approx.withColumn("rnk", F.rank().over(w))
-                .where(F.col("rnk") <= k)
-                .select("query_id", "cand_id", "distance", "rnk")
+            # _approx_neighbors already ranks by (collisions desc, cand_id)
+            return approx.where(F.col("rnk") <= k).select(
+                "query_id", "cand_id", "distance", "rnk"
             )
         # limit_neighbors_of_neighbors = min(100, n + excess) — note PLUS,
         # not times (nearestNeighbors.cpp:86-89)
         limit = min(100, k + self.excess_factor)
         round1 = self._exact_rerank(approx, qf, limit)
-        if neighbor_of_neighbor:
-            from webdedup.joins import track_persist
-
-            # round1 feeds BOTH sides of the 2-hop join AND the candidate
-            # union below — without a cache the whole round-1 subtree
-            # (collision join + exact-metric UDF) executes three times
-            # (measured 26.6 s → 15.1 s at the 200k bench corpus).
-            # Registered with the caller's persist scope; released by
-            # release_persisted() / the owning run's scope.release().
-            round1 = track_persist(round1)
-            if self_query:
-                base = round1
-            else:
-                base = self._exact_rerank(
-                    self._approx_neighbors(self._fitted, limit, cut=True),
-                    self._fitted,
-                    limit,
-                )
-            hop2 = (
-                round1.select("query_id", F.col("cand_id").alias("_mid"))
-                .join(
-                    base.select(
-                        F.col("query_id").alias("_mid"), F.col("cand_id")
-                    ),
-                    "_mid",
-                )
-                .select("query_id", "cand_id")
-            )
-            cand2 = (
-                round1.select("query_id", "cand_id")
-                .unionByName(hop2)
-                .dropDuplicates(["query_id", "cand_id"])
-            )
-            if self_query:
-                # 2-hop reintroduces A→B→A self-pairs; drop BEFORE the top-k
-                # rank so self never consumes a neighbor slot
-                cand2 = cand2.where(F.col("query_id") != F.col("cand_id"))
-            out = self._exact_rerank(cand2, qf, k)
+        if not neighbor_of_neighbor:
+            return round1.where(F.col("rnk") <= k)
+        # round1 feeds BOTH sides of the 2-hop join AND the candidate union
+        # below — without a cache the whole round-1 subtree (collision join
+        # + exact-metric UDF) executes three times (measured 26.6 s → 15.1 s
+        # at the 200k bench corpus). A checkpoint leaf here ran the same jobs
+        # with +2.4 % shuffle (kneighbors_5k seed 1), so it stays a cache.
+        round1 = track_persist(round1)
+        if self_query:
+            base = round1
         else:
-            w2 = self._rank_order(self._resolved_metric())
-            out = (
-                round1.withColumn("rnk", F.rank().over(w2))
-                .where(F.col("rnk") <= k)
-                .select("query_id", "cand_id", "distance", "rnk")
+            base = self._exact_rerank(
+                self._approx_neighbors(self._fitted, limit, cut=True),
+                self._fitted,
+                limit,
             )
-        return out if not self_query else out.where(F.col("query_id") != F.col("cand_id"))
+        hop2 = (
+            round1.select("query_id", F.col("cand_id").alias("_mid"))
+            .join(
+                base.select(F.col("query_id").alias("_mid"), F.col("cand_id")),
+                "_mid",
+            )
+            .select("query_id", "cand_id")
+        )
+        cand2 = (
+            round1.select("query_id", "cand_id")
+            .unionByName(hop2)
+            .dropDuplicates(["query_id", "cand_id"])
+        )
+        if self_query:
+            # 2-hop reintroduces A→B→A self-pairs; drop BEFORE the top-k
+            # rank so self never consumes a neighbor slot
+            cand2 = cand2.where(F.col("query_id") != F.col("cand_id"))
+        return self._exact_rerank(cand2, qf, k)
 
     def radius_neighbors(self, X: DataFrame | None = None, radius: float | None = None) -> DataFrame:
         """Q5: all neighbors within a distance radius (no k cut).
@@ -579,8 +601,7 @@ class MinHashNeighbors:
         meaningful similarity radius; a floor is the semantics its callers
         would want.
         """
-        if self._fitted is None:
-            raise RuntimeError("fit first")
+        self._check_fitted()
         r = radius if radius is not None else self.radius
         self_query = X is None
         qf = self._fitted if self_query else self._featurize(X)
@@ -606,45 +627,15 @@ class MinHashNeighbors:
         mode: str = "distance",
         symmetric: bool = True,
     ) -> DataFrame:
-        """O3: (src, dst, weight) edge list; symmetric=True averages the two
-        directed weights ((w_ij+w_ji)/2, parsePythonToCpp.h:206-221);
-        mode='connectivity' sets weight 1.0."""
-        e = self.kneighbors(X, n_neighbors).select(
-            F.col("query_id").alias("src"), F.col("cand_id").alias("dst"), "distance"
-        )
-        if symmetric:
-            e = (
-                e.unionByName(
-                    e.select(
-                        F.col("dst").alias("src"), F.col("src").alias("dst"), "distance"
-                    )
-                )
-                .groupBy("src", "dst")
-                .agg(F.avg("distance").alias("distance"))
-            )
-        if mode == "connectivity":
-            return e.select("src", "dst", F.lit(1.0).alias("weight"))
-        return e.select("src", "dst", F.col("distance").alias("weight"))
+        """O3: (src, dst, weight) k-NN graph, see :func:`_graph`."""
+        return _graph(self.kneighbors(X, n_neighbors), mode, symmetric)
 
     def radius_neighbors_graph(
         self, X: DataFrame | None = None, radius: float | None = None,
         mode: str = "distance", symmetric: bool = True,
     ) -> DataFrame:
-        """O4: radius variant of the graph builder."""
-        e = self.radius_neighbors(X, radius).select(
-            F.col("query_id").alias("src"), F.col("cand_id").alias("dst"), "distance"
-        )
-        if symmetric:
-            e = (
-                e.unionByName(
-                    e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "distance")
-                )
-                .groupBy("src", "dst")
-                .agg(F.avg("distance").alias("distance"))
-            )
-        if mode == "connectivity":
-            return e.select("src", "dst", F.lit(1.0).alias("weight"))
-        return e.select("src", "dst", F.col("distance").alias("weight"))
+        """O4: (src, dst, weight) radius graph, see :func:`_graph`."""
+        return _graph(self.radius_neighbors(X, radius), mode, symmetric)
 
     def fit_kneighbors(self, X: DataFrame, n_neighbors: int | None = None) -> DataFrame:
         """Q11 fused fit + self-query."""
@@ -671,25 +662,6 @@ class MinHashNeighbors:
         (nearestNeighbors_PythonInterface.cpp:389)."""
         return self.fit(X).radius_neighbors_graph(None, radius, mode, symmetric)
 
-    def expand_two_hop(self, edges: DataFrame, limit: int = 100) -> DataFrame:
-        """Q8: neighbor-of-neighbor candidate expansion (bounded), as a
-        2-hop self-join of the edge list; re-rank with _exact_rerank."""
-        e1 = edges.select(F.col("query_id"), F.col("cand_id").alias("mid"))
-        e2 = edges.select(
-            F.col("query_id").alias("mid"), F.col("cand_id")
-        )
-        w = Window.partitionBy("query_id").orderBy(F.asc("cand_id"))
-        return (
-            e1.join(e2, "mid")
-            .select("query_id", "cand_id")
-            .where(F.col("query_id") != F.col("cand_id"))
-            .unionByName(edges.select("query_id", "cand_id"))
-            .dropDuplicates(["query_id", "cand_id"])
-            .withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= limit)
-            .drop("_r")
-        )
-
     def cluster(self, eps: float = 0.5, min_samples: int = 1) -> DataFrame:
         """M3: DBSCAN over the radius graph → (id, cluster_id).
 
@@ -705,6 +677,11 @@ class MinHashNeighbors:
         min_samples <= 1 degenerates to pure connectivity with singletons
         labeled by their own id (the engine's dedup-native default; sklearn
         min_samples=1 would likewise make every point core).
+
+        min_samples >= 2 runs the radius query now, as one eager checkpoint
+        leaf in the caller's persist scope, which may also own the connected
+        components labels. Release it (one ``scoped_persists()`` per call in
+        a loop) only after the labels are materialized.
         """
         edges = self.radius_neighbors(None, radius=eps).select(
             F.col("query_id").alias("a"), F.col("cand_id").alias("b")
@@ -712,14 +689,15 @@ class MinHashNeighbors:
         verts = self._fitted.select(F.col("id"))
         if min_samples <= 1:
             return connected_components(verts, edges)
-        edges.persist()
+        # three subtrees read this Python-UDF output: one eager leaf in the
+        # caller's scope; core is a cheap aggregate over it
+        edges = track_checkpoint(edges)
         # radius_neighbors self-query emits both directions of every pair
         # (collision join + symmetric metric), so out-degree == eps-degree
         deg = edges.groupBy("a").agg(F.count("*").alias("_deg"))
         core = deg.where(F.col("_deg") >= min_samples - 1).select(
             F.col("a").alias("id")
         )
-        core.persist()
         core_edges = (
             edges.join(core.withColumnRenamed("id", "a"), "a", "left_semi")
             .join(core.withColumnRenamed("id", "b"), "b", "left_semi")

@@ -334,14 +334,6 @@ def jaccard_sorted(a: np.ndarray, b: np.ndarray) -> float:
     return float(inter) / float(union) if union else 1.0
 
 
-def jaccard_batch(rows_a: list, rows_b: list) -> np.ndarray:
-    """Vectorized-ish batch Jaccard over paired sorted-unique arrays."""
-    out = np.empty(len(rows_a), dtype=np.float64)
-    for i in range(len(rows_a)):
-        out[i] = jaccard_sorted(rows_a[i], rows_b[i])
-    return out
-
-
 # ----- exact-substring pass: Rabin rolling hash + winnowing (MOSS-style) -----
 
 _RABIN_BASE = U32(1000003)
