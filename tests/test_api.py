@@ -4,13 +4,16 @@ harness (run_test.py:38-77: recall of approximate kneighbors vs exact NN).
 """
 
 import itertools
+import pstats
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from webdedup import kernels as K
 from webdedup.api import MinHashClassifier, MinHashNeighbors
+from webdedup.joins import scoped_persists
 
 
 def make_sparse_rows(n=120, dim=5000, nnz=60, n_clusters=12, seed=7):
@@ -277,11 +280,115 @@ def test_index_stats(spark, data):
 def test_save_load_roundtrip(spark, data, tmp_path):
     df, y, _, _ = data
     nn = MinHashNeighbors(n_neighbors=3, number_of_hash_functions=64, max_bin_size=10_000).fit(df)
-    want = {(r["query_id"], r["cand_id"]) for r in nn.kneighbors().collect()}
+    want = {(r["query_id"], r["cand_id"]): r["distance"] for r in nn.kneighbors().collect()}
     nn.save(str(tmp_path / "model"))
     nn2 = MinHashNeighbors.load(spark, str(tmp_path / "model"))
-    got = {(r["query_id"], r["cand_id"]) for r in nn2.kneighbors().collect()}
+    assert nn2._fitted.columns == ["id", "bands", "fpk"]
+    got = {(r["query_id"], r["cand_id"]): r["distance"] for r in nn2.kneighbors().collect()}
     assert got == want
+
+
+def test_load_rejects_unpacked_layout(spark, data, tmp_path):
+    """A model saved as (id, features, bands), before the fitted rows were
+    packed, fails at load with the missing column named."""
+    df, _, _, _ = data
+    path = str(tmp_path / "old")
+    nn = MinHashNeighbors(number_of_hash_functions=16, max_bin_size=10_000).fit(df)
+    nn.save(path)
+    nn._fitted.select("id", "bands").join(df, "id").select(
+        "id", "features", "bands"
+    ).write.mode("overwrite").parquet(path + "/fitted")
+    with pytest.raises(ValueError, match="'fpk'.*re-fit"):
+        MinHashNeighbors.load(spark, path)
+
+
+def _packed(rows, dtype, typ):
+    return pa.array(
+        [None if r is None else np.asarray(r, dtype=dtype).tobytes() for r in rows], typ
+    )
+
+
+def _ids(r):
+    return np.asarray(r, dtype=np.int64)
+
+
+@pytest.mark.parametrize("typ", [pa.binary(), pa.large_binary()])
+def test_packed_metric_kernels_match_numpy_kernels(typ):
+    """The exact re-rank's Arrow kernels read zero-copy views of packed
+    rows. They agree with kernels.jaccard_sorted / sparse_metric on empty
+    rows, unsorted rows, ids beyond uint32, null value rows (= ones) and
+    sliced arrays whose offset is > 0, with 32-bit offsets and with the
+    64-bit ones ``spark.sql.execution.arrow.useLargeVarTypes`` sends."""
+    from webdedup.api import _metric_udf
+
+    a = [[7], [], [], [3, 1, 2], [5, 2**40, 7], [9, 4]]
+    b = [[7], [], [1], [], [7, 5, 1], [4, 9, 11]]
+    va = [[1.0], [], None, [1.0, 2.0, 3.0], None, [0.5, 2.0]]
+    vb = [[1.0], None, [2.5], [], [2.0, 1.0, 4.0], None]
+    # slice(1) drops the first row and leaves arr.offset == 1
+    fa, fb = _packed(a, "<i8", typ).slice(1), _packed(b, "<i8", typ).slice(1)
+    wa, wb = _packed(va, "<f8", typ).slice(1), _packed(vb, "<f8", typ).slice(1)
+    assert fa.offset == wa.offset == 1 and wa.null_count == 2
+    rows = range(1, len(a))
+
+    jac = _metric_udf("jaccard").func
+    want = [1.0 - K.jaccard_sorted(_ids(a[i]), _ids(b[i])) for i in rows]
+    assert jac(fa, fb).to_pylist() == want
+
+    def ones_if_null(v, r):
+        return np.ones(len(r)) if v is None else np.asarray(v, dtype=np.float64)
+
+    for metric in ("euclidean", "cosine"):
+        met = _metric_udf(metric).func
+        want = [
+            K.sparse_metric(
+                _ids(a[i]), ones_if_null(va[i], a[i]),
+                _ids(b[i]), ones_if_null(vb[i], b[i]), metric,
+            )
+            for i in rows
+        ]
+        assert met(fa, wa, fb, wb).to_pylist() == want
+
+    # every row empty: the batch's data buffer holds no bytes
+    empty = _packed([[], []], "<i8", typ)
+    assert empty.buffers()[2].size == 0
+    assert jac(empty, empty).to_pylist() == [0.0, 0.0]
+    nulls = pa.nulls(2, typ)
+    assert _metric_udf("euclidean").func(empty, nulls, empty, nulls).to_pylist() == [0.0, 0.0]
+
+
+def _signature_batches(spark, tmp_path, action) -> int:
+    """Batches the signature UDF (``sig``) ran during ``action``, read from
+    the perf UDF profiler's dump."""
+    spark.conf.set("spark.sql.pyspark.udf.profiler", "perf")
+    try:
+        spark.profile.clear()
+        action()
+        spark.profile.dump(str(tmp_path), type="perf")
+    finally:
+        spark.conf.unset("spark.sql.pyspark.udf.profiler")
+        spark.profile.clear()
+    return sum(
+        v[1]
+        for f in tmp_path.glob("*.pstats")
+        for k, v in pstats.Stats(str(f)).stats.items()
+        if k[2] == "sig"
+    )
+
+
+@pytest.mark.parametrize("query", ["kneighbors", "radius_neighbors"])
+def test_explicit_query_featurized_once(spark, data, tmp_path, query):
+    """fast=False reads an explicit X's packed rows in the collision join
+    and in each exact re-rank; the signature UDF still runs once over X
+    (one batch for a one-partition X)."""
+    df = data[0]
+    q = df.where("id < 30").coalesce(1)
+    with scoped_persists() as scope:
+        nn = MinHashNeighbors(n_neighbors=3, number_of_hash_functions=64, max_bin_size=10_000)
+        nn.fit(df)
+        n = _signature_batches(spark, tmp_path, lambda: getattr(nn, query)(q).count())
+    scope.release()
+    assert n == 1
 
 
 def test_radius_graph_symmetric(spark, data):

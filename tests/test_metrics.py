@@ -128,6 +128,22 @@ def test_kneighbors_similarity_flag_selects_cosine(spark, valued):
         assert ds == sorted(ds, reverse=True)  # descending = best first
 
 
+def test_save_load_roundtrip_valued(spark, valued, tmp_path):
+    """A valued (euclidean) model keeps its packed value rows through
+    save/load: same metric, same neighbors, same distances."""
+    _, df = valued
+    nn = MinHashNeighbors(
+        n_neighbors=4, number_of_hash_functions=64, max_bin_size=10_000
+    ).fit(df)
+    want = {(r["query_id"], r["cand_id"]): r["distance"] for r in nn.kneighbors().collect()}
+    nn.save(str(tmp_path / "model"))
+    nn2 = MinHashNeighbors.load(spark, str(tmp_path / "model"))
+    assert nn2._fitted.columns == ["id", "bands", "fpk", "vpk"]
+    assert nn2._resolved_metric() == "euclidean"
+    got = {(r["query_id"], r["cand_id"]): r["distance"] for r in nn2.kneighbors().collect()}
+    assert want and got == want
+
+
 def test_radius_cosine_floor(spark, valued):
     rows, df = valued
     nn = MinHashNeighbors(

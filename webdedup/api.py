@@ -22,10 +22,12 @@ available via ``to_local_arrays`` for API parity at small scale.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.types import DoubleType
 
 from webdedup import kernels as K
 from webdedup.components import connected_components
@@ -39,110 +41,89 @@ def _signature_udf(
     shingle: bool,
     hash_algorithm: int = 0,
     range_k_wta: int = 20,
-    with_values: bool = False,
 ):
-    """features(array<long>)[, values(array<double>)] → bands(array<long>).
+    """(features array<long>, values array<double>) → struct(bands, fpk,
+    vpk), one Python pass per row.
 
-    shingle=False: band table = one entry per raw signature slot (the
+    bands: shingle=False gives one entry per raw signature slot (the
     reference's default shingle=0 — one hash table per hash function,
-    inverseIndexStorageUnorderedMap.h:19-38).
-    shingle=True: slots folded by the chained wang32 (P4).
-    hash_algorithm=1: WTA-Hash signatures (P5) instead of MinHash; WTA is the
-    one signature family that reads feature VALUES (inverseIndex.cpp:319-328
-    picks the max-value key among the rangeK smallest hashed keys) — when a
-    values column is present it is threaded through here. MinHash stays
-    presence-only (inverseIndex.cpp:256), matching the reference.
+    inverseIndexStorageUnorderedMap.h:19-38); shingle=True folds the slots
+    by the chained wang32 (P4). hash_algorithm=1: WTA-Hash signatures (P5)
+    instead of MinHash; WTA is the one signature family that reads feature
+    VALUES (inverseIndex.cpp:319-328 picks the max-value key among the
+    rangeK smallest hashed keys). MinHash stays presence-only
+    (inverseIndex.cpp:256), matching the reference.
+
+    fpk / vpk: the row's ids as ``<i8`` bytes (the reference's uint64 id
+    domain, exact) and its values as ``<f8`` bytes, in the given order so
+    euclidean/cosine sum in the same order; vpk is null where ``values``
+    is (callers without values pass a null literal and drop vpk).
     """
 
-    def _compute(rows, val_rows):
-        import numpy as np
-
+    @pandas_udf("bands array<bigint>, fpk binary, vpk binary")
+    def sig(features: pd.Series, values: pd.Series) -> pd.DataFrame:
+        ids = [np.asarray(r, dtype="<i8") for r in features]
         if hash_algorithm == 1:
-            sigs = np.vstack(
-                [
-                    K.wta_signature(
-                        r,
-                        None if val_rows is None else val_rows[i],
-                        num_hashes,
-                        range_k_wta,
-                    )
-                    for i, r in enumerate(rows)
-                ]
-            ) if rows else np.empty((0, num_hashes), dtype=np.uint32)
+            sigs = np.array(
+                [K.wta_signature(r, v, num_hashes, range_k_wta)
+                 for r, v in zip(ids, values)],
+                dtype=np.uint32,
+            ).reshape(-1, num_hashes)
         else:
-            sigs = K.minhash_signatures(rows, num_hashes)
+            sigs = K.minhash_signatures(ids, num_hashes)
         if shingle:
             sigs = K.fold_bands(sigs, rows_per_band)
-        return pd.Series([s.astype(np.int64) for s in sigs])
-
-    if with_values:
-
-        @pandas_udf(ArrayType(LongType()))
-        def sig_v(features: pd.Series, values: pd.Series) -> pd.Series:
-            import numpy as np
-
-            rows = [np.asarray(r, dtype=np.uint32) for r in features]
-            vals = [
-                None if v is None else np.asarray(v, dtype=np.float32)
-                for v in values
-            ]
-            return _compute(rows, vals)
-
-        return sig_v
-
-    @pandas_udf(ArrayType(LongType()))
-    def sig(features: pd.Series) -> pd.Series:
-        import numpy as np
-
-        rows = [np.asarray(r, dtype=np.uint32) for r in features]
-        return _compute(rows, None)
+        fpk = [r.tobytes() for r in ids]
+        vpk = [None if v is None else np.asarray(v, "<f8").tobytes() for v in values]
+        return pd.DataFrame({"bands": list(sigs.astype(np.int64)), "fpk": fpk, "vpk": vpk})
 
     return sig
 
 
-def _metric_udf(metric: str):
-    """pandas_udf computing the exact pair metric (kernels.sparse_metric).
+def _unpack(arr: pa.Array, dtype: str):
+    """Zero-copy views of a binary column of packed 8-byte rows →
+    (elements as ``dtype``, n+1 row offsets in elements, validity). Row i
+    is ``elements[off[i]:off[i+1]]``, empty when null."""
+    _, offsets, data = arr.buffers()
+    width = 8 if pa.types.is_large_binary(arr.type) else 4
+    off = np.frombuffer(
+        offsets, f"<i{width}", count=len(arr) + 1, offset=arr.offset * width
+    ) // 8
+    elems = np.frombuffer(data, dtype, count=data.size // 8) if data else np.empty(0, dtype)
+    return elems, off, arr.is_valid().to_numpy(zero_copy_only=False)
 
-    jaccard reads id arrays only; euclidean/cosine also read value arrays
-    (reference exact refinement, sparseMatrix.h:231-316)."""
+
+def _metric_udf(metric: str):
+    """arrow_udf: the exact pair metric (kernels.sparse_metric) over packed
+    ``fpk`` id rows; euclidean/cosine also read ``vpk`` value rows, a null
+    vpk counting as all ones (reference exact refinement,
+    sparseMatrix.h:231-316)."""
     if metric == "jaccard":
 
-        @pandas_udf(DoubleType())
-        def jac(a: pd.Series, b: pd.Series) -> pd.Series:
-            import numpy as np
-
+        @arrow_udf(DoubleType())
+        def jac(a: pa.Array, b: pa.Array) -> pa.Array:
+            ia, oa, _ = _unpack(a, "<i8")
+            ib, ob, _ = _unpack(b, "<i8")
             out = np.empty(len(a))
             for i in range(len(a)):
-                out[i] = 1.0 - K.jaccard_sorted(
-                    np.asarray(a.iloc[i], dtype=np.int64),
-                    np.asarray(b.iloc[i], dtype=np.int64),
-                )
-            return pd.Series(out)
+                out[i] = 1.0 - K.jaccard_sorted(ia[oa[i] : oa[i + 1]], ib[ob[i] : ob[i + 1]])
+            return pa.array(out)
 
         return jac
 
-    @pandas_udf(DoubleType())
-    def met(
-        fa: pd.Series, va: pd.Series, fb: pd.Series, vb: pd.Series
-    ) -> pd.Series:
-        import numpy as np
-
+    @arrow_udf(DoubleType())
+    def met(fa: pa.Array, va: pa.Array, fb: pa.Array, vb: pa.Array) -> pa.Array:
+        ia, oa, _ = _unpack(fa, "<i8")
+        ib, ob, _ = _unpack(fb, "<i8")
+        wa, owa, oka = _unpack(va, "<f8")
+        wb, owb, okb = _unpack(vb, "<f8")
         out = np.empty(len(fa))
         for i in range(len(fa)):
-            ia = np.asarray(fa.iloc[i], dtype=np.int64)
-            ib = np.asarray(fb.iloc[i], dtype=np.int64)
-            wa = (
-                np.ones(ia.size)
-                if va.iloc[i] is None
-                else np.asarray(va.iloc[i], dtype=np.float64)
-            )
-            wb = (
-                np.ones(ib.size)
-                if vb.iloc[i] is None
-                else np.asarray(vb.iloc[i], dtype=np.float64)
-            )
-            out[i] = K.sparse_metric(ia, wa, ib, wb, metric)
-        return pd.Series(out)
+            ra, rb = ia[oa[i] : oa[i + 1]], ib[ob[i] : ob[i + 1]]
+            xa = wa[owa[i] : owa[i + 1]] if oka[i] else np.ones(ra.size)
+            xb = wb[owb[i] : owb[i + 1]] if okb[i] else np.ones(rb.size)
+            out[i] = K.sparse_metric(ra, xa, rb, xb, metric)
+        return pa.array(out)
 
     return met
 
@@ -229,7 +210,7 @@ class MinHashNeighbors:
         self.lsb_bits = store_value_with_least_sigificant_bit
         self.metric = metric
         self._index: DataFrame | None = None   # (id, slot, hash) bucket rows
-        self._fitted: DataFrame | None = None  # (id, features[, values], bands)
+        self._fitted: DataFrame | None = None  # (id, bands, fpk[, vpk])
         self._labels: DataFrame | None = None
         self._released = False  # the scope owning the fitted leaf was released
         self._has_values = False
@@ -250,20 +231,27 @@ class MinHashNeighbors:
     # ---------------- index build (B1) ----------------
 
     def _featurize(self, X: DataFrame) -> DataFrame:
-        with_values = "values" in X.columns
+        """X → (id, bands, fpk[, vpk]); vpk only when X has ``values``."""
+        has_values = "values" in X.columns
         udf = _signature_udf(
             self.number_of_hash_functions,
             self.shingle_size,
             bool(self.shingle),
             self.hash_algorithm,
             self.rangeK_wta,
-            with_values=with_values,
         )
-        if with_values:
-            return X.select("id", "features", "values").withColumn(
-                "bands", udf("features", "values")
-            )
-        return X.select("id", "features").withColumn("bands", udf("features"))
+        values = F.col("values") if has_values else F.lit(None).cast("array<double>")
+        return X.select("id", udf("features", values).alias("_s")).select(
+            "id", "_s.bands", "_s.fpk", *(["_s.vpk"] if has_values else [])
+        )
+
+    def _query_feat(self, X: DataFrame | None) -> DataFrame:
+        """The fitted leaf for a self-query (X=None), else X featurized. The
+        collision join and every fast=False re-rank read X's signature UDF
+        output, so fast=False caches it in the caller's persist scope."""
+        if X is None:
+            return self._fitted
+        return self._featurize(X) if self.fast else track_persist(self._featurize(X))
 
     def _build_index(self, feat: DataFrame) -> DataFrame:
         idx = feat.select("id", F.posexplode("bands").alias("slot", "hash"))
@@ -366,8 +354,8 @@ class MinHashNeighbors:
     # ---------------- persistence (S4) ----------------
 
     def save(self, path: str) -> None:
-        """Persist the fitted index (features + bands) and config to parquet
-        + JSON — the partial_fit-able on-disk form of the fitted model."""
+        """Persist the fitted data (id, bands, fpk[, vpk]) and config to
+        parquet + JSON — the partial_fit-able on-disk form of the model."""
         import json
         import os
 
@@ -397,7 +385,12 @@ class MinHashNeighbors:
         lsb = cfg.pop("lsb_bits")
         obj = cls(**cfg, store_value_with_least_sigificant_bit=lsb)
         feat = spark.read.parquet(os.path.join(path, "fitted"))
-        obj._has_values = "values" in feat.columns
+        if "fpk" not in feat.columns:
+            raise ValueError(
+                f"{path}: the fitted data has no 'fpk' column (packed feature "
+                "ids); it was saved in an older layout — re-fit and save again"
+            )
+        obj._has_values = "vpk" in feat.columns
         obj._set_fitted(feat)
         lab = os.path.join(path, "labels")
         if os.path.exists(lab):
@@ -462,9 +455,11 @@ class MinHashNeighbors:
 
     def _with_exact_metric(self, cand: DataFrame, query_feat: DataFrame) -> DataFrame:
         """Attach the exact metric value as 'distance' to (query_id, cand_id)
-        pairs — the shared core of Q7/Q9 refinement and Q5 radius filtering."""
+        pairs — the shared core of Q7/Q9 refinement and Q5 radius filtering.
+        The metric UDF reads both sides' packed ``fpk`` rows (and, for
+        euclidean/cosine, ``vpk`` rows) joined onto each pair."""
         metric = self._resolved_metric()
-        q_has_values = "values" in query_feat.columns
+        q_has_values = "vpk" in query_feat.columns
         if metric in ("euclidean", "cosine") and q_has_values != self._has_values:
             # mirrors the reference's single-CSR-format contract: fit and
             # query share one (indices, data) layout. Silently substituting
@@ -477,16 +472,16 @@ class MinHashNeighbors:
                 "CSR format — add/drop the 'values' column on the query side"
             )
         udf = _metric_udf(metric)
-        null_vals = F.lit(None).cast("array<double>")
+        null_vals = F.lit(None).cast("binary")
         qf = query_feat.select(
             F.col("id").alias("query_id"),
-            F.col("features").alias("f_q"),
-            (F.col("values") if "values" in query_feat.columns else null_vals).alias("v_q"),
+            F.col("fpk").alias("f_q"),
+            (F.col("vpk") if q_has_values else null_vals).alias("v_q"),
         )
         cf = self._fitted.select(
             F.col("id").alias("cand_id"),
-            F.col("features").alias("f_c"),
-            (F.col("values") if "values" in self._fitted.columns else null_vals).alias("v_c"),
+            F.col("fpk").alias("f_c"),
+            (F.col("vpk") if self._has_values else null_vals).alias("v_c"),
         )
         joined = cand.select("query_id", "cand_id").join(qf, "query_id").join(cf, "cand_id")
         if metric == "jaccard":
@@ -505,9 +500,10 @@ class MinHashNeighbors:
         Metric per ``_resolved_metric`` — squared euclidean / cosine over
         (feature, value) rows exactly like the reference's refinement
         (nearestNeighbors.cpp:150-190 → sparseMatrix.h:231-316), or Jaccard
-        for the presence-only dedup default. ``kneighbors`` runs it twice on
-        the default path: over the LSH candidates (round 1) and over round 1
-        plus its neighbor-of-neighbor pairs (Q8 + round 2).
+        for the presence-only dedup default — scored by an Arrow UDF over
+        the packed ``fpk``/``vpk`` rows of both sides. ``kneighbors`` runs
+        it twice on the default path: over the LSH candidates (round 1) and
+        over round 1 plus its neighbor-of-neighbor pairs (Q8 + round 2).
         """
         w = self._rank_order(self._resolved_metric())
         return (
@@ -536,15 +532,16 @@ class MinHashNeighbors:
         (Q9, :326-382). Disable the expansion with
         ``neighbor_of_neighbor=False``.
 
-        fast=False with the expansion caches the round-1 edge table in the
-        CALLER's persist scope. In a loop use one ``scoped_persists()`` per
-        call, released once the result is materialized (a release also
-        un-fits a model fitted inside that scope).
+        fast=False caches the featurized X (see ``_query_feat``) and, with
+        the expansion, the round-1 edge table in the CALLER's persist scope.
+        In a loop use one ``scoped_persists()`` per call, released once the
+        result is materialized (a release also un-fits a model fitted inside
+        that scope).
         """
         self._check_fitted()
         k = n_neighbors or self.n_neighbors
         self_query = X is None
-        qf = self._fitted if self_query else self._featurize(X)
+        qf = self._query_feat(X)
         approx = self._approx_neighbors(qf, k, cut=self_query)
         if self.fast:
             # _approx_neighbors already ranks by (collisions desc, cand_id)
@@ -599,12 +596,13 @@ class MinHashNeighbors:
         the reference, whose desc-sorted `val <= pRadius → push else break`
         loop (nearestNeighbors.cpp:172-181) drops everything for any
         meaningful similarity radius; a floor is the semantics its callers
-        would want.
+        would want. fast=False with an explicit X caches it featurized in
+        the CALLER's persist scope, as ``kneighbors`` does.
         """
         self._check_fitted()
         r = radius if radius is not None else self.radius
         self_query = X is None
-        qf = self._fitted if self_query else self._featurize(X)
+        qf = self._query_feat(X)
         approx = self._approx_neighbors(qf, k=2**31 - 1, cut=self_query)
         if self.fast:
             return approx.where(F.col("distance") <= r).select(

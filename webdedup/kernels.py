@@ -209,7 +209,8 @@ def sparse_metric(
     vb: np.ndarray,
     metric: str,
 ) -> float:
-    """Exact metric between two sparse rows (sorted-unique ids + values).
+    """Exact metric between two sparse rows (unique ids in any order +
+    values aligned with them).
 
     Mirrors the reference's exact refinement kernels over (feature id, value)
     CSR rows (sparseMatrix.h:231-316), including its clamping quirks:
@@ -324,7 +325,8 @@ def shingle_text(text: str, n: int) -> np.ndarray:
 
 
 def jaccard_sorted(a: np.ndarray, b: np.ndarray) -> float:
-    """Exact Jaccard of two sorted-unique uint32 id arrays."""
+    """Exact Jaccard of two id arrays, each unique, in any order and of
+    any integer dtype (the exact re-rank passes int64 rows as given)."""
     a = np.asarray(a)
     b = np.asarray(b)
     if a.size == 0 and b.size == 0:
