@@ -314,12 +314,14 @@ def _ids(r):
 
 @pytest.mark.parametrize("typ", [pa.binary(), pa.large_binary()])
 def test_packed_metric_kernels_match_numpy_kernels(typ):
-    """The exact re-rank's Arrow kernels read zero-copy views of packed
-    rows. They agree with kernels.jaccard_sorted / sparse_metric on empty
-    rows, unsorted rows, ids beyond uint32, null value rows (= ones) and
+    """The exact re-rank's and the dedup verify's Arrow kernels read
+    zero-copy views of packed rows. They agree with kernels.jaccard_sorted
+    / sparse_metric on empty rows, unsorted rows, ids beyond uint32, null
+    value rows (= ones), null ``<u4`` shingle blobs (= empty sets) and
     sliced arrays whose offset is > 0, with 32-bit offsets and with the
     64-bit ones ``spark.sql.execution.arrow.useLargeVarTypes`` sends."""
     from webdedup.api import _metric_udf
+    from webdedup.verify import jaccard_udf
 
     a = [[7], [], [], [3, 1, 2], [5, 2**40, 7], [9, 4]]
     b = [[7], [], [1], [], [7, 5, 1], [4, 9, 11]]
@@ -349,10 +351,24 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
         ]
         assert met(fa, wa, fb, wb).to_pylist() == want
 
+    # verify: sorted-unique <u4 shingle blobs, the same row shapes plus a
+    # null blob; an element-size mistake in the decoder misplaces rows
+    sa = [[7], [], None, [1, 2, 3], [5, 7, 2**32 - 1], [4, 9], [2, 4, 6, 8]]
+    sb = [[7], [], [1], None, [1, 5, 7], [4, 9, 11], [1, 2, 4, 8, 9]]
+    ua, ub = _packed(sa, "<u4", typ).slice(1), _packed(sb, "<u4", typ).slice(1)
+    assert ua.offset == 1 and ua.null_count == ub.null_count == 1
+
+    def u4(r):
+        return np.asarray(r or [], dtype="<u4")
+
+    want = [K.jaccard_sorted(u4(sa[i]), u4(sb[i])) for i in range(1, len(sa))]
+    assert jaccard_udf.func(ua, ub).to_pylist() == want
+
     # every row empty: the batch's data buffer holds no bytes
     empty = _packed([[], []], "<i8", typ)
     assert empty.buffers()[2].size == 0
     assert jac(empty, empty).to_pylist() == [0.0, 0.0]
+    assert jaccard_udf.func(empty, empty).to_pylist() == [1.0, 1.0]
     nulls = pa.nulls(2, typ)
     assert _metric_udf("euclidean").func(empty, nulls, empty, nulls).to_pylist() == [0.0, 0.0]
 

@@ -11,10 +11,10 @@ from pyspark.sql import functions as F
 from webdedup.api import MinHashNeighbors
 from webdedup.catalog import Catalog
 from webdedup.config import DedupConfig
-from webdedup.fixtures import pages_dataframe
+from webdedup.fixtures import generate_pages, pages_dataframe
 from webdedup.incremental import IncrementalDedup
 from webdedup.joins import release_persisted, scoped_persists, track_persist
-from webdedup.pipeline import collect_counters, dedup
+from webdedup.pipeline import clean_corpus, collect_counters, dedup
 
 CFG = DedupConfig(
     number_of_hash_functions=128, rows_per_band=4, shingle_size=3,
@@ -191,6 +191,26 @@ def test_dedup_release_loop_keeps_persisted_rdds_flat(spark):
             res.clusters.select("cluster_id").distinct().count()
         )
         assert res.release() > 0
+        sizes.append(jsc.getPersistentRDDs().size())
+    assert sizes == [base] * 3
+
+
+def test_clean_corpus_release_loop_keeps_persisted_rdds_flat(spark):
+    """clean_corpus's keeper leaf and span table belong to the caller's
+    scope: a loop of runs, each released once its output is counted,
+    pins nothing."""
+    rows = generate_pages(60, 22).rows
+    docs = spark.createDataFrame(
+        [(i, r["text"]) for i, r in enumerate(rows)], "doc_id long, text string"
+    )
+    release_persisted()
+    jsc = spark.sparkContext._jsc
+    base = jsc.getPersistentRDDs().size()
+    sizes = []
+    for _ in range(3):
+        with scoped_persists() as scope:
+            assert clean_corpus(docs, CFG).count() > 0
+        assert scope.release() > 0
         sizes.append(jsc.getPersistentRDDs().size())
     assert sizes == [base] * 3
 

@@ -8,7 +8,7 @@ the north rule (SimHash, salted LSH groupBy, connected components,
 suffix-array/winnowing substring pass, checkpoint-resume, lineage counters).
 """
 
-from webdedup.config import DedupConfig, REFERENCE_TEST_CONFIG
+from webdedup.config import DedupConfig
 
-__all__ = ["DedupConfig", "REFERENCE_TEST_CONFIG"]
+__all__ = ["DedupConfig"]
 __version__ = "0.1.0"

@@ -80,50 +80,22 @@ def _signature_udf(
     return sig
 
 
-def _unpack(arr: pa.Array, dtype: str):
-    """Zero-copy views of a binary column of packed 8-byte rows →
-    (elements as ``dtype``, n+1 row offsets in elements, validity). Row i
-    is ``elements[off[i]:off[i+1]]``, empty when null."""
-    _, offsets, data = arr.buffers()
-    width = 8 if pa.types.is_large_binary(arr.type) else 4
-    off = np.frombuffer(
-        offsets, f"<i{width}", count=len(arr) + 1, offset=arr.offset * width
-    ) // 8
-    elems = np.frombuffer(data, dtype, count=data.size // 8) if data else np.empty(0, dtype)
-    return elems, off, arr.is_valid().to_numpy(zero_copy_only=False)
-
-
 def _metric_udf(metric: str):
-    """arrow_udf: the exact pair metric (kernels.sparse_metric) over packed
-    ``fpk`` id rows; euclidean/cosine also read ``vpk`` value rows, a null
-    vpk counting as all ones (reference exact refinement,
+    """arrow_udf: the exact pair metric over packed ``fpk`` id rows
+    (kernels.packed_pair_scores); euclidean/cosine also read ``vpk`` value
+    rows, a null vpk counting as all ones (reference exact refinement,
     sparseMatrix.h:231-316)."""
     if metric == "jaccard":
 
         @arrow_udf(DoubleType())
         def jac(a: pa.Array, b: pa.Array) -> pa.Array:
-            ia, oa, _ = _unpack(a, "<i8")
-            ib, ob, _ = _unpack(b, "<i8")
-            out = np.empty(len(a))
-            for i in range(len(a)):
-                out[i] = 1.0 - K.jaccard_sorted(ia[oa[i] : oa[i + 1]], ib[ob[i] : ob[i + 1]])
-            return pa.array(out)
+            return pa.array(1.0 - K.packed_pair_scores(a, b, "<i8"))
 
         return jac
 
     @arrow_udf(DoubleType())
     def met(fa: pa.Array, va: pa.Array, fb: pa.Array, vb: pa.Array) -> pa.Array:
-        ia, oa, _ = _unpack(fa, "<i8")
-        ib, ob, _ = _unpack(fb, "<i8")
-        wa, owa, oka = _unpack(va, "<f8")
-        wb, owb, okb = _unpack(vb, "<f8")
-        out = np.empty(len(fa))
-        for i in range(len(fa)):
-            ra, rb = ia[oa[i] : oa[i + 1]], ib[ob[i] : ob[i + 1]]
-            xa = wa[owa[i] : owa[i + 1]] if oka[i] else np.ones(ra.size)
-            xb = wb[owb[i] : owb[i + 1]] if okb[i] else np.ones(rb.size)
-            out[i] = K.sparse_metric(ra, xa, rb, xb, metric)
-        return pa.array(out)
+        return pa.array(K.packed_pair_scores(fa, fb, "<i8", metric, va, vb))
 
     return met
 
@@ -742,17 +714,21 @@ class MinHashClassifier(MinHashNeighbors):
         super().fit(X, y)
         return self
 
+    def _votes(self, X: DataFrame | None, n_neighbors: int | None) -> DataFrame:
+        """(query_id, label, v): neighbor count per label per query."""
+        lab = self._labels.select(F.col("id").alias("cand_id"), "label")
+        return (
+            self.kneighbors(X, n_neighbors)
+            .join(lab, "cand_id")
+            .groupBy("query_id", "label")
+            .agg(F.count("*").alias("v"))
+        )
+
     def predict(self, X: DataFrame | None = None, n_neighbors: int | None = None) -> DataFrame:
         """→ (query_id, label): mode over neighbor labels; deterministic
         tie-break = smallest label (Counter.most_common order is
         insertion-dependent in the reference; we pin it)."""
-        nn = self.kneighbors(X, n_neighbors)
-        lab = self._labels.select(F.col("id").alias("cand_id"), "label")
-        votes = (
-            nn.join(lab, "cand_id")
-            .groupBy("query_id", "label")
-            .agg(F.count("*").alias("v"))
-        )
+        votes = self._votes(X, n_neighbors)
         w = Window.partitionBy("query_id").orderBy(F.desc("v"), F.asc("label"))
         return (
             votes.withColumn("_r", F.row_number().over(w))
@@ -762,13 +738,7 @@ class MinHashClassifier(MinHashNeighbors):
 
     def predict_proba(self, X: DataFrame | None = None, n_neighbors: int | None = None) -> DataFrame:
         """→ (query_id, label, proba) label vote frequencies."""
-        nn = self.kneighbors(X, n_neighbors)
-        lab = self._labels.select(F.col("id").alias("cand_id"), "label")
-        votes = (
-            nn.join(lab, "cand_id")
-            .groupBy("query_id", "label")
-            .agg(F.count("*").alias("v"))
-        )
+        votes = self._votes(X, n_neighbors)
         tot = votes.groupBy("query_id").agg(F.sum("v").alias("t"))
         return votes.join(tot, "query_id").select(
             "query_id", "label", (F.col("v") / F.col("t")).alias("proba")

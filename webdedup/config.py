@@ -6,7 +6,7 @@ direct counterpart exists; dedup-pipeline-only knobs are new.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -18,7 +18,6 @@ class DedupConfig:
     shingle_size: int = 3                 # word n-gram width for text shingling
     max_bin_size: int = 2000              # hot-bucket kill threshold (reference default 50
                                           # on signature buckets; ours applies to LSH band buckets)
-    excess_factor: int = 5                # over-retrieval for top-k queries (reference default 5)
     # --- dedup pipeline ---
     jaccard_threshold: float = 0.8        # verify gate for near-dup pairs
     simhash_hamming_threshold: int = 3    # SimHash near-dup gate (bits)
@@ -40,12 +39,3 @@ class DedupConfig:
             raise ValueError("number_of_hash_functions must be divisible by rows_per_band")
         return self.number_of_hash_functions // self.rows_per_band
 
-
-#: configuration that mirrors the reference's own test config
-#: (/root/reference/test/test_minHash.py:18-20)
-REFERENCE_TEST_CONFIG = DedupConfig(
-    number_of_hash_functions=20,
-    rows_per_band=5,
-    max_bin_size=100_000,
-    excess_factor=1,
-)

@@ -362,11 +362,12 @@ def clean_corpus(
     Each stage keeps its own scale shape (documented at its definition);
     the composition adds only key-column joins.
 
-    Cache lifecycle: the keeper id set is eagerly localCheckpoint-ed and
-    the inner dedup run's persist scope is released immediately after, so
-    the pipeline's large caches never outlive this call. The final span
-    stage persists one narrow hashed-block table into the CALLER's active
-    persist scope (it backs the lazily returned frame) — wrap the call in
+    Cache lifecycle: the keeper id set is an eager checkpoint leaf
+    (``joins.track_checkpoint``) and the inner dedup run's persist scope is
+    released immediately after, so the pipeline's large caches never
+    outlive this call. The keeper leaf and the final span stage's narrow
+    hashed-block table both belong to the CALLER's active persist scope
+    (they back the lazily returned frame) — wrap the call in
     ``scoped_persists()`` or call ``release_persisted()`` after
     materializing the output.
     """
@@ -376,11 +377,10 @@ def clean_corpus(
     res = dedup(pages, cfg, text_col=text_col, id_col="doc_id")
     qual = quality_scores(pages, text_col=text_col)
     canon = select_canonical(res.clusters, qual)
-    keep_ids = (
+    keep_ids = track_checkpoint(
         canon.where(F.col("is_canonical") == 1)
         .join(qual.where(F.col("ttr_ppm") >= min_ttr_ppm), "doc_id", "left_semi")
         .select("doc_id", "cluster_id")
-        .localCheckpoint(eager=True)
     )
     res.release()
     kept = pages.join(keep_ids, "doc_id").select("doc_id", "cluster_id", text_col)

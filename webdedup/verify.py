@@ -8,41 +8,21 @@ variants live in webdedup.api).
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import DoubleType
 
+from webdedup import kernels as K
 from webdedup.joins import semi_join_ids
 
 
-@pandas_udf(DoubleType())
-def jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Exact Jaccard over packed-uint32 shingle blobs (sorted unique).
-
-    Per-pair ``np.intersect1d`` on purpose — measured against a fully
-    vectorized whole-batch kernel (concat both sides keyed pair_id<<32|value,
-    one stable sort, adjacent-duplicate bincount) and a per-pair
-    ``searchsorted`` variant under 1-32 concurrent worker processes
-    (BASELINE.md round 3): the loop wins at every concurrency level and the
-    gap WIDENS with workers (1740k vs 206k pairs/s at 32 workers). The batch
-    kernel streams ~MBs of temporaries per batch through DRAM while the
-    per-pair arrays stay L1/L2-resident — same bandwidth argument as
-    kernels.py substring_fingerprints_batch.
-    """
-    import numpy as np
-
-    out = np.empty(len(a), dtype=np.float64)
-    for i in range(len(a)):
-        x = np.frombuffer(a.iloc[i] or b"", dtype="<u4")
-        y = np.frombuffer(b.iloc[i] or b"", dtype="<u4")
-        if x.size == 0 and y.size == 0:
-            out[i] = 1.0
-            continue
-        inter = np.intersect1d(x, y, assume_unique=True).size
-        union = x.size + y.size - inter
-        out[i] = inter / union if union else 1.0
-    return pd.Series(out)
+@arrow_udf(DoubleType())
+def jaccard_udf(a: pa.Array, b: pa.Array) -> pa.Array:
+    """Exact Jaccard over packed ``<u4`` shingle blobs (sorted unique; a
+    null blob is the empty set): kernels.packed_pair_scores, the same
+    pair kernel as the kNN exact re-rank."""
+    return pa.array(K.packed_pair_scores(a, b, "<u4"))
 
 
 def attach_shingles(
