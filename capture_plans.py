@@ -2,18 +2,25 @@
 """Capture the plans of dedup()'s edge frame (``DedupResult.pairs``) or of
 the benchmark's ``MinHashNeighbors.kneighbors()`` self-query.
 
-Usage: python capture_plans.py <round> <pages parquet dir> <suffix> [dedup|kneighbors]
+Usage: cd <checkout to capture> && PYTHONPATH=. python -P <this tree>/capture_plans.py \
+           <round> <pages parquet dir> <suffix> [dedup|kneighbors]
+
+Run it from the root of the checkout whose plans it captures (this tree
+for 'after', a checkout of the previous commit for 'before'): Spark's
+Python workers start in this process's working directory and import
+``webdedup`` from there, so PYTHONPATH alone cannot point them at another
+tree. -P keeps this script's directory off sys.path. The
+script runs one tiny job first and exits with a message when a worker's
+``webdedup`` is not this process's.
 
   <round>              plan directory name, e.g. r08 -> plans/r08/
-  <pages parquet dir>  a seeded benchmark input, e.g.
+  <pages parquet dir>  a seeded benchmark input (an absolute path), e.g.
                        .perfbench/inputs/n2000-s1/pages (dedup, after one
                        ``perfbench/run.py --workload dedup_2k --seed 1`` run)
                        or .perfbench/inputs/n5000-s1/pages (kneighbors, after
                        ``--workload kneighbors_5k --seed 1``)
-  <suffix>             'before' (run as ``python -P`` with PYTHONPATH pointing
-                       at a checkout of the previous commit; -P keeps this
-                       script's directory off sys.path) or 'after' (this
-                       tree)
+  <suffix>             'before' (run from a checkout of the previous
+                       commit) or 'after' (run from this tree)
   dedup|kneighbors     target, default dedup
 
 The files land in plans/<round>/ next to this script, whichever tree ran.
@@ -102,6 +109,26 @@ def plan_shape(plan: str) -> dict:
     }
 
 
+def check_worker_tree(spark) -> None:
+    """Exit unless Spark's Python workers import this process's ``webdedup``.
+    A UDF body is shipped by value, but every module-level name it uses is
+    looked up in the workers' ``webdedup``, so a mismatch would capture the
+    plan of a run that mixed two trees."""
+
+    def tree(_):
+        return os.path.dirname(os.path.realpath(__import__("webdedup").__file__))
+
+    here = tree(None)
+    there = spark.sparkContext.parallelize([0], 1).map(tree).first()
+    if there != here:
+        spark.stop()
+        sys.exit(
+            f"Python workers import webdedup from {there}, this process from "
+            f"{here}: run this script from the root of the checkout to capture "
+            "(cd <checkout> && PYTHONPATH=. python -P <path>/capture_plans.py ...)"
+        )
+
+
 def capture_dedup(spark, pages_path: str) -> dict:
     """Plans of a materialized ``DedupResult.pairs``, by file stem."""
     pages = spark.read.parquet(pages_path).select("url", "warc_ts", "text", "lang")
@@ -155,6 +182,7 @@ if __name__ == "__main__":
     )
     spark = get_spark(f"plans-{SUFFIX}", cores=4, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
+    check_worker_tree(spark)
     print(f"{SUFFIX}: ", end="")
     plans = capture(spark, PAGES)
     os.makedirs(plan_dir, exist_ok=True)

@@ -170,6 +170,17 @@ def test_partial_fit_appends(spark, data):
     assert any(i >= 60 for i in ids)
 
 
+def test_repeated_fitted_id_names_the_fitted_rows(spark, data):
+    """The exact re-rank looks rows up by id: a partial_fit that repeats a
+    fitted id makes the next fast=False query fail, naming the fitted
+    rows and the id."""
+    df, _, _, _ = data
+    nn = MinHashNeighbors(n_neighbors=3, number_of_hash_functions=64, max_bin_size=10_000)
+    nn.fit(df.where(F.col("id") < 60)).partial_fit(df.where(F.col("id") == 7))
+    with pytest.raises(ValueError, match=r"fitted rows \(fit / partial_fit\): id 7 appears"):
+        nn.kneighbors().count()
+
+
 def test_classifier_accuracy(spark, data):
     df, y, _, labels = data
     clf = MinHashClassifier(
@@ -177,6 +188,42 @@ def test_classifier_accuracy(spark, data):
     ).fit(df, y)
     acc = clf.score(df, y)
     assert acc >= 0.9, f"classifier accuracy {acc:.3f}"
+
+
+def _jobs(spark, group: str, action) -> int:
+    """Spark jobs ``action`` ran, counted with the status tracker under a
+    job group name not used before."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_classifier_score_runs_the_knn_chain_once(spark, data):
+    """score() counts rows and hits in one aggregate, so it runs the same
+    jobs as one count of predict(X) joined with the labels (each call in
+    its own scope, so each builds its own query caches)."""
+    df, y, _, _ = data
+    clf = MinHashClassifier(
+        n_neighbors=5, number_of_hash_functions=64, max_bin_size=10_000
+    ).fit(df, y)
+    with scoped_persists() as scope:
+        clf.predict(df).count()  # builds the fitted row table
+    scope.release()
+    truth = y.select(F.col("id").alias("query_id"), F.col("label").alias("truth"))
+    jobs = {}
+    for name, action in (
+        ("count", lambda: clf.predict(df).join(truth, "query_id").count()),
+        ("score", lambda: clf.score(df, y)),
+    ):
+        with scoped_persists() as scope:
+            jobs[name] = _jobs(spark, f"score-test-{name}", action)
+        scope.release()
+    assert jobs["score"] == jobs["count"], jobs
 
 
 def test_predict_proba_sums_to_one(spark, data):
@@ -315,41 +362,68 @@ def _ids(r):
 @pytest.mark.parametrize("typ", [pa.binary(), pa.large_binary()])
 def test_packed_metric_kernels_match_numpy_kernels(typ):
     """The exact re-rank's and the dedup verify's Arrow kernels read
-    zero-copy views of packed rows. They agree with kernels.jaccard_sorted
-    / sparse_metric on empty rows, unsorted rows, ids beyond uint32, null
-    value rows (= ones), null ``<u4`` shingle blobs (= empty sets) and
-    sliced arrays whose offset is > 0, with 32-bit offsets and with the
-    64-bit ones ``spark.sql.execution.arrow.useLargeVarTypes`` sends."""
+    zero-copy views of packed rows. The re-rank UDF gets only (query_id,
+    cand_id) and looks both rows up in row tables; it agrees exactly with
+    kernels.jaccard_sorted / sparse_metric on pairs in any order (one
+    query split over many runs), empty rows on either or both sides,
+    negative ids and ids beyond uint32, explicit-query ids the fitted rows
+    lack (they still count in |q|), null value rows (= ones), null ``<u4``
+    shingle blobs (= empty sets), sliced arrays whose offset is > 0 and
+    Jaccard tables coded from several chunks, with 32-bit offsets and
+    with the 64-bit ones ``spark.sql.execution.arrow.useLargeVarTypes``
+    sends."""
+    from types import SimpleNamespace
+
     from webdedup.api import _metric_udf
     from webdedup.verify import jaccard_udf
 
-    a = [[7], [], [], [3, 1, 2], [5, 2**40, 7], [9, 4]]
-    b = [[7], [], [1], [], [7, 5, 1], [4, 9, 11]]
-    va = [[1.0], [], None, [1.0, 2.0, 3.0], None, [0.5, 2.0]]
-    vb = [[1.0], None, [2.5], [], [2.0, 1.0, 4.0], None]
-    # slice(1) drops the first row and leaves arr.offset == 1
-    fa, fb = _packed(a, "<i8", typ).slice(1), _packed(b, "<i8", typ).slice(1)
-    wa, wb = _packed(va, "<f8", typ).slice(1), _packed(vb, "<f8", typ).slice(1)
-    assert fa.offset == wa.offset == 1 and wa.null_count == 2
-    rows = range(1, len(a))
+    def exact(metric, q, c):
+        udf = _metric_udf(metric, SimpleNamespace(value=q), SimpleNamespace(value=c)).func
+        return lambda qid, cid: udf(pa.array(qid, pa.int64()), pa.array(cid, pa.int64())).to_pylist()
 
-    jac = _metric_udf("jaccard").func
-    want = [1.0 - K.jaccard_sorted(_ids(a[i]), _ids(b[i])) for i in rows]
-    assert jac(fa, fb).to_pylist() == want
+    # row 0 of each list is sliced off (arr.offset == 1); row ids unsorted
+    fit = [[0], [7], [], [3, 1, 2], [5, 2**40, 7], [9, 4, -3], [-3, 2**40, 1]]
+    fvals = [[0.0], [1.0], [], None, [1.0, 2.0, 3.0], [0.5, 2.0, 4.0], None]
+    fit_ids = [0, 2**40, -5, 0, 17, 3, 8][1:]
+    query = [[0], [7, 99], [], [1, 2, 3], [-3, 2**41, 4, -1], [2**40]]
+    qvals = [[0.0], [2.0, 1.0], [], [1.0, 1.0, 2.0], None, [3.0]]
+    q_ids = [0, 5, 1, -2, 2**33, 4][1:]
+    fpk, qpk = _packed(fit, "<i8", typ).slice(1), _packed(query, "<i8", typ).slice(1)
+    ft = K.row_table(fit_ids, fpk, _packed(fvals, "<f8", typ).slice(1))
+    qt = K.row_table(q_ids, qpk, _packed(qvals, "<f8", typ).slice(1))
+    # Jaccard's coded tables are built chunk by chunk: split the fitted rows
+    fc, vocab = K.code_rows(fit_ids, pa.chunked_array([fpk.slice(0, 3), fpk.slice(3)]))
+    qc, _ = K.code_rows(q_ids, pa.chunked_array([qpk]), vocab)
+    fit, fvals, query, qvals = fit[1:], fvals[1:], query[1:], qvals[1:]
+    assert 99 not in vocab and 2**41 not in vocab and -1 not in vocab
 
     def ones_if_null(v, r):
         return np.ones(len(r)) if v is None else np.asarray(v, dtype=np.float64)
 
-    for metric in ("euclidean", "cosine"):
-        met = _metric_udf(metric).func
-        want = [
-            K.sparse_metric(
-                _ids(a[i]), ones_if_null(va[i], a[i]),
-                _ids(b[i]), ones_if_null(vb[i], b[i]), metric,
-            )
-            for i in rows
-        ]
-        assert met(fa, wa, fb, wb).to_pylist() == want
+    for q, qv, qid, t, tc in ((fit, fvals, fit_ids, ft, fc), (query, qvals, q_ids, qt, qc)):
+        # query varies fastest (every run holds one pair), then long runs
+        pairs = [(i, j) for j in range(len(fit)) for i in range(len(q))]
+        pairs += [(i, j) for i in range(len(q)) for j in range(len(fit))]
+        qi, ci = [qid[i] for i, _ in pairs], [fit_ids[j] for _, j in pairs]
+        want = [1.0 - K.jaccard_sorted(_ids(q[i]), _ids(fit[j])) for i, j in pairs]
+        assert exact("jaccard", tc, fc)(qi, ci) == want
+        for metric in ("euclidean", "cosine"):
+            want = [
+                K.sparse_metric(
+                    _ids(q[i]), ones_if_null(qv[i], q[i]),
+                    _ids(fit[j]), ones_if_null(fvals[j], fit[j]), metric,
+                )
+                for i, j in pairs
+            ]
+            assert exact(metric, t, ft)(qi, ci) == want
+    assert exact("jaccard", qc, fc)([], []) == []
+    nc, _ = K.code_rows([], pa.chunked_array([], typ), vocab)
+    assert exact("jaccard", nc, fc)([], []) == []
+    rep = _packed([[1], [2], [5]], "<i8", typ)
+    with pytest.raises(ValueError, match="the query X: id 3 appears more than once"):
+        K.row_table([3, 4, 3], rep, name="the query X")
+    with pytest.raises(ValueError, match="the query X: id 3 appears more than once"):
+        K.code_rows([3, 4, 3], pa.chunked_array([rep]), vocab, "the query X")
 
     # verify: sorted-unique <u4 shingle blobs, the same row shapes plus a
     # null blob; an element-size mistake in the decoder misplaces rows
@@ -367,10 +441,11 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
     # every row empty: the batch's data buffer holds no bytes
     empty = _packed([[], []], "<i8", typ)
     assert empty.buffers()[2].size == 0
-    assert jac(empty, empty).to_pylist() == [0.0, 0.0]
+    et = K.row_table([1, 2], empty, pa.nulls(2, typ))
+    ec, _ = K.code_rows([1, 2], pa.chunked_array([empty]))
+    assert exact("jaccard", ec, ec)([1, 2], [2, 1]) == [0.0, 0.0]
+    assert exact("euclidean", et, et)([1, 2], [2, 1]) == [0.0, 0.0]
     assert jaccard_udf.func(empty, empty).to_pylist() == [1.0, 1.0]
-    nulls = pa.nulls(2, typ)
-    assert _metric_udf("euclidean").func(empty, nulls, empty, nulls).to_pylist() == [0.0, 0.0]
 
 
 def _signature_batches(spark, tmp_path, action) -> int:

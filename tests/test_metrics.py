@@ -185,7 +185,7 @@ def test_limit_neighbors_of_neighbors_formula(spark, valued):
     approx = nn._approx_neighbors(qf, 30, cut=True)
     limit = min(100, 30 + nn.excess_factor)
     assert limit == 35
-    round1 = nn._exact_rerank(approx, qf, limit)
+    round1 = nn._exact_rerank(approx, nn._query_rows(qf), limit)
     import pyspark.sql.functions as F
 
     per_q = round1.groupBy("query_id").count().agg(F.max("count")).collect()[0][0]

@@ -2,6 +2,8 @@
 substr_fps config-trust gate (ADVICE r3 / VERDICT r3 ask #4)."""
 
 import os
+import sys
+import threading
 
 import numpy as np
 import pytest
@@ -236,14 +238,21 @@ def _model():
     )
 
 
+def _broadcast_files(spark) -> int:
+    """This process's broadcast files: each live ``sc.broadcast`` holds one,
+    and ``Broadcast.destroy()`` deletes it."""
+    return len(os.listdir(spark.sparkContext._temp_dir))
+
+
 def test_model_loop_keeps_persisted_rdds_flat(spark):
-    """fit's leaf, kneighbors' round-1 cache and cluster's edge leaf and
+    """fit's leaf and row table, kneighbors' round-1 cache, an explicit
+    query's featurized rows and row table, and cluster's edge leaf and
     labels all belong to the caller's scope: a fit + query loop with one
-    released scope per iteration pins nothing."""
+    released scope per iteration pins no RDD and no broadcast."""
     X = _token_sets(spark)
     release_persisted()
     jsc = spark.sparkContext._jsc
-    base = jsc.getPersistentRDDs().size()
+    base = jsc.getPersistentRDDs().size(), _broadcast_files(spark)
     sizes = []
     for i in range(3):
         with scoped_persists() as scope:
@@ -251,24 +260,33 @@ def test_model_loop_keeps_persisted_rdds_flat(spark):
             plan = nn._fitted._jdf.queryExecution().optimizedPlan().toString()
             assert "InMemoryRelation" not in plan
             assert nn.kneighbors().count() > 0
+            assert nn.kneighbors(X.where(F.col("id") % 3 == i)).count() > 0
             assert nn.cluster(eps=0.5, min_samples=2).count() == 40
+            assert _broadcast_files(spark) == base[1] + 2
         assert scope.release() > 0
-        sizes.append(jsc.getPersistentRDDs().size())
+        sizes.append((jsc.getPersistentRDDs().size(), _broadcast_files(spark)))
     assert sizes == [base] * 3
 
 
 def test_released_fit_leaf_unfits_model(spark, tmp_path):
-    """Releasing the scope that owns the model's current leaf un-fits it,
-    and queries then say so instead of failing on missing checkpoint
-    blocks; releasing a scope whose leaf a refit replaced does not."""
+    """Releasing the scope that owns the model's current leaf un-fits it
+    and destroys its row table's broadcast, and queries then say so
+    instead of failing on missing checkpoint blocks; releasing a scope
+    whose leaf a refit replaced destroys only that leaf's table."""
     X = _token_sets(spark)
     with scoped_persists() as old:
         nn = _model().fit(X)
+        assert nn.kneighbors().count() > 0
+        old_rows = nn._rows.get("jaccard")[0]
     with scoped_persists() as cur:
         nn.fit(X.where(F.col("id") < 30))
     old.release()
+    assert not old_rows._jbroadcast.isValid()
     assert nn.kneighbors().where(F.col("cand_id") >= 30).count() == 0
+    cur_rows = nn._rows.get("jaccard")[0]
+    assert cur_rows is not old_rows and cur_rows._jbroadcast.isValid()
     cur.release()
+    assert not cur_rows._jbroadcast.isValid()
     for call in (
         nn.kneighbors,
         nn.radius_neighbors,
@@ -280,3 +298,29 @@ def test_released_fit_leaf_unfits_model(spark, tmp_path):
     with scoped_persists() as again:
         assert nn.fit(X).kneighbors().count() > 0
     again.release()
+
+
+def test_fitted_row_table_built_once_under_threads(spark):
+    """Concurrent first exact queries (a streaming thread beside the main
+    one) build the fitted leaf's row table once: every thread gets the
+    same broadcast, and one broadcast file appears."""
+    X = _token_sets(spark)
+    with scoped_persists() as scope:
+        nn = _model().fit(X)
+        before = _broadcast_files(spark)
+        got = []
+        threads = [threading.Thread(target=lambda: got.append(nn._rows.get("jaccard")[0])) for _ in range(8)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert len(got) == 8 and all(b is got[0] for b in got)
+        assert _broadcast_files(spark) == before + 1
+    scope.release()
+    assert _broadcast_files(spark) == before
