@@ -57,9 +57,9 @@ def edge_cache_plan(pairs) -> str:
     )
 
 
-def _drop_subtrees(plan: str, marker: str, keep_head: bool) -> str:
-    """``plan`` without the children of every node line containing
-    ``marker`` (and without that line too unless ``keep_head``)."""
+def _drop_subtrees(plan: str, marker: str) -> str:
+    """``plan`` without every node line containing ``marker`` and its
+    children."""
     out, skip = [], None
     for line in plan.splitlines():
         if skip is not None:
@@ -70,8 +70,7 @@ def _drop_subtrees(plan: str, marker: str, keep_head: bool) -> str:
         i = line.find(marker)
         if i >= 0:
             skip = (i - 3, line[: i - 3])
-            if not keep_head:
-                continue
+            continue
         out.append(line)
     return "\n".join(out)
 
@@ -79,25 +78,22 @@ def _drop_subtrees(plan: str, marker: str, keep_head: bool) -> str:
 def final_sections(plan: str) -> str:
     """``plan`` without its ``== Initial Plan ==`` subtrees: an adaptive
     plan prints each node twice, once as run and once as first planned."""
-    return _drop_subtrees(plan, "== Initial Plan ==", keep_head=False)
+    return _drop_subtrees(plan, "== Initial Plan ==")
 
 
 def plan_shape(plan: str) -> dict:
     """Counts over the final sections of an edge-cache plan string:
     exact-Jaccard UDF evaluations, LSH (band, band_hash) and SimHash
-    (tbl, key) self-join nodes, adaptive query stages, and the caches the
-    edge plan reads directly other than the docs cache (the only one whose
-    output carries ``fingerprint``; caches nested inside it, such as a
-    cached input, are not counted). A nested cache's plan is printed under
-    every scan of it, so its nodes count once per scan."""
+    (tbl, key) self-join nodes, adaptive query stages, and scans of every
+    cache the edge plan reads, nested ones (such as a cached input under a
+    cached frame) included. A nested cache's plan is printed under every
+    scan of it, so its nodes count once per scan."""
     final = final_sections(plan)
 
     def inner_joins(k1, k2):
         side = rf"\[{k1}#\d+L?, {k2}#\d+L?\]"
         return len(re.findall(rf"Join {side}, {side}, Inner", final))
 
-    read = _drop_subtrees(final, "InMemoryRelation [", keep_head=True)
-    caches = re.findall(r"InMemoryRelation \[([^\]]*)\]", read)
     return {
         "jaccard_udf_evals": len(
             re.findall(r"ArrowEvalPython \[jaccard_udf\(", final)
@@ -105,7 +101,7 @@ def plan_shape(plan: str) -> dict:
         "lsh_band_joins": inner_joins("band", "band_hash"),
         "simhash_band_joins": inner_joins("tbl", "key"),
         "query_stages": len(re.findall(r"QueryStage \d+", final)),
-        "other_caches": sum("fingerprint#" not in c for c in caches),
+        "caches": final.count("InMemoryRelation ["),
     }
 
 

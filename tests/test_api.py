@@ -190,20 +190,7 @@ def test_classifier_accuracy(spark, data):
     assert acc >= 0.9, f"classifier accuracy {acc:.3f}"
 
 
-def _jobs(spark, group: str, action) -> int:
-    """Spark jobs ``action`` ran, counted with the status tracker under a
-    job group name not used before."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_classifier_score_runs_the_knn_chain_once(spark, data):
+def test_classifier_score_runs_the_knn_chain_once(spark, data, run_jobs):
     """score() counts rows and hits in one aggregate, so it runs the same
     jobs as one count of predict(X) joined with the labels (each call in
     its own scope, so each builds its own query caches)."""
@@ -221,7 +208,7 @@ def test_classifier_score_runs_the_knn_chain_once(spark, data):
         ("score", lambda: clf.score(df, y)),
     ):
         with scoped_persists() as scope:
-            jobs[name] = _jobs(spark, f"score-test-{name}", action)
+            jobs[name] = run_jobs(f"score-test-{name}", action)[1]
         scope.release()
     assert jobs["score"] == jobs["count"], jobs
 

@@ -69,6 +69,47 @@ def test_distributed_path_matches_driver_path(spark):
     assert driver == dist
 
 
+def _payload_verts(spark, n):
+    return spark.createDataFrame(
+        [(f"u{i}", i) for i in range(n)], "url string, id long"
+    )
+
+
+def test_vertex_payload_carried_on_both_paths(spark):
+    """Vertex columns besides id come back next to the same labels as an
+    id-only vertex frame, on the driver path and the distributed loop, and
+    both paths report the same symmetric edge count: both orientations of
+    every input row, duplicates kept."""
+    from webdedup.components import LAST_STATS
+
+    edge_list = [(0, 1), (1, 0), (1, 2), (3, 4), (6, 5)]
+    plain = cc(spark, 8, edge_list)
+    edges = spark.createDataFrame(edge_list, "a long, b long")
+    sym_edges = {}
+    for limit in (None, 0):
+        out = connected_components(
+            _payload_verts(spark, 8), edges, collect_edge_limit=limit
+        )
+        assert out.columns == ["url", "id", "cluster_id"]
+        rows = out.collect()
+        assert {r["id"]: r["cluster_id"] for r in rows} == plain
+        assert all(r["url"] == f"u{r['id']}" for r in rows)
+        sym_edges[limit] = LAST_STATS["n_sym_edges"]
+    assert sym_edges[None] == sym_edges[0] == 2 * len(edge_list)
+
+
+def test_edge_free_input_returns_payload(spark):
+    from webdedup.components import LAST_STATS
+
+    edges = spark.createDataFrame([], "a long, b long")
+    out = connected_components(_payload_verts(spark, 4), edges)
+    assert out.columns == ["url", "id", "cluster_id"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (f"u{i}", i, i) for i in range(4)
+    ]
+    assert LAST_STATS["n_sym_edges"] == 0
+
+
 def test_nonconvergence_warns_and_returns_partial(spark):
     # the convergence cap only exists on the distributed loop — force it
     with pytest.warns(RuntimeWarning):

@@ -68,10 +68,10 @@ def test_dedup_result_release_drops_only_its_caches(spark):
 
 def test_derived_input_computes_transformation_exactly_once(spark):
     """dedup()'s upfront gating count must not re-run an expensive upstream
-    transformation: the count fills the docs cache, the only reader of the
-    input, so a counting UDF in its lineage evaluates exactly n_rows times
-    across the whole pipeline run, and the input itself is never cached
-    (its text would sit in memory twice)."""
+    transformation: it is observed on the action that fills the docs leaf,
+    the only reader of the input, so a counting UDF in its lineage
+    evaluates exactly n_rows times across the whole pipeline run, and the
+    input itself is never cached (its text would sit in memory twice)."""
     from pyspark.sql.types import StringType
 
     acc = spark.sparkContext.accumulator(0)
@@ -95,7 +95,7 @@ def test_derived_input_computes_transformation_exactly_once(spark):
 
 def test_plain_scan_input_is_not_cached(spark, tmp_path):
     """A plain parquet scan recomputes for free — the guard must not
-    double-cache the corpus text next to the docs cache."""
+    double-cache the corpus text next to the docs leaf."""
     pages, _ = pages_dataframe(spark, n=30, seed=3)
     p = str(tmp_path / "pages.parquet")
     pages.select("url", "text").write.parquet(p)
@@ -174,18 +174,30 @@ def test_scope_stack_is_thread_local(spark):
         ms.release()
 
 
-def test_dedup_release_loop_keeps_persisted_rdds_flat(spark):
+def test_dedup_release_loop_keeps_persisted_rdds_flat(spark, run_jobs):
     """pairs, clusters and the lazy counters read caches and checkpoint
     blocks the run's scope owns. Materializing all of them and then
-    releasing leaves nothing pinned, so a loop of runs stays flat."""
+    releasing leaves nothing pinned, so a loop of runs stays flat. The
+    page and unique-text counts are observed on the actions that fill the
+    docs and featurize leaves, so collecting the counters runs only the
+    jobs of the three lazy ones."""
     pages, _ = pages_dataframe(spark, n=60, seed=21)
     pages = pages.select("url", "text")
+    n_texts = pages.select("text").distinct().count()
     jsc = spark.sparkContext._jsc
     base = jsc.getPersistentRDDs().size()
     sizes = []
-    for _ in range(3):
+    lazy = ("verified_pairs", "clusters", "duplicate_docs")
+    for i in range(3):
         res = dedup(pages, CFG)
-        counters = collect_counters(res)
+        counters, n_jobs = run_jobs(
+            f"counters-all-{i}", lambda: collect_counters(res)
+        )
+        _, n_lazy = run_jobs(
+            f"counters-lazy-{i}", lambda: [res.counters[k]() for k in lazy]
+        )
+        assert n_jobs == n_lazy > 0
+        assert counters["unique_texts"] == n_texts < 60
         n_rows = res.clusters.count()
         assert counters["pages"] == n_rows == 60
         assert counters["verified_pairs"] == res.pairs.count() > 0
@@ -195,6 +207,27 @@ def test_dedup_release_loop_keeps_persisted_rdds_flat(spark):
         assert res.release() > 0
         sizes.append(jsc.getPersistentRDDs().size())
     assert sizes == [base] * 3
+
+
+def test_released_dedup_result_raises(spark):
+    """After release(), reading clusters or pairs off the result (or
+    collecting its counters) raises an error naming release(). A frame
+    taken before the release cannot be recomputed either: its lineage
+    starts at the freed docs leaf."""
+    pages, _ = pages_dataframe(spark, n=40, seed=31)
+    res = dedup(pages.select("url", "text"), CFG)
+    clusters = res.clusters
+    assert clusters.count() == 40
+    assert res.release() > 0
+    for read in (
+        lambda: res.clusters,
+        lambda: res.pairs,
+        lambda: collect_counters(res),
+    ):
+        with pytest.raises(RuntimeError, match=r"release\(\)"):
+            read()
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        clusters.collect()
 
 
 def test_clean_corpus_release_loop_keeps_persisted_rdds_flat(spark):

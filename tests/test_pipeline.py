@@ -147,8 +147,9 @@ def test_edge_plan_runs_each_candidate_subtree_once(result):
     """The materialized edge cache's final plan evaluates the exact-Jaccard
     UDF once per pair and runs each candidate self-join once: the pair-id
     sets read the deduped pairs' exchange instead of a mid-DAG cache or a
-    second copy of the band joins. The docs cache is the only cache the
-    edge plan reads."""
+    second copy of the band joins. The edge plan reads no cache at all:
+    ``docs`` and ``feat`` are checkpoint leaves, and a cached input is read
+    only by the action that fills the docs leaf."""
     from capture_plans import edge_cache_plan, plan_shape
 
     result.pairs.count()
@@ -156,7 +157,25 @@ def test_edge_plan_runs_each_candidate_subtree_once(result):
     assert shape["jaccard_udf_evals"] == 1, shape
     assert shape["lsh_band_joins"] == 1, shape
     assert shape["simhash_band_joins"] == 1, shape
-    assert shape["other_caches"] == 0, shape
+    assert shape["caches"] == 0, shape
+
+
+def test_dedup_job_budget(pages, run_jobs):
+    """dedup() and a collect of its clusters run a fixed number of Spark
+    jobs: the docs leaf's one action also counts the corpus, connected
+    components reads the edge set once, and the labels join the doc keys
+    once. A new job barrier anywhere in the run shows here."""
+    pages_df, _ = pages
+    pages_df.count()  # fill the module's cached input outside the group
+
+    def run():
+        res = dedup(pages_df, CFG)
+        res.clusters.collect()
+        return res
+
+    res, n_jobs = run_jobs("test_dedup_job_budget", run)
+    res.release()
+    assert n_jobs == 31, n_jobs
 
 
 def test_broadcast_id_limit_shuffled_semi_joins_match_default(spark, pages, result):

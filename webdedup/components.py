@@ -5,27 +5,37 @@ role sklearn DBSCAN plays downstream of the reference's distance graph,
 cluster/minHashDBSCAN.py:53-85 — density clustering at eps = Jaccard
 threshold over these edges IS connectivity).
 
-Two execution paths, chosen by a size gate on the symmetric edge count
-(the same gate philosophy as webdedup.joins.semi_join_ids):
+The edge frame is read once, by one eager checkpoint of its (a, b) rows
+whose observed row count n sizes the symmetric edge set (both
+orientations, 2n rows) without a count job. Two execution paths, chosen
+by a size gate on that count (the same gate philosophy as
+webdedup.joins.semi_join_ids):
 
-* **small edge sets** (<= ``collect_edge_limit`` sym rows, default 4M
-  ≈ 64 MB collected): one Arrow collect + a vectorized numpy hash-min /
+* **small edge sets** (<= ``collect_edge_limit`` sym rows, default 4M):
+  one Arrow collect of the n one-orientation rows (≈ 32 MB at the gate;
+  numpy adds the reversed orientation) + a vectorized numpy hash-min /
   pointer-jumping loop on the driver. Dup edges are a tiny fraction of any
   real corpus (343k sym edges at 1M bench pages), and the distributed loop
   pays ~5 shuffle+checkpoint job barriers per round for data that fits in
   one L2 cache — measured at sf0.1 the loop was ~2.3 s of pure job latency
   for 500 edges. Semantics are identical: labels monotonically adopt the
   component minimum until fixpoint.
-* **large edge sets**: the distributed loop of joins with
-  localCheckpoint() per iteration to truncate lineage; converges in
-  O(log diameter) rounds. Each round now UNPERSISTS the previous round's
-  checkpoint blocks once the new one is materialized (VERDICT r5 #1: the
-  blocks are invisible to spark.catalog.clearCache and accumulated across
-  rounds/runs for the session's lifetime). The FINAL labels checkpoint
+* **large edge sets**: the distributed loop of joins over the union of
+  both orientations of the checkpoint, with localCheckpoint() per
+  iteration to truncate lineage; converges in O(log diameter) rounds.
+  Each round now UNPERSISTS the previous round's checkpoint blocks once
+  the new one is materialized (VERDICT r5 #1: the blocks are invisible to
+  spark.catalog.clearCache and accumulated across rounds/runs for the
+  session's lifetime). The FINAL labels checkpoint
   backs the lazily returned frame, so it is registered with the caller's
   persist scope (webdedup.joins) and freed by scope.release() /
   release_persisted() — after which derived frames must not be
   re-materialized (the scope contract).
+
+Columns of the vertex frame other than ``id`` are a payload carried to the
+output on every path (the labels join back to the full vertex rows), so a
+caller that needs, say, urls next to its cluster ids runs one label join,
+not two.
 """
 
 from __future__ import annotations
@@ -74,26 +84,26 @@ class _ThreadLocalStats:
 LAST_STATS = _ThreadLocalStats()
 
 
-def _driver_labels(sym_pdf):
+def _driver_labels(a, b):
     """Vectorized hash-min + pointer jumping over a collected edge list.
 
-    (src, dst) int64 pandas frame (both directions present) → (ids,
-    labels) numpy arrays with label = min id in component — bit-identical
-    semantics to the distributed loop, O(E · log diameter) single-core.
+    (a, b) int64 numpy arrays, one orientation per edge → (ids, labels,
+    rounds) with label = min id in component — bit-identical semantics to
+    the distributed loop, O(E · log diameter) single-core.
     """
     import numpy as np
 
-    a = sym_pdf["src"].to_numpy(dtype=np.int64, copy=False)
-    b = sym_pdf["dst"].to_numpy(dtype=np.int64, copy=False)
     ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
     ia, ib = inv[: len(a)], inv[len(a) :]
-    # labels live in INDEX space; ids is sorted so index order == id order
+    # both orientations of every edge, in INDEX space; ids is sorted so
+    # index order == id order
+    src, dst = np.concatenate([ia, ib]), np.concatenate([ib, ia])
     lbl = np.arange(len(ids), dtype=np.int64)
     rounds = 0
     while True:
         rounds += 1
         new = lbl.copy()
-        np.minimum.at(new, ia, lbl[ib])  # sym rows carry both directions
+        np.minimum.at(new, src, lbl[dst])
         new = np.minimum(new, new[new])  # pointer jumping (path halving)
         if np.array_equal(new, lbl):
             break
@@ -108,12 +118,15 @@ def connected_components(
     collect_edge_limit: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """(id) vertices + (a, b) edges → (id, cluster_id = min id in component).
+    """(id, ...) vertices + (a, b) edges → (*vertices.columns, cluster_id =
+    min id in component).
 
     Hash-min propagation: every vertex repeatedly adopts the minimum label
     in its closed neighborhood until a fixpoint. Small edge sets resolve on
     the driver in one pass (size-gated, see module docstring); large ones
-    run the shuffle loop with per-round lineage truncation.
+    run the shuffle loop with per-round lineage truncation. Columns of
+    ``vertices`` besides ``id`` ride along to the output, so a caller
+    needs no second join to get them back next to the labels.
 
     ``checkpoint_dir``: opt-in RELIABLE checkpointing for the distributed
     loop (VERDICT r5 #5), with the env fallback WEBDEDUP_CC_CHECKPOINT_DIR
@@ -123,33 +136,37 @@ def connected_components(
     """
     _ckpt = checkpointer(vertices.sparkSession, checkpoint_dir)
 
-    sym = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    )
     # one eager materialization of the (possibly expensive) upstream edge
-    # DAG serves BOTH paths: its observed row count drives the size gate
-    # (no separate count job), and the stored rows feed either the Arrow
-    # collect or the iterative loop
+    # DAG, reading it once, serves BOTH paths: its observed row count
+    # drives the size gate (no separate count job), and the stored rows
+    # feed either the Arrow collect or the iterative loop. The symmetric
+    # edge set is both orientations of these rows, not deduped, so it has
+    # exactly twice as many.
     ob = Observation()
-    sym = _ckpt(sym.observe(ob, F.count(F.lit(1)).alias("n")))
-    n_edges = ob.get["n"]
+    pairs = _ckpt(
+        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .observe(ob, F.count(F.lit(1)).alias("n"))
+    )
+    n_edges = 2 * ob.get["n"]
     limit = 4_000_000 if collect_edge_limit is None else collect_edge_limit
     if n_edges <= limit:
-        ids, labels, rounds = (
-            _driver_labels(sym.toPandas()) if n_edges else (None, None, 0)
-        )
-        free_checkpoint(sym)
+        ids, rounds = None, 0
+        if n_edges:
+            t = pairs.toArrow()
+            ids, labels, rounds = _driver_labels(
+                t["src"].to_numpy(), t["dst"].to_numpy()
+            )
+        free_checkpoint(pairs)
         LAST_STATS.update(rounds=rounds, n_sym_edges=n_edges)
         if ids is None:
-            return vertices.select("id", F.col("id").alias("cluster_id"))
+            return vertices.withColumn("cluster_id", F.col("id"))
         import pandas as pd
 
         lbl_df = vertices.sparkSession.createDataFrame(
             pd.DataFrame({"id": ids, "cluster_id": labels})
         )
-        return vertices.select("id").join(lbl_df, "id", "left").select(
-            "id", F.coalesce("cluster_id", "id").alias("cluster_id")
+        return vertices.join(lbl_df, "id", "left").select(
+            *vertices.columns, F.coalesce("cluster_id", "id").alias("cluster_id")
         )
 
     # ---- distributed loop (edge set above the driver gate) ----
@@ -157,6 +174,9 @@ def connected_components(
     # dup edges are tiny relative to the corpus and per-iteration latency is
     # dominated by task scheduling when partitions are near-empty.
     parts = max(4, min(256, n_edges // 50_000 + 1))
+    sym = pairs.union(
+        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
     sym_parted = sym.repartition(parts, "dst")
     # Only vertices touching an edge can ever change label; isolated vertices
     # keep cluster_id = id and never enter the loop. At web scale dup-edge
@@ -221,13 +241,13 @@ def connected_components(
             " returning partial labels (components may be over-split)",
             RuntimeWarning,
         )
-    free_checkpoint(sym)
+    free_checkpoint(pairs)
     # the FINAL labels checkpoint backs the returned lazy frame: hand its
     # blocks to the caller's persist scope so result.release() /
     # release_persisted() frees them once outputs are materialized
     final_labels = labels
     track_release(lambda: free_checkpoint(final_labels))
     # fold isolated vertices back in with their own id as the label
-    return vertices.select("id").join(labels, "id", "left").select(
-        "id", F.coalesce("cluster_id", "id").alias("cluster_id")
+    return vertices.join(labels, "id", "left").select(
+        *vertices.columns, F.coalesce("cluster_id", "id").alias("cluster_id")
     )

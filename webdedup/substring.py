@@ -34,8 +34,8 @@ def substring_pairs(
     Arrow boundary — is skipped.
 
     ``texts_df`` optionally supplies the (doc_id, text) side for the final
-    contains-verify join from a separate frame (e.g. the pipeline's already-
-    persisted docs cache) so ``df`` need not carry — or cache — the text
+    contains-verify join from a separate frame (e.g. the pipeline's docs
+    checkpoint leaf) so ``df`` need not carry — or cache — the text
     column at all when ``fps_col`` is set.
 
     Without ``fps_col`` the fingerprint UDF runs in this call, as one eager
