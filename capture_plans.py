@@ -3,7 +3,7 @@
 the benchmark's ``MinHashNeighbors.kneighbors()`` self-query.
 
 Usage: cd <checkout to capture> && PYTHONPATH=. python -P <this tree>/capture_plans.py \
-           <round> <pages parquet dir> <suffix> [dedup|kneighbors]
+           <round> <pages parquet dir> <suffix> [dedup|dedup-shuffled|kneighbors]
 
 Run it from the root of the checkout whose plans it captures (this tree
 for 'after', a checkout of the previous commit for 'before'): Spark's
@@ -15,18 +15,23 @@ script runs one tiny job first and exits with a message when a worker's
 
   <round>              plan directory name, e.g. r08 -> plans/r08/
   <pages parquet dir>  a seeded benchmark input (an absolute path), e.g.
-                       .perfbench/inputs/n2000-s1/pages (dedup, after one
-                       ``perfbench/run.py --workload dedup_2k --seed 1`` run)
-                       or .perfbench/inputs/n5000-s1/pages (kneighbors, after
+                       .perfbench/inputs/n2000-s1/pages (dedup and
+                       dedup-shuffled, after one ``perfbench/run.py
+                       --workload dedup_2k --seed 1`` run) or
+                       .perfbench/inputs/n5000-s1/pages (kneighbors, after
                        ``--workload kneighbors_5k --seed 1``)
   <suffix>             'before' (run from a checkout of the previous
                        commit) or 'after' (run from this tree)
-  dedup|kneighbors     target, default dedup
+  dedup|dedup-shuffled|kneighbors
+                       target, default dedup
 
 The files land in plans/<round>/ next to this script, whichever tree ran.
 dedup: dedup_edges_analyzed_<suffix>.txt (the analyzed plan) and
 dedup_edges_final_<suffix>.txt (the final adaptive plan of the edge cache,
 read after the edge frame is materialized; nested cache fills included).
+dedup-shuffled: the dedup capture with ``broadcast_id_limit=0``, so every
+id-set semi-join is shuffled, written as
+dedup_shuffled_edges_final_<suffix>.txt.
 kneighbors: kneighbors_final_<suffix>.txt, the final adaptive plan of the
 collected edge frame of the ``kneighbors_5k`` call (k=3, 32 hashes,
 max_bin_size=50, fast=False, jaccard) over the pages' token-id sets.
@@ -125,10 +130,10 @@ def check_worker_tree(spark) -> None:
         )
 
 
-def capture_dedup(spark, pages_path: str) -> dict:
+def capture_dedup(spark, pages_path: str, cfg: DedupConfig | None = None) -> dict:
     """Plans of a materialized ``DedupResult.pairs``, by file stem."""
     pages = spark.read.parquet(pages_path).select("url", "warc_ts", "text", "lang")
-    res = dedup(pages, DedupConfig())
+    res = dedup(pages, cfg or DedupConfig())
     analyzed = res.pairs._jdf.queryExecution().analyzed().toString()
     res.pairs.count()
     final = edge_cache_plan(res.pairs)
@@ -141,6 +146,12 @@ def capture_dedup(spark, pages_path: str) -> dict:
     )
     res.release()
     return {"dedup_edges_analyzed": analyzed, "dedup_edges_final": final}
+
+
+def capture_dedup_shuffled(spark, pages_path: str) -> dict:
+    """Final plan of the edge cache with every id-set semi-join shuffled."""
+    plans = capture_dedup(spark, pages_path, DedupConfig(broadcast_id_limit=0))
+    return {"dedup_shuffled_edges_final": plans["dedup_edges_final"]}
 
 
 def capture_kneighbors(spark, pages_path: str) -> dict:
@@ -172,7 +183,11 @@ def capture_kneighbors(spark, pages_path: str) -> dict:
 if __name__ == "__main__":
     ROUND, PAGES, SUFFIX = sys.argv[1:4]
     target = sys.argv[4] if len(sys.argv) > 4 else "dedup"
-    capture = {"dedup": capture_dedup, "kneighbors": capture_kneighbors}[target]
+    capture = {
+        "dedup": capture_dedup,
+        "dedup-shuffled": capture_dedup_shuffled,
+        "kneighbors": capture_kneighbors,
+    }[target]
     plan_dir = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "plans", ROUND
     )

@@ -86,6 +86,26 @@ def test_ivf_values_match_brute(spark, random_emb):
         assert abs(brute[p] - got[p]) <= 1, (p, brute[p], got[p])
 
 
+def test_ivf_self_query_reads_checkpoint_and_matches_bipartite(spark, clustered_emb):
+    """The self-query runs the cell UDF once, into an eager checkpoint
+    leaf: its plan reads no cache. Its rows equal those of the bipartite
+    face querying the same vectors against themselves."""
+    from webdedup.joins import scoped_persists
+
+    C = ann.train_ivf_centroids(clustered_emb, n_cells=32)
+    with scoped_persists() as scope:
+        self_q = ann.ivf_topk(clustered_emb, dim=64, k=5, centroids=C)
+    try:
+        plan = self_q._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan
+        bipartite = ann.ivf_topk(
+            clustered_emb, dim=64, k=5, centroids=C, queries=clustered_emb
+        )
+        assert sorted(self_q.collect()) == sorted(bipartite.collect())
+    finally:
+        scope.release()
+
+
 def test_sign_lsh_finds_planted_near_dups(spark, clustered_emb):
     """cosine_topk_lsh's role is near-dup retrieval (cos >= ~0.9), not
     generic top-k on random data: within-cluster planted pairs must be

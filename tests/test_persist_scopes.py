@@ -67,7 +67,7 @@ def test_dedup_result_release_drops_only_its_caches(spark):
 
 
 def test_derived_input_computes_transformation_exactly_once(spark):
-    """dedup()'s upfront gating count must not re-run an expensive upstream
+    """dedup()'s corpus count must not re-run an expensive upstream
     transformation: it is observed on the action that fills the docs leaf,
     the only reader of the input, so a counting UDF in its lineage
     evaluates exactly n_rows times across the whole pipeline run, and the
@@ -179,15 +179,16 @@ def test_dedup_release_loop_keeps_persisted_rdds_flat(spark, run_jobs):
     blocks the run's scope owns. Materializing all of them and then
     releasing leaves nothing pinned, so a loop of runs stays flat. The
     page and unique-text counts are observed on the actions that fill the
-    docs and featurize leaves, so collecting the counters runs only the
-    jobs of the three lazy ones."""
+    docs and featurize leaves, and the edge count on connected
+    components' checkpoint action, so collecting the counters runs only
+    the jobs of the two lazy ones."""
     pages, _ = pages_dataframe(spark, n=60, seed=21)
     pages = pages.select("url", "text")
     n_texts = pages.select("text").distinct().count()
     jsc = spark.sparkContext._jsc
     base = jsc.getPersistentRDDs().size()
     sizes = []
-    lazy = ("verified_pairs", "clusters", "duplicate_docs")
+    lazy = ("clusters", "duplicate_docs")
     for i in range(3):
         res = dedup(pages, CFG)
         counters, n_jobs = run_jobs(

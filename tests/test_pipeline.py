@@ -6,6 +6,7 @@ approximate path against the exact one).
 """
 
 import itertools
+import re
 
 import numpy as np
 import pytest
@@ -178,14 +179,27 @@ def test_dedup_job_budget(pages, run_jobs):
     assert n_jobs == 31, n_jobs
 
 
-def test_broadcast_id_limit_shuffled_semi_joins_match_default(spark, pages, result):
-    """Above broadcast_id_limit every id-set semi-join takes the persisted,
-    counted, shuffled path; the edges and clusters must not change."""
+def test_broadcast_id_limit_shuffled_semi_joins_match_default(
+    spark, pages, result, run_jobs
+):
+    """With a bound above broadcast_id_limit every id-set semi-join is a
+    plain shuffled join: no count job and no cache per id set, so the run
+    takes 33 jobs to the default path's 31, and the edge plan's one cache
+    is the edge set itself. The edges and clusters must not change."""
     from dataclasses import replace
 
     pages_df, _ = pages
-    res = dedup(pages_df, replace(CFG, broadcast_id_limit=1))
+
+    def run():
+        res = dedup(pages_df, replace(CFG, broadcast_id_limit=1))
+        res.clusters.collect()
+        return res
+
+    res, n_jobs = run_jobs("test_broadcast_id_limit_shuffled", run)
     try:
+        assert n_jobs == 33, n_jobs
+        plan = res.pairs._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("InMemoryRelation") == 1, plan
         cols = ["a", "b", "jaccard", "kind"]
         assert sorted(res.pairs.select(*cols).collect()) == sorted(
             result.pairs.select(*cols).collect()
@@ -303,20 +317,29 @@ def test_touching_pairs_match_full_then_filter(spark, pages):
         assert not any(a in planted_ids or b in planted_ids for a, b in got)
 
 
-def test_substring_fused_fps_path_matches_udf_path(spark, pages):
+def test_substring_fused_fps_path_matches_udf_path(spark, pages, run_jobs):
     """The fps_col+texts_df fast path (fused featurize fingerprints, texts
     re-carved from a separate frame) must return exactly the pairs the
-    standalone per-pass-UDF path returns."""
+    standalone per-pass-UDF path returns. The UDF path, called with no
+    ``known_max``, broadcasts its texts semi-join without a count job."""
     from webdedup.signatures import featurize
     from webdedup.substring import substring_pairs
 
     pages_df, _ = pages
     cfg = DedupConfig()
     docs = pages_df.select(F.xxhash64("url").alias("doc_id"), "text")
-    via_udf = {
-        (r["a"], r["b"])
-        for r in substring_pairs(docs, cfg).collect()
-    }
+
+    def run():
+        out = substring_pairs(docs, cfg)
+        return out, {(r["a"], r["b"]) for r in out.collect()}
+
+    (udf_path, via_udf), n_jobs = run_jobs("test_substring_udf_path", run)
+    # the fingerprint checkpoint's observed row count bounds the pair ids,
+    # so the texts semi-join broadcasts with no count job of its own
+    assert n_jobs == 10, n_jobs
+    executed = udf_path._jdf.queryExecution().executedPlan().toString()
+    semi = r"BroadcastHashJoin \[doc_id#\d+L\], \[doc_id#\d+L\], LeftSemi"
+    assert re.search(semi, executed), executed
     feat = featurize(docs, cfg, with_substring_fps=True).select(
         "doc_id", "substr_fps"
     )

@@ -135,6 +135,10 @@ def ivf_topk(
     to a different frame (bipartite: e.g. only a new snapshot's vectors
     query, while ``emb`` — the full store — is searched); self-pairs are
     masked by id either way.
+
+    The self-query (``queries=None``) runs the assignment UDF in this call,
+    into one eager checkpoint leaf owned by the caller's persist scope
+    (webdedup.joins): materialize the result before releasing that scope.
     """
     if centroids is not None:
         C = np.asarray(centroids, dtype=np.float64)
@@ -143,20 +147,6 @@ def ivf_topk(
             emb, n_cells=n_cells, col=col, seed=seed, train_sample=train_sample
         )
     P = min(nprobe, C.shape[0])
-
-    @pandas_udf(IntegerType())
-    def assign_cell(v: pd.Series) -> pd.Series:
-        X = np.array(list(v), dtype=np.float64)
-        nrm = np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        return pd.Series((X / nrm @ C.T).argmax(axis=1).astype("int32"))
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def probe_cells(v: pd.Series) -> pd.Series:
-        X = np.array(list(v), dtype=np.float64)
-        nrm = np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        sim = X / nrm @ C.T
-        top = np.argsort(-sim, axis=1)[:, :P].astype("int32")
-        return pd.Series(list(top))
 
     _CELL_PROBE_SCHEMA = StructType(
         [
@@ -167,8 +157,7 @@ def ivf_topk(
 
     @pandas_udf(_CELL_PROBE_SCHEMA)
     def assign_and_probe(v: pd.Series) -> pd.DataFrame:
-        # one X @ C.T serves BOTH faces; cell via argmax and probes via
-        # argsort exactly like the split UDFs (identical tie behavior)
+        # one X @ C.T serves BOTH faces: cell via argmax, probes via argsort
         X = np.array(list(v), dtype=np.float64)
         nrm = np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
         sim = X / nrm @ C.T
@@ -179,24 +168,16 @@ def ivf_topk(
 
     if queries is None:
         # self-query: the data and probe sides are the SAME vectors, so
-        # one fused Arrow pass (one matmul per vector) + a persist
-        # replaces two full UDF scans of the table; released by the
-        # caller via release_persisted()/scope (webdedup.joins).
-        from webdedup.joins import track_persist
+        # one fused Arrow pass (one matmul per vector) into an eager
+        # checkpoint leaf (webdedup.pipeline's caching rule) serves both
+        from webdedup.joins import track_checkpoint
 
-        both = track_persist(
+        both = track_checkpoint(
             emb.select(
                 "vec_id", F.col(col).alias("_v"),
                 assign_and_probe(F.col(col)).alias("_cp"),
             )
         )
-        # fill the cache BEFORE the cogroup consumes it twice: its data-
-        # and probes-side shuffle-map stages are submitted concurrently,
-        # and tasks racing a cold cache re-run the UDF per side (block-
-        # level dedup is per-BlockManager — on a cluster the fusion would
-        # silently degrade back to two full passes; same pathology the
-        # dedup pipeline's eager feat checkpoint guards against)
-        both.count()
         data = both.select("vec_id", "_v", F.col("_cp.cell").alias("cell"))
         probes = both.select(
             F.col("vec_id").alias("qid"),
@@ -205,12 +186,13 @@ def ivf_topk(
         )
     else:
         data = emb.select(
-            "vec_id", F.col(col).alias("_v"), assign_cell(F.col(col)).alias("cell")
+            "vec_id", F.col(col).alias("_v"),
+            assign_and_probe(F.col(col)).cell.alias("cell"),
         )
         probes = queries.select(
             F.col("vec_id").alias("qid"),
             F.col(col).alias("_q"),
-            F.explode(probe_cells(F.col(col))).alias("cell"),
+            F.explode(assign_and_probe(F.col(col)).probes).alias("cell"),
         )
 
     def _rerank(qdf: pd.DataFrame, ddf: pd.DataFrame) -> pd.DataFrame:

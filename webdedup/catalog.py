@@ -214,7 +214,7 @@ class Catalog:
     ) -> int:
         """Rows appended in snapshots (after, upto] from parquet footers —
         no Spark job (the Iceberg analogue reads the snapshot's manifest
-        stats). Used to bound id-set sizes for broadcast gating without a
+        stats). Used to bound id-set sizes for the broadcast choice without a
         blocking count() action."""
         import pyarrow.parquet as pq
 

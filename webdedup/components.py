@@ -8,8 +8,8 @@ threshold over these edges IS connectivity).
 The edge frame is read once, by one eager checkpoint of its (a, b) rows
 whose observed row count n sizes the symmetric edge set (both
 orientations, 2n rows) without a count job. Two execution paths, chosen
-by a size gate on that count (the same gate philosophy as
-webdedup.joins.semi_join_ids):
+by a size gate on that count (as webdedup.joins.semi_join_ids chooses
+its broadcast from an observed bound, not a job):
 
 * **small edge sets** (<= ``collect_edge_limit`` sym rows, default 4M):
   one Arrow collect of the n one-orientation rows (≈ 32 MB at the gate;

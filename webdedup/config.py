@@ -8,6 +8,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+#: default largest id-set bound that broadcasts in the semi-joins of
+#: webdedup.joins; above it the join shuffles instead of OOMing
+BROADCAST_ID_LIMIT = 2_000_000
+
 
 @dataclass(frozen=True)
 class DedupConfig:
@@ -27,9 +31,7 @@ class DedupConfig:
     substring_window: int = 96            # winnowing window; guarantee: any shared
                                           # run >= window+k-1 = 159 bytes fingerprints
                                           # (whole-page embeds; ~3x sparser than k=48/w=32)
-    broadcast_id_limit: int = 2_000_000   # max id-set size for broadcast semi-joins
-                                          # (webdedup.joins); above it the join
-                                          # degrades to a shuffle instead of OOMing
+    broadcast_id_limit: int = BROADCAST_ID_LIMIT
     # --- execution ---
     shuffle_partitions: int = 32
 

@@ -166,12 +166,11 @@ class IncrementalDedup:
             w = w.withColumn("rep_id", F.lit(None).cast("long"))
         w = w.withColumn("rep", F.coalesce("rep_id", "batch_rep"))
         uniq_ids = w.where(F.col("doc_id") == F.col("rep")).select("doc_id")
-        # size-gated broadcast semi-join: broadcasts the batch-sized id set,
-        # degrades to a shuffle join above cfg.broadcast_id_limit
-        # footer-derived size bounds: |uniq_ids| <= batch rows, and the
-        # verify/substring id sets are bounded by the full features corpus
-        # (store + batch) — skips the blocking gating counts when they
-        # already clear the broadcast limit (see webdedup.joins)
+        # footer-derived size bounds choose each semi-join with no job:
+        # |uniq_ids| <= batch rows, and the verify/substring id sets are
+        # bounded by the full features corpus (store + batch); at or under
+        # cfg.broadcast_id_limit the ids broadcast, above it the join
+        # shuffles (see webdedup.joins)
         n_batch = self.source.row_count(table, after=last, upto=cur)
         n_corpus = n_batch + (
             self.work.row_count(DOCS) if self.work.exists(DOCS) else 0

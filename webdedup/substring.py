@@ -9,7 +9,7 @@ candidate generation is a bucket join, never a quadratic scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from webdedup.config import DedupConfig
 from webdedup.joins import semi_join_ids, track_checkpoint
@@ -38,9 +38,14 @@ def substring_pairs(
     checkpoint leaf) so ``df`` need not carry — or cache — the text
     column at all when ``fps_col`` is set.
 
+    ``known_max`` bounds the number of doc ids in pairs and chooses the
+    texts semi-join (:func:`webdedup.joins.semi_join_ids`); ``None`` means
+    no bound, and the join shuffles.
+
     Without ``fps_col`` the fingerprint UDF runs in this call, as one eager
     checkpoint owned by the caller's persist scope: materialize the result
-    before releasing that scope.
+    before releasing that scope. The action that fills it observes the row
+    count of ``df``, which bounds the pair ids when ``known_max`` is None.
     """
     if fps_col is not None:
         fps = df.select("doc_id", F.col(fps_col).alias("_fps"))
@@ -48,9 +53,13 @@ def substring_pairs(
         # the fingerprint UDF feeds both the hot-count agg and the self-join:
         # run it once, into a checkpoint leaf (pipeline.py module docstring)
         fp_udf = make_substring_fp_udf(cfg)
+        ob = Observation()
         fps = track_checkpoint(
             df.select("doc_id", fp_udf(F.col(text_col)).alias("_fps"))
+            .observe(ob, F.count(F.lit(1)).alias("n"))
         )
+        if known_max is None:
+            known_max = ob.get["n"]
     rows = (
         fps.withColumn("n_fp", F.size("_fps"))
         .where(F.col("n_fp") > 0)
@@ -85,11 +94,11 @@ def substring_pairs(
     )
     # Pull only the texts that appear in a candidate pair before shuffling
     # them into the verify joins: candidate ids are few, full texts are the
-    # widest column in the table — the size-gated broadcast semi-join
+    # widest column in the table — the bounded broadcast semi-join
     # (webdedup.joins) keeps the two text shuffles proportional to
-    # candidates, not corpus, and degrades to a shuffle join instead of
-    # OOMing when candidate volume outgrows the limit. The id set is an
-    # explode, as in verify.attach_shingles, so it reuses `shared`'s exchange.
+    # candidates, not corpus, and shuffles instead of OOMing when the
+    # bound is above the limit. The id set is an explode, as in
+    # verify.attach_shingles, so it reuses `shared`'s exchange.
     pair_ids = shared.select(F.explode(F.array("a", "b")).alias("doc_id")).distinct()
     text_src = texts_df if texts_df is not None else df
     texts = semi_join_ids(

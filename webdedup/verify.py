@@ -14,6 +14,7 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import DoubleType
 
 from webdedup import kernels as K
+from webdedup.config import BROADCAST_ID_LIMIT
 from webdedup.joins import semi_join_ids
 
 
@@ -26,13 +27,16 @@ def jaccard_udf(a: pa.Array, b: pa.Array) -> pa.Array:
 
 
 def attach_shingles(
-    pairs: DataFrame, feat: DataFrame, max_broadcast_ids: int = 2_000_000,
+    pairs: DataFrame, feat: DataFrame,
+    max_broadcast_ids: int = BROADCAST_ID_LIMIT,
     known_max: int | None = None,
 ) -> DataFrame:
     """Join (a, b) pairs to both sides' shingle arrays, narrowing feat to
-    the pair ids first (size-gated semi-join, webdedup.joins). The id set
-    explodes ``pairs``: no distinct is pushed through a Generate, so it
-    reuses the deduped pairs' exchange instead of re-running the joins."""
+    the pair ids first (bounded semi-join, webdedup.joins: broadcast when
+    ``known_max`` is at or under ``max_broadcast_ids``, shuffled when it
+    is above or None). The id set explodes ``pairs``: no distinct is
+    pushed through a Generate, so it reuses the deduped pairs' exchange
+    instead of re-running the joins."""
     pair_ids = pairs.select(F.explode(F.array("a", "b")).alias("doc_id")).distinct()
     sh = semi_join_ids(
         feat.select(F.col("doc_id"), F.col("shingles"), F.col("n_shingles")),
@@ -83,10 +87,12 @@ def exact_jaccard_gate(pairs_with_shingles: DataFrame, threshold: float) -> Data
 
 def verified_pairs(
     pairs: DataFrame, feat: DataFrame, threshold: float,
-    max_broadcast_ids: int = 2_000_000,
+    max_broadcast_ids: int = BROADCAST_ID_LIMIT,
     known_max: int | None = None,
 ) -> DataFrame:
-    """(a, b, jaccard) for candidate pairs passing the exact-Jaccard gate."""
+    """(a, b, jaccard) for candidate pairs passing the exact-Jaccard gate.
+    ``known_max`` bounds the pair ids as in :func:`attach_shingles`;
+    ``None`` means no bound, and the shingles semi-join shuffles."""
     w = attach_shingles(pairs, feat, max_broadcast_ids, known_max=known_max)
     return exact_jaccard_gate(w, threshold).select("a", "b", "jaccard")
 
