@@ -35,7 +35,10 @@ dedup_shuffled_edges_final_<suffix>.txt.
 kneighbors: kneighbors_final_<suffix>.txt, the final adaptive plan of the
 collected edge frame of the ``kneighbors_5k`` call (k=3, 32 hashes,
 max_bin_size=50, fast=False, jaccard) over the pages' token-id sets.
-Input file locations are shown as ``file:<pages>``. The script prints the
+Input file locations are shown as ``file:<pages>``, and a broadcast join's
+build side as ``Build<side>``: AQE picks it from run-time sizes, so the
+same tree and input can print ``BuildLeft`` in one capture and
+``BuildRight`` in the next. The script prints the
 plan-shape counts tests/test_pipeline.py asserts (dedup), or the cache and
 checkpoint scans and query stages of the final plan (kneighbors).
 """
@@ -60,6 +63,13 @@ def edge_cache_plan(pairs) -> str:
         pairs._jdf.queryExecution().withCachedData().cacheBuilder()
         .cachedPlan().toString()
     )
+
+
+def stable_plan(plan: str) -> str:
+    """``plan`` with what differs from run to run on the same tree and
+    input masked: input file locations and broadcast joins' build sides."""
+    plan = re.sub(r"file:[^\],\s]*", "file:<pages>", plan)
+    return re.sub(r"\bBuild(Left|Right)\b", "Build<side>", plan)
 
 
 def _drop_subtrees(plan: str, marker: str) -> str:
@@ -93,7 +103,7 @@ def plan_shape(plan: str) -> dict:
     cache the edge plan reads, nested ones (such as a cached input under a
     cached frame) included. A nested cache's plan is printed under every
     scan of it, so its nodes count once per scan."""
-    final = final_sections(plan)
+    final = stable_plan(final_sections(plan))
 
     def inner_joins(k1, k2):
         side = rf"\[{k1}#\d+L?, {k2}#\d+L?\]"
@@ -199,6 +209,6 @@ if __name__ == "__main__":
     os.makedirs(plan_dir, exist_ok=True)
     for stem, plan in plans.items():
         with open(os.path.join(plan_dir, f"{stem}_{SUFFIX}.txt"), "w") as f:
-            f.write(re.sub(r"file:[^\],\s]*", "file:<pages>", plan))
+            f.write(stable_plan(plan))
     release_persisted()
     spark.stop()

@@ -213,6 +213,33 @@ def test_classifier_score_runs_the_knn_chain_once(spark, data, run_jobs):
     assert jobs["score"] == jobs["count"], jobs
 
 
+def test_kneighbors_exact_rounds_plan_and_job_budget(spark, data, run_jobs):
+    """The self-query's exact rounds are one mapInArrow pass each (score
+    and rank() in Python, no Arrow UDF node and no Window over the
+    distance), over pairs partitioned by query_id once per round. Jobs of
+    one collect with the fitted row table built: 11 (the parent's
+    scalar-UDF rounds with a rank() window each ran 14)."""
+    import re
+
+    from capture_plans import final_sections
+
+    nn = MinHashNeighbors(n_neighbors=3, number_of_hash_functions=64, max_bin_size=10_000)
+    nn.fit(data[0])
+    with scoped_persists() as scope:
+        nn.kneighbors().count()  # builds the fitted row table
+    scope.release()
+    with scoped_persists() as scope:
+        edges = nn.kneighbors()
+        _, n_jobs = run_jobs("knn-budget", edges.collect)
+        plan = final_sections(edges._jdf.queryExecution().executedPlan().toString())
+    scope.release()
+    assert "ArrowEvalPython" not in plan
+    assert not [ln for ln in plan.splitlines() if "Window [" in ln and "distance" in ln]
+    # the round-1 pass is printed under each scan of its cache
+    assert len(set(re.findall(r"MapInArrow \S+\(.*?\)#(\d+)", plan))) == 2
+    assert n_jobs == 11, n_jobs
+
+
 def test_predict_proba_sums_to_one(spark, data):
     df, y, _, _ = data
     clf = MinHashClassifier(
@@ -346,27 +373,46 @@ def _ids(r):
     return np.asarray(r, dtype=np.int64)
 
 
+def _batches(qid, cid, size):
+    """(query_id, cand_id) record batches of ``size`` rows."""
+    return [
+        pa.RecordBatch.from_arrays(
+            [pa.array(qid[i : i + size], pa.int64()), pa.array(cid[i : i + size], pa.int64())],
+            ["query_id", "cand_id"],
+        )
+        for i in range(0, len(qid), size)
+    ]
+
+
 @pytest.mark.parametrize("typ", [pa.binary(), pa.large_binary()])
 def test_packed_metric_kernels_match_numpy_kernels(typ):
     """The exact re-rank's and the dedup verify's Arrow kernels read
-    zero-copy views of packed rows. The re-rank UDF gets only (query_id,
-    cand_id) and looks both rows up in row tables; it agrees exactly with
-    kernels.jaccard_sorted / sparse_metric on pairs in any order (one
-    query split over many runs), empty rows on either or both sides,
-    negative ids and ids beyond uint32, explicit-query ids the fitted rows
-    lack (they still count in |q|), null value rows (= ones), null ``<u4``
+    zero-copy views of packed rows. The re-rank's mapInArrow body gets
+    only (query_id, cand_id) record batches and looks both rows up in row
+    tables; it agrees exactly with kernels.jaccard_sorted / sparse_metric
+    (euclidean's square root taken) on pairs in any order (one query split
+    over many runs), queries whose pairs span batch boundaries, empty
+    partitions and batches, empty rows on either or both sides, negative
+    ids and ids beyond uint32, explicit-query ids the fitted rows lack
+    (they still count in |q|), null value rows (= ones), null ``<u4``
     shingle blobs (= empty sets), sliced arrays whose offset is > 0 and
     Jaccard tables coded from several chunks, with 32-bit offsets and
     with the 64-bit ones ``spark.sql.execution.arrow.useLargeVarTypes``
-    sends."""
+    sends. With a k cut it keeps each query's top k by rank()."""
     from types import SimpleNamespace
 
-    from webdedup.api import _metric_udf
+    from webdedup.api import _exact_pass
     from webdedup.verify import jaccard_udf
 
-    def exact(metric, q, c):
-        udf = _metric_udf(metric, SimpleNamespace(value=q), SimpleNamespace(value=c)).func
-        return lambda qid, cid: udf(pa.array(qid, pa.int64()), pa.array(cid, pa.int64())).to_pylist()
+    def exact(metric, q, c, k=None, size=3):
+        body = _exact_pass(metric, SimpleNamespace(value=q), SimpleNamespace(value=c), k)
+
+        def run(qid, cid):
+            out = list(body(iter(_batches(qid, cid, size))))
+            cols = [[x for b in out for x in b.column(j).to_pylist()] for j in range(out[0].num_columns)] if out else []
+            return cols[2] if k is None and cols else cols
+
+        return run
 
     # row 0 of each list is sliced off (arr.offset == 1); row ids unsorted
     fit = [[0], [7], [], [3, 1, 2], [5, 2**40, 7], [9, 4, -3], [-3, 2**40, 1]]
@@ -387,13 +433,26 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
     def ones_if_null(v, r):
         return np.ones(len(r)) if v is None else np.asarray(v, dtype=np.float64)
 
+    def top(qi, ci, dist, k, desc):
+        """Each query's pairs of rank() <= k over (distance [desc], cand_id)."""
+        kept = []
+        for q in sorted(set(qi)):
+            run = sorted(
+                (-d if desc else d, c) for x, c, d in zip(qi, ci, dist) if x == q
+            )
+            kept += [(q, c, -d if desc else d, 1 + run.index((d, c))) for d, c in run]
+        kept = [r for r in kept if r[3] <= k]
+        return [list(col) for col in zip(*kept)]
+
     for q, qv, qid, t, tc in ((fit, fvals, fit_ids, ft, fc), (query, qvals, q_ids, qt, qc)):
         # query varies fastest (every run holds one pair), then long runs
+        # that span the 3-row batches
         pairs = [(i, j) for j in range(len(fit)) for i in range(len(q))]
         pairs += [(i, j) for i in range(len(q)) for j in range(len(fit))]
         qi, ci = [qid[i] for i, _ in pairs], [fit_ids[j] for _, j in pairs]
         want = [1.0 - K.jaccard_sorted(_ids(q[i]), _ids(fit[j])) for i, j in pairs]
         assert exact("jaccard", tc, fc)(qi, ci) == want
+        by_metric = {"jaccard": (want, tc, fc)}
         for metric in ("euclidean", "cosine"):
             want = [
                 K.sparse_metric(
@@ -402,8 +461,26 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
                 )
                 for i, j in pairs
             ]
+            if metric == "euclidean":
+                want = list(np.sqrt(want))
             assert exact(metric, t, ft)(qi, ci) == want
+            by_metric[metric] = (want, t, ft)
+        # the k cut reads pairs sorted by query, one query over 2 batches
+        n = len(q) * len(fit)
+        order = sorted(range(n), key=lambda x: qi[n + x])
+        sq, sc = [qi[n + x] for x in order], [ci[n + x] for x in order]
+        for metric, (want, a, b) in by_metric.items():
+            sd = [want[n + x] for x in order]
+            for k in (1, 2, 4):
+                want_k = top(sq, sc, sd, k, metric == "cosine")
+                assert exact(metric, a, b, k)(sq, sc) == want_k
     assert exact("jaccard", qc, fc)([], []) == []
+    assert exact("jaccard", qc, fc, 2)([], []) == []
+    body = _exact_pass("jaccard", SimpleNamespace(value=qc), SimpleNamespace(value=fc), 2)
+    empty_batch = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.int64())] * 2, ["query_id", "cand_id"]
+    )
+    assert list(body(iter([empty_batch]))) == []
     nc, _ = K.code_rows([], pa.chunked_array([], typ), vocab)
     assert exact("jaccard", nc, fc)([], []) == []
     rep = _packed([[1], [2], [5]], "<i8", typ)
@@ -433,6 +510,44 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
     assert exact("jaccard", ec, ec)([1, 2], [2, 1]) == [0.0, 0.0]
     assert exact("euclidean", et, et)([1, 2], [2, 1]) == [0.0, 0.0]
     assert jaccard_udf.func(empty, empty).to_pylist() == [1.0, 1.0]
+
+
+@pytest.mark.parametrize("desc", [False, True])
+def test_rank_cut_matches_spark_rank(spark, desc):
+    """kernels.rank_cut keeps exactly the pairs, with the same ranks, as
+    F.rank() over (distance [desc], cand_id) per query filtered to
+    rank <= k, the order the exact rounds ranked by before: ties in
+    distance, repeated (distance, cand_id) pairs sharing a rank, the cut
+    falling inside a tie, -0.0 equal to 0.0, and NaN ordered as Spark
+    orders it (last ascending, first descending, equal to NaN)."""
+    from pyspark.sql import Window
+
+    nan = float("nan")
+    rows = [
+        (1, 5, 0.5), (1, 3, 0.5), (1, 4, 0.2), (1, 4, 0.2), (1, 9, nan),
+        (1, 2, nan), (1, 2, nan), (1, 7, 0.9), (1, 8, -0.0), (1, 6, 0.0),
+        (1, 6, -0.0), (1, 1, 0.0),
+        (2, 1, 0.3), (2, 1, 0.3), (2, 1, 0.3), (2, 0, 0.7), (2, 5, 0.3),
+        (3, 4, nan), (3, 4, nan), (3, 1, 1.0), (3, 0, -1.0),
+        (-4, 2, 0.1),
+    ]
+    df = spark.createDataFrame(rows, "query_id long, cand_id long, distance double")
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("distance") if desc else F.asc("distance"), F.asc("cand_id")
+    )
+    ranked = df.withColumn("rnk", F.rank().over(w))
+    qid, cid, dist = (np.array(c) for c in zip(*rows))
+
+    def key(q, c, d, r):
+        return int(q), int(c), repr(float(d)), int(r)
+
+    for k in (1, 2, 3, 5, 100):
+        want = sorted(key(*r) for r in ranked.where(F.col("rnk") <= k).collect())
+        kept, rnk = K.rank_cut(qid, cid, dist, k, desc)
+        got = [key(qid[i], cid[i], dist[i], r) for i, r in zip(kept, rnk)]
+        assert sorted(got) == want, k
+        # kept is ordered by query, then rank
+        assert [(g[0], g[3]) for g in got] == sorted((g[0], g[3]) for g in got)
 
 
 def _signature_batches(spark, tmp_path, action) -> int:

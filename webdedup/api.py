@@ -28,11 +28,11 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.functions import pandas_udf
 
 from webdedup import kernels as K
 from webdedup.components import connected_components
+from webdedup.config import BROADCAST_ID_LIMIT
 from webdedup.joins import track_checkpoint, track_persist, track_release
 from webdedup.lsh import drop_hot
 
@@ -82,19 +82,63 @@ def _signature_udf(
     return sig
 
 
-def _metric_udf(metric: str, q_rows, c_rows):
-    """arrow_udf: the exact metric of (query_id, cand_id) pairs, both rows
-    looked up by id in the broadcast ``kernels.RowTable``s ``q_rows`` /
-    ``c_rows`` (kernels.table_pair_metric; reference exact refinement,
-    sparseMatrix.h:231-316). Only the ids cross the UDF boundary."""
+def _by_query(df: DataFrame) -> DataFrame:
+    """``df`` hash-partitioned by query_id into one partition per core
+    (``defaultParallelism``), so a query's collision count, its collision
+    rank and its exact round run in one stage, one Python task per core.
+    The count is not ``spark.sql.shuffle.partitions``: each Python task
+    pays a fixed start (87-98 ms from submit to the function on a 4-core
+    host), and 8 partitions on 4 cores ran each round in two waves.
+    The exchange is the caller's own, so AQE neither coalesces it by bytes
+    (which ran the rounds as 1-2 tasks on 4 cores) nor splits skewed
+    partitions of it. That is acceptable because no join reads this
+    partitioning, so AQE's skew split would have nothing to split, and a
+    query's pairs are bounded: its collisions by the signature length
+    times ``max_bin_size`` (hot buckets are dropped), its round-2 pairs by
+    ``limit`` × (``limit`` + 1)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, "query_id")
 
-    @arrow_udf(DoubleType())
-    def exact_metric(q: pa.Array, c: pa.Array) -> pa.Array:
-        return pa.array(
-            K.table_pair_metric(q_rows.value, c_rows.value, q.to_numpy(), c.to_numpy(), metric)
+
+def _exact_pass(metric: str, q_rows, c_rows, k: int | None):
+    """mapInArrow body of an exact round over (query_id, cand_id) batches
+    sorted by query_id within the partition: each pair's exact metric,
+    both rows looked up by id in the broadcast ``kernels.RowTable``s
+    ``q_rows`` / ``c_rows`` (kernels.table_pair_metric; reference exact
+    refinement, sparseMatrix.h:231-316), as 'distance' (euclidean's square
+    root taken, as the reference's output does, nearestNeighbors.cpp:357).
+    With ``k`` each query keeps its top k by ``kernels.rank_cut`` with
+    their 'rnk' (cosine is a similarity, ranked descending like
+    mapSortDescByValueFloat, sparseMatrix.h:313; the distances ascending,
+    sparseMatrix.h:269), so a query's pairs are scored and ranked in one
+    pass: the last query of a batch is carried into the next, and a worker
+    holds at most one batch plus one query's pairs."""
+
+    def score(qid, cid):
+        d = K.table_pair_metric(q_rows.value, c_rows.value, qid, cid, metric)
+        if metric == "euclidean":
+            d = np.sqrt(d)
+        cols = [qid, cid, d]
+        if k is not None:
+            kept, rnk = K.rank_cut(qid, cid, d, k, descending=metric == "cosine")
+            cols = [qid[kept], cid[kept], d[kept], rnk.astype(np.int32)]
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c) for c in cols], ["query_id", "cand_id", "distance", "rnk"][: len(cols)]
         )
 
-    return exact_metric
+    def run(batches):
+        qid = cid = np.empty(0, np.int64)
+        for b in batches:
+            qid = np.concatenate([qid, b.column(0).to_numpy()])
+            cid = np.concatenate([cid, b.column(1).to_numpy()])
+            if qid.size:
+                cut = np.searchsorted(qid, qid[-1])
+                if cut:
+                    yield score(qid[:cut], cid[:cut])
+                qid, cid = qid[cut:], cid[cut:]
+        if qid.size:
+            yield score(qid, cid)
+
+    return run
 
 
 def _row_table(feat: DataFrame, metric: str, name: str, vocab=None):
@@ -124,6 +168,7 @@ class _FittedRows:
         self._leaf = leaf
         self._lock = threading.Lock()
         self._tables = {}  # metric == "jaccard" -> (broadcast, vocab)
+        self.n_rows = None  # the leaf's row count, once a table is built
 
     def get(self, metric: str):
         """→ (the broadcast table, the fitted vocabulary or None)."""
@@ -132,6 +177,7 @@ class _FittedRows:
             if kind not in self._tables:
                 name = "the fitted rows (fit / partial_fit)"
                 table, vocab = _row_table(self._leaf, metric, name)
+                self.n_rows = table.ids.size
                 bc = self._leaf.sparkSession.sparkContext.broadcast(table)
                 self._tables[kind] = bc, vocab
             return self._tables[kind]
@@ -446,6 +492,7 @@ class MinHashNeighbors:
         )
         return (
             q.join(idx_ok, ["slot", "hash"])
+            .transform(_by_query)
             .groupBy("query_id", "cand_id")
             .agg(F.count("*").alias("collisions"))
         )
@@ -470,15 +517,6 @@ class MinHashNeighbors:
             .withColumn("rnk", F.rank().over(w))
             .where(F.col("rnk") <= k * self.excess_factor)
         )
-
-    def _rank_order(self, metric: str):
-        """cosine is a similarity (higher = closer, sorted DESC like
-        mapSortDescByValueFloat, sparseMatrix.h:313); euclidean/jaccard are
-        distances (ASC, sparseMatrix.h:269)."""
-        first = (
-            F.desc("distance") if metric == "cosine" else F.asc("distance")
-        )
-        return Window.partitionBy("query_id").orderBy(first, F.asc("cand_id"))
 
     def _query_rows(self, query_feat: DataFrame):
         """The broadcast row table of the query side of the exact re-rank:
@@ -506,45 +544,34 @@ class MinHashNeighbors:
         track_release(rows.destroy)
         return rows
 
-    def _with_exact_metric(self, cand: DataFrame, q_rows) -> DataFrame:
-        """Attach the exact metric value as 'distance' to (query_id, cand_id)
-        pairs — the shared core of Q7/Q9 refinement and Q5 radius filtering.
-        Only the two ids of a pair reach the metric UDF, which looks both
-        rows up in the query table ``q_rows`` and the fitted table. Pairs
-        are sorted by query_id within partitions (no exchange), so the
-        Jaccard kernel scores long runs of one query's pairs."""
-        metric = self._resolved_metric()
-        udf = _metric_udf(metric, q_rows, self._rows.get(metric)[0])
-        out = (
-            cand.select("query_id", "cand_id")
-            .sortWithinPartitions("query_id")
-            .withColumn("distance", udf("query_id", "cand_id"))
-        )
-        if metric == "euclidean":
-            # the reference sorts by the squared value but sqrt()s at output
-            # time (nearestNeighbors.cpp:357) — user-visible distances are
-            # true euclidean; sqrt is monotone so ranking is unaffected
-            out = out.withColumn("distance", F.sqrt("distance"))
-        return out
-
-    def _exact_rerank(self, cand: DataFrame, q_rows, k: int) -> DataFrame:
-        """Q7/Q9: exact metric over candidates, final top-k.
+    def _exact_rerank(self, cand: DataFrame, q_rows, k: int | None) -> DataFrame:
+        """Q7/Q9: (query_id, cand_id, distance[, rnk]) — the exact metric of
+        ``cand``'s pairs and, with ``k``, each query's top k by it (rank()
+        semantics, ties in (distance, cand_id) extend the cut); k=None keeps
+        every pair (Q5). One ``mapInArrow`` pass (``_exact_pass``) per
+        partition, after an in-partition sort by query_id and no exchange:
+        ``cand`` must come partitioned by query_id, as ``_collisions`` and
+        round 2 leave it.
 
         Metric per ``_resolved_metric`` — squared euclidean / cosine over
         (feature, value) rows exactly like the reference's refinement
         (nearestNeighbors.cpp:150-190 → sparseMatrix.h:231-316), or Jaccard
-        for the presence-only dedup default — scored by an Arrow UDF that
-        looks both rows of a pair up in broadcast row tables (query side
-        ``q_rows``, see ``_with_exact_metric``). ``kneighbors`` runs
-        it twice on the default path: over the LSH candidates (round 1) and
-        over round 1 plus its neighbor-of-neighbor pairs (Q8 + round 2).
+        for the presence-only dedup default — looking both rows of a pair
+        up in broadcast row tables (query side ``q_rows``, see
+        ``_query_rows``); only the ids cross the Python boundary.
+        ``kneighbors`` runs it twice on the default path: over the LSH
+        candidates (round 1) and over round 1 plus its
+        neighbor-of-neighbor pairs (Q8 + round 2).
         """
-        w = self._rank_order(self._resolved_metric())
+        metric = self._resolved_metric()
+        schema = "query_id long, cand_id long, distance double" + (
+            ", rnk int" if k is not None else ""
+        )
+        body = _exact_pass(metric, q_rows, self._rows.get(metric)[0], k)
         return (
-            self._with_exact_metric(cand, q_rows)
-            .withColumn("rnk", F.rank().over(w))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "cand_id", "distance", "rnk")
+            cand.select("query_id", "cand_id")
+            .sortWithinPartitions("query_id")
+            .mapInArrow(body, schema)
         )
 
     def kneighbors(
@@ -572,6 +599,19 @@ class MinHashNeighbors:
         ``scoped_persists()`` per call, released once the result is
         materialized (a release also un-fits a model fitted inside that
         scope).
+
+        Each round moves its pairs by query_id once, into one partition
+        per core (``_by_query``), in place of the exchanges Spark would
+        plan for the pair count and a rank window; the collision count,
+        the collision rank and round 1 then run in one stage, and round 2
+        dedupes, scores and ranks in one. Each round's exact pass is one
+        ``mapInArrow`` per partition (``_exact_rerank``). That exchange is
+        of the caller's origin, which AQE neither coalesces nor splits for
+        skew; no join reads its partitioning, so there is no skewed join
+        to split, and a query's pairs are bounded by ``limit``. The
+        neighbor-of-neighbor join broadcasts the fitted rows' round-1
+        pairs when their bound, fitted rows × ``limit``, is within
+        ``config.BROADCAST_ID_LIMIT``, and is left to AQE above it.
 
         The exact rounds look both rows of each (query_id, cand_id) pair
         up in broadcast row tables: one per fitted leaf, built at its
@@ -609,7 +649,7 @@ class MinHashNeighbors:
             return round1.where(F.col("rnk") <= k)
         # round1 feeds BOTH sides of the 2-hop join AND the candidate union
         # below — without a cache the whole round-1 subtree (collision join
-        # + exact-metric UDF) executes three times (measured 26.6 s → 15.1 s
+        # + exact pass) executes three times (measured 26.6 s → 15.1 s
         # at the 200k bench corpus). A checkpoint leaf here ran the same jobs
         # with +2.4 % shuffle (kneighbors_5k seed 1), so it stays a cache.
         round1 = track_persist(round1)
@@ -621,17 +661,23 @@ class MinHashNeighbors:
                 self._query_rows(self._fitted),
                 limit,
             )
+        # base holds at most limit pairs a fitted row: broadcast it when that
+        # bound is within BROADCAST_ID_LIMIT. Left to AQE, the join was
+        # planned sort-merge in the runs where a round-1 cache scan had not
+        # reported its size yet, and one side was shuffled before the switch
+        # to a broadcast: one more job and 4 % more shuffle at kneighbors_5k.
+        mids = base.select(F.col("query_id").alias("_mid"), F.col("cand_id"))
+        if self._rows.n_rows * limit <= BROADCAST_ID_LIMIT:
+            mids = F.broadcast(mids)
         hop2 = (
             round1.select("query_id", F.col("cand_id").alias("_mid"))
-            .join(
-                base.select(F.col("query_id").alias("_mid"), F.col("cand_id")),
-                "_mid",
-            )
+            .join(mids, "_mid")
             .select("query_id", "cand_id")
         )
         cand2 = (
             round1.select("query_id", "cand_id")
             .unionByName(hop2)
+            .transform(_by_query)
             .dropDuplicates(["query_id", "cand_id"])
         )
         if self_query:
@@ -668,7 +714,7 @@ class MinHashNeighbors:
             F.col("distance") >= r if metric == "cosine" else F.col("distance") <= r
         )
         return (
-            self._with_exact_metric(approx, self._query_rows(qf))
+            self._exact_rerank(approx, self._query_rows(qf), None)
             .where(gate)
             .select("query_id", "cand_id", "distance")
         )
@@ -742,7 +788,7 @@ class MinHashNeighbors:
         verts = self._fitted.select(F.col("id"))
         if min_samples <= 1:
             return connected_components(verts, edges)
-        # three subtrees read this Python-UDF output: one eager leaf in the
+        # three subtrees read this Python pass's output: one eager leaf in the
         # caller's scope; core is a cheap aggregate over it
         edges = track_checkpoint(edges)
         # radius_neighbors self-query emits both directions of every pair

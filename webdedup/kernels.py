@@ -23,9 +23,11 @@ These are the vectorized re-expressions of the reference's C++ inner loops
                          (``computation/nearestNeighbors.cpp:122-190``)
                          scores the same value, or ``sparse_metric``, with
                          ``table_pair_metric``: only the pairs' row ids cross
-                         the UDF boundary, and both rows are looked up in a
+                         the Python boundary, and both rows are looked up in a
                          broadcast ``RowTable`` built by ``row_table`` (ids
-                         and values) or ``code_rows`` (Jaccard's codes).
+                         and values) or ``code_rows`` (Jaccard's codes);
+                         ``rank_cut`` then keeps each query's top k as
+                         Spark's ``rank()`` would.
 * ``rolling_hash`` / ``winnow`` — Rabin fingerprints + winnowing for the
                          exact-substring duplicate pass (north-rule extra).
 
@@ -469,6 +471,9 @@ def code_rows(ids, fpk: pa.ChunkedArray, vocab: np.ndarray | None = None, name: 
     return RowTable(*_by_id(ids, name), np.concatenate(off), elems, None, int(vocab.size)), vocab
 
 
+_PAIR_CHUNK = 4096
+
+
 def table_pair_metric(q: RowTable, c: RowTable, qid, cid, metric: str) -> np.ndarray:
     """:func:`sparse_metric` of each pair of rows ``(q[qid[i]], c[cid[i]])``,
     looked up by id; every id must be a row of its table. Jaccard reads
@@ -485,32 +490,46 @@ def table_pair_metric(q: RowTable, c: RowTable, qid, cid, metric: str) -> np.nda
 
     The mask does not contradict :func:`packed_pair_scores`' case for a
     per-pair loop: its temporaries are one bool per fitted vocabulary id
-    (4,021 at ``kneighbors_5k``) and one batch's candidate codes, so they
-    stay cache-resident too. Measured on ``kneighbors_5k`` (4-core host,
-    seeds 1-10, alternating pairs): a per-pair ``jaccard_sorted`` loop
-    over id tables with unsorted pairs read ``wall_s`` 7.81 s against
-    6.65 s for this kernel on sorted pairs (this kernel faster in 8/10
-    pairs); the loop spent 7.6 % less executor CPU, having no sort.
+    (4,021 at ``kneighbors_5k``) and the candidate codes of at most
+    ``_PAIR_CHUNK`` pairs, with their hits and prefix sum, however many
+    pairs a caller passes. Scored in one piece, 54,000 pairs of the
+    ``kneighbors_5k`` seed-1 pages (416 ids a row, runs of 40 pairs a
+    query, about one round-2 partition on 4 cores) took 267-295 ms and
+    408 MiB of temporaries; in 4,096-pair chunks 151-155 ms and 33 MiB
+    (one process, 7 repetitions). Measured on ``kneighbors_5k``
+    (4-core host, seeds 1-10, alternating pairs): a per-pair
+    ``jaccard_sorted`` loop over id tables with unsorted pairs read
+    ``wall_s`` 7.81 s against 6.65 s for this kernel on sorted pairs (this
+    kernel faster in 8/10 pairs); the loop spent 7.6 % less executor CPU,
+    having no sort.
     """
     qr = q.rows[np.searchsorted(q.ids, qid)]
     cr = c.rows[np.searchsorted(c.ids, cid)]
-    if qr.size == 0:
-        return np.empty(0)
-    qlen = q.off[qr + 1] - q.off[qr]
-    clen = c.off[cr + 1] - c.off[cr]
+    out = np.empty(qr.size)
     if metric != "jaccard":
-        out = np.empty(qr.size)
         for i in range(qr.size):
             a, b = slice(q.off[qr[i]], q.off[qr[i] + 1]), slice(c.off[cr[i]], c.off[cr[i] + 1])
-            va = q.vals[a] if q.vals is not None else np.ones(qlen[i])
-            vb = c.vals[b] if c.vals is not None else np.ones(clen[i])
+            va = q.vals[a] if q.vals is not None else np.ones(a.stop - a.start)
+            vb = c.vals[b] if c.vals is not None else np.ones(b.stop - b.start)
             out[i] = sparse_metric(q.elems[a], va, c.elems[b], vb, metric)
         return out
+    mask = np.zeros(c.vocab_size + 1, dtype=bool)
+    for s in range(0, qr.size, _PAIR_CHUNK):
+        e = min(s + _PAIR_CHUNK, qr.size)
+        out[s:e] = _jaccard_chunk(q, c, qr[s:e], cr[s:e], mask)
+    return out
+
+
+def _jaccard_chunk(q: RowTable, c: RowTable, qr, cr, mask) -> np.ndarray:
+    """1 - Jaccard of the rows ``(q row qr[i], c row cr[i])`` (row numbers,
+    not ids) with ``mask``, all False, over ``c``'s vocabulary; see
+    :func:`table_pair_metric`."""
+    qlen = q.off[qr + 1] - q.off[qr]
+    clen = c.off[cr + 1] - c.off[cr]
     ends = np.zeros(qr.size + 1, dtype=np.int64)
     np.cumsum(clen, out=ends[1:])
     cand = c.elems[_row_positions(c.off[cr], clen)]
     hits = np.empty(cand.size, dtype=bool)
-    mask = np.zeros(c.vocab_size + 1, dtype=bool)
     runs = np.flatnonzero(np.diff(qr)) + 1
     for s, e in zip(np.r_[0, runs], np.r_[runs, qr.size]):
         row = q.elems[q.off[qr[s]] : q.off[qr[s] + 1]]
@@ -523,6 +542,35 @@ def table_pair_metric(q: RowTable, c: RowTable, qid, cid, metric: str) -> np.nda
     union = qlen + clen - inter
     sim = np.divide(inter, union, out=np.ones(qr.size), where=union > 0)
     return 1.0 - sim
+
+
+def rank_cut(qid: np.ndarray, cid: np.ndarray, dist: np.ndarray, k: int, descending: bool):
+    """(kept, rnk): the pairs ``(qid[i], cid[i])`` of rank <= ``k`` in
+    their query, as Spark's ``F.rank()`` over
+    ``Window.partitionBy(query).orderBy(distance [desc], cand_id)``
+    ranks them, and those ranks. ``kept`` indexes the pairs ordered by
+    query, then by that order; pairs equal in (distance, cand_id) share a
+    rank, and the next rank skips past them. Distances compare as Spark
+    sorts doubles: -0.0 equals 0.0, and NaN equals NaN and is greater than
+    every number, so it ranks last ascending and first descending."""
+    nan = np.isnan(dist)
+    d = np.where(nan, 0.0, dist)
+    if descending:
+        d, nan = -d, ~nan
+    order = np.lexsort((cid, d, nan, qid))
+    q, c, d, nan = qid[order], cid[order], d[order], nan[order]
+    at = np.arange(q.size)
+    new_q = np.ones(q.size, dtype=bool)
+    new_q[1:] = q[1:] != q[:-1]
+    new_key = new_q.copy()
+    new_key[1:] |= (c[1:] != c[:-1]) | (d[1:] != d[:-1]) | (nan[1:] != nan[:-1])
+    rnk = (
+        np.maximum.accumulate(np.where(new_key, at, 0))
+        - np.maximum.accumulate(np.where(new_q, at, 0))
+        + 1
+    )
+    keep = rnk <= k
+    return order[keep], rnk[keep]
 
 
 # ----- exact-substring pass: Rabin rolling hash + winnowing (MOSS-style) -----
