@@ -149,7 +149,9 @@ def stage_lsh():
 def knn_corpus(path: str, reps: int = 2):
     """kneighbors fast=False at an arbitrary corpus (the 1M scale row the
     frozen bench.py skips — VERDICT r5 #4), same config + warmed-median
-    protocol as run_corpus_bench's 200k kneighbors op."""
+    protocol as run_corpus_bench's 200k kneighbors op: a Jaccard op over
+    each page's distinct word hashes, and a euclidean op over the same
+    words' term frequencies, which scores values in the exact re-rank."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -159,38 +161,50 @@ def knn_corpus(path: str, reps: int = 2):
     spark = _spark()
     pages = spark.read.parquet(path)
     n = pages.count()
-    feats = pages.select(
-        F.xxhash64("url").alias("id"),
-        F.array_distinct(F.transform(F.split("text", " "), F.crc32)).alias(
-            "features"
-        ),
+    words = pages.select(
+        F.xxhash64("url").alias("id"), F.transform(F.split("text", " "), F.crc32).alias("w")
+    )
+    feats = words.select("id", F.array_distinct("w").alias("features"))
+    tf = (
+        words.select("id", F.explode("w").alias("w"))
+        .groupBy("id", "w")
+        .count()
+        .groupBy("id")
+        .agg(F.sort_array(F.collect_list(F.struct("w", "count"))).alias("s"))
+        .select(
+            "id",
+            F.col("s.w").alias("features"),
+            F.col("s.count").cast("array<double>").alias("values"),
+        )
     )
 
-    def _knn():
+    def _knn(X, metric):
         nn = MinHashNeighbors(
             n_neighbors=3, number_of_hash_functions=32, max_bin_size=50,
-            fast=False, metric="jaccard",
-        ).fit(feats)
+            fast=False, metric=metric,
+        ).fit(X)
         return nn.kneighbors().count()
 
-    _knn()  # untimed full-scale warmup (bench protocol)
-    spark.catalog.clearCache()
-    release_persisted()
-    walls = []
-    rows = None
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        rows = _knn()
-        walls.append(round(time.perf_counter() - t0, 2))
+    ops = {"kneighbors": (feats, "jaccard"), "kneighbors_euclidean_tf": (tf, "euclidean")}
+    out = {"metric": "kneighbors_corpus", "path": path, "n_docs": n, "cpus": CPUS, "reps": reps}
+    for name, (X, metric) in ops.items():
+        _knn(X, metric)  # untimed full-scale warmup (bench protocol)
         spark.catalog.clearCache()
         release_persisted()
-    med = sorted(walls)[len(walls) // 2]
-    print(_json.dumps({
-        "metric": "kneighbors_corpus", "path": path, "n_docs": n,
-        "cpus": CPUS, "reps": reps, "kneighbors_sec": med,
-        "kneighbors_docs_per_sec": round(n / med, 1),
-        "rep_timings": walls, "edge_rows": rows,
-    }))
+        walls = []
+        rows = None
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            rows = _knn(X, metric)
+            walls.append(round(time.perf_counter() - t0, 2))
+            spark.catalog.clearCache()
+            release_persisted()
+        med = sorted(walls)[len(walls) // 2]
+        out.update({
+            f"{name}_sec": med, f"{name}_docs_per_sec": round(n / med, 1),
+            f"{name}_rep_timings": walls, f"{name}_edge_rows": rows,
+        })
+    print(_json.dumps(out))
     spark.stop()
 
 

@@ -396,9 +396,10 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
     ids and ids beyond uint32, explicit-query ids the fitted rows lack
     (they still count in |q|), null value rows (= ones), null ``<u4``
     shingle blobs (= empty sets), sliced arrays whose offset is > 0 and
-    Jaccard tables coded from several chunks, with 32-bit offsets and
-    with the 64-bit ones ``spark.sql.execution.arrow.useLargeVarTypes``
-    sends. With a k cut it keeps each query's top k by rank()."""
+    tables coded from several chunks, their id and value rows chunked
+    apart, with 32-bit offsets and with the 64-bit ones
+    ``spark.sql.execution.arrow.useLargeVarTypes`` sends. With a k cut it
+    keeps each query's top k by rank()."""
     from types import SimpleNamespace
 
     from webdedup.api import _exact_pass
@@ -422,11 +423,16 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
     qvals = [[0.0], [2.0, 1.0], [], [1.0, 1.0, 2.0], None, [3.0]]
     q_ids = [0, 5, 1, -2, 2**33, 4][1:]
     fpk, qpk = _packed(fit, "<i8", typ).slice(1), _packed(query, "<i8", typ).slice(1)
-    ft = K.row_table(fit_ids, fpk, _packed(fvals, "<f8", typ).slice(1))
-    qt = K.row_table(q_ids, qpk, _packed(qvals, "<f8", typ).slice(1))
-    # Jaccard's coded tables are built chunk by chunk: split the fitted rows
-    fc, vocab = K.code_rows(fit_ids, pa.chunked_array([fpk.slice(0, 3), fpk.slice(3)]))
-    qc, _ = K.code_rows(q_ids, pa.chunked_array([qpk]), vocab)
+    fvpk, qvpk = _packed(fvals, "<f8", typ).slice(1), _packed(qvals, "<f8", typ).slice(1)
+    # tables are built chunk by chunk: split the fitted rows, their values
+    # elsewhere; Jaccard reads tables without values, the others with them
+    fchunks = pa.chunked_array([fpk.slice(0, 3), fpk.slice(3)])
+    fc, vocab = K.code_rows(fit_ids, fchunks)
+    qc, _ = K.code_rows(q_ids, pa.chunked_array([qpk]), vocab=vocab)
+    fvchunks = pa.chunked_array([fvpk.slice(0, 1), fvpk.slice(1, 4), fvpk.slice(5)])
+    ft, fvocab = K.code_rows(fit_ids, fchunks, fvchunks)
+    qt, _ = K.code_rows(q_ids, pa.chunked_array([qpk]), pa.chunked_array([qvpk]), vocab)
+    assert list(fvocab) == list(vocab)
     fit, fvals, query, qvals = fit[1:], fvals[1:], query[1:], qvals[1:]
     assert 99 not in vocab and 2**41 not in vocab and -1 not in vocab
 
@@ -452,6 +458,7 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
         qi, ci = [qid[i] for i, _ in pairs], [fit_ids[j] for _, j in pairs]
         want = [1.0 - K.jaccard_sorted(_ids(q[i]), _ids(fit[j])) for i, j in pairs]
         assert exact("jaccard", tc, fc)(qi, ci) == want
+        assert exact("jaccard", t, ft)(qi, ci) == want  # values unread
         by_metric = {"jaccard": (want, tc, fc)}
         for metric in ("euclidean", "cosine"):
             want = [
@@ -481,13 +488,14 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
         [pa.array([], pa.int64())] * 2, ["query_id", "cand_id"]
     )
     assert list(body(iter([empty_batch]))) == []
-    nc, _ = K.code_rows([], pa.chunked_array([], typ), vocab)
+    nc, _ = K.code_rows([], pa.chunked_array([], typ), vocab=vocab)
     assert exact("jaccard", nc, fc)([], []) == []
     rep = _packed([[1], [2], [5]], "<i8", typ)
+    rep_vals = pa.chunked_array([pa.nulls(3, typ)])
     with pytest.raises(ValueError, match="the query X: id 3 appears more than once"):
-        K.row_table([3, 4, 3], rep, name="the query X")
+        K.code_rows([3, 4, 3], pa.chunked_array([rep]), rep_vals, vocab, "the query X")
     with pytest.raises(ValueError, match="the query X: id 3 appears more than once"):
-        K.code_rows([3, 4, 3], pa.chunked_array([rep]), vocab, "the query X")
+        K.code_rows([3, 4, 3], pa.chunked_array([rep]), vocab=vocab, name="the query X")
 
     # verify: sorted-unique <u4 shingle blobs, the same row shapes plus a
     # null blob; an element-size mistake in the decoder misplaces rows
@@ -505,7 +513,7 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
     # every row empty: the batch's data buffer holds no bytes
     empty = _packed([[], []], "<i8", typ)
     assert empty.buffers()[2].size == 0
-    et = K.row_table([1, 2], empty, pa.nulls(2, typ))
+    et, _ = K.code_rows([1, 2], pa.chunked_array([empty]), pa.chunked_array([pa.nulls(2, typ)]))
     ec, _ = K.code_rows([1, 2], pa.chunked_array([empty]))
     assert exact("jaccard", ec, ec)([1, 2], [2, 1]) == [0.0, 0.0]
     assert exact("euclidean", et, et)([1, 2], [2, 1]) == [0.0, 0.0]

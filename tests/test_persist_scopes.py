@@ -311,13 +311,13 @@ def test_released_fit_leaf_unfits_model(spark, tmp_path):
     with scoped_persists() as old:
         nn = _model().fit(X)
         assert nn.kneighbors().count() > 0
-        old_rows = nn._rows.get("jaccard")[0]
+        old_rows = nn._rows.get()[0]
     with scoped_persists() as cur:
         nn.fit(X.where(F.col("id") < 30))
     old.release()
     assert not old_rows._jbroadcast.isValid()
     assert nn.kneighbors().where(F.col("cand_id") >= 30).count() == 0
-    cur_rows = nn._rows.get("jaccard")[0]
+    cur_rows = nn._rows.get()[0]
     assert cur_rows is not old_rows and cur_rows._jbroadcast.isValid()
     cur.release()
     assert not cur_rows._jbroadcast.isValid()
@@ -334,6 +334,27 @@ def test_released_fit_leaf_unfits_model(spark, tmp_path):
     again.release()
 
 
+def test_fitted_row_table_serves_every_metric(spark):
+    """One fitted leaf builds one row table whatever the metric: a Jaccard
+    query and then a cosine query over the rows' values on the same leaf
+    leave one broadcast file, released with the scope."""
+    X = _token_sets(spark).withColumn(
+        "values", F.transform("features", lambda x: (x % 3 + 1).cast("double"))
+    )
+    with scoped_persists() as scope:
+        nn = MinHashNeighbors(
+            n_neighbors=3, number_of_hash_functions=32, max_bin_size=10_000,
+            metric="jaccard",
+        ).fit(X)
+        before = _broadcast_files(spark)
+        assert nn.kneighbors().count() > 0
+        nn.metric = "cosine"
+        assert nn.kneighbors().count() > 0
+        assert _broadcast_files(spark) == before + 1
+    scope.release()
+    assert _broadcast_files(spark) == before
+
+
 def test_fitted_row_table_built_once_under_threads(spark):
     """Concurrent first exact queries (a streaming thread beside the main
     one) build the fitted leaf's row table once: every thread gets the
@@ -343,7 +364,7 @@ def test_fitted_row_table_built_once_under_threads(spark):
         nn = _model().fit(X)
         before = _broadcast_files(spark)
         got = []
-        threads = [threading.Thread(target=lambda: got.append(nn._rows.get("jaccard")[0])) for _ in range(8)]
+        threads = [threading.Thread(target=lambda: got.append(nn._rows.get()[0])) for _ in range(8)]
         interval = sys.getswitchinterval()
         sys.setswitchinterval(1e-6)
         try:

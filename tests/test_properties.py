@@ -4,7 +4,10 @@ These pin the probabilistic contracts the pipeline's correctness rests on,
 over randomized inputs rather than fixtures.
 """
 
+from unittest import mock
+
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from webdedup import kernels as K
@@ -185,3 +188,106 @@ def test_xxh64_sql_stages_match_reference(vals):
     got = dict(con.execute(sql).fetchall())
     for v in vals:
         assert int(got[v]) == ref(v), v
+
+
+#: row ids of sparse rows: small and negative, around 2**32, and wide
+sparse_ids = st.one_of(
+    st.integers(-20, 20), st.integers(2**32 - 3, 2**32 + 3), st.integers(-(2**40), 2**40)
+)
+
+
+@st.composite
+def sparse_rows(draw, value):
+    """(id rows, value rows): unique ids a row, empty rows included, each
+    value row aligned with its ids or None (read as ones)."""
+    rows = draw(st.lists(st.lists(sparse_ids, unique=True, max_size=10), min_size=1, max_size=8))
+    vals = [
+        draw(st.none() | st.lists(value, min_size=len(r), max_size=len(r))) for r in rows
+    ]
+    return rows, vals
+
+
+def _pair_metrics(fit, query, valued, pairs, chunk):
+    """(table_pair_metric, sparse_metric, xx + yy) per metric over the
+    pairs (query row i, fitted row j) of the coded tables of ``fit`` and
+    ``query``, scored in chunks of ``chunk`` pairs."""
+
+    def packed(rows, dtype):
+        blobs = [None if r is None else np.asarray(r, dtype).tobytes() for r in rows]
+        return pa.chunked_array([pa.array(blobs, pa.binary())])
+
+    def table(rows, vals, ids, vocab=None):
+        return K.code_rows(ids, packed(rows, "<i8"), packed(vals, "<f8") if valued else None, vocab)
+
+    def ones_if_null(v, r):
+        return np.ones(len(r)) if v is None or not valued else np.asarray(v, np.float64)
+
+    (fr, fv), (qr, qv) = fit, query
+    f_ids = [5 * i - 7 for i in reversed(range(len(fr)))]
+    q_ids = [3 * i - 2 for i in reversed(range(len(qr)))]
+    ft, vocab = table(fr, fv, f_ids)
+    qt, _ = table(qr, qv, q_ids, vocab)
+    qid = np.array([q_ids[i] for i, _ in pairs], np.int64)
+    cid = np.array([f_ids[j] for _, j in pairs], np.int64)
+    out = {}
+    with mock.patch.object(K, "_PAIR_CHUNK", chunk):
+        for metric in ("jaccard", "euclidean", "cosine"):
+            scratch = K.pair_scratch(qt, ft, metric)
+            got = K.table_pair_metric(qt, ft, qid, cid, metric, scratch)
+            assert not scratch.any()
+            a = [(np.array(qr[i]), ones_if_null(qv[i], qr[i])) for i, _ in pairs]
+            b = [(np.array(fr[j]), ones_if_null(fv[j], fr[j])) for _, j in pairs]
+            want = np.array([K.sparse_metric(x, u, y, w, metric) for (x, u), (y, w) in zip(a, b)])
+            scale = np.array([u @ u + w @ w for (_, u), (_, w) in zip(a, b)])
+            out[metric] = got, want, scale
+    return out
+
+
+_pairs = st.lists(st.tuples(st.integers(0, 7), st.integers(0, 7)), max_size=60)
+
+
+@given(
+    sparse_rows(st.integers(-4, 4).map(float)),
+    sparse_rows(st.integers(-4, 4).map(float)),
+    st.booleans(),
+    _pairs,
+    st.integers(1, 7),
+)
+@settings(max_examples=80, deadline=None)
+def test_table_pair_metric_matches_sparse_metric(fit, query, valued, pairs, chunk):
+    """The exact re-rank's one pair kernel over coded row tables equals
+    kernels.sparse_metric bit for bit on integer values (every sum is
+    exact, whatever its order), euclidean after the square root the
+    exact pass takes: rows with and without values, empty rows, null
+    value rows, negative ids and ids past 2**32, query ids the fitted
+    vocabulary lacks, pairs in any order, and query runs crossing the
+    kernel's pair chunks."""
+    fr, qr = fit[0], query[0]
+    # a query row with an id past every fitted one, beside two it shares
+    query = (qr + [[2**62] + fr[0][:2]], query[1] + [None])
+    pairs = [(i % len(query[0]), j % len(fr)) for i, j in pairs]
+    for metric, (got, want, _) in _pair_metrics(fit, query, valued, pairs, chunk).items():
+        if metric == "euclidean":
+            got, want = np.sqrt(got), np.sqrt(want)
+        assert got.tolist() == want.tolist(), metric
+
+
+_real = st.floats(-100, 100, allow_nan=False).filter(lambda v: v == 0 or abs(v) > 1e-3)
+
+
+@given(sparse_rows(_real), sparse_rows(_real), _pairs, st.integers(1, 7))
+@settings(max_examples=60, deadline=None)
+def test_table_pair_metric_real_values_close(fit, query, pairs, chunk):
+    """With real values only the summation order differs from
+    sparse_metric: the squared euclidean within 1e-12 of xx + yy, the
+    cosine (already scaled by both norms) within 1e-12; Jaccard reads no
+    value and stays exact."""
+    fr, qr = fit[0], query[0]
+    pairs = [(i % len(qr), j % len(fr)) for i, j in pairs]
+    res = _pair_metrics(fit, query, True, pairs, chunk)
+    got, want, _ = res["jaccard"]
+    assert got.tolist() == want.tolist()
+    got, want, scale = res["euclidean"]
+    assert (np.abs(got - want) <= 1e-12 * scale).all()
+    got, want, _ = res["cosine"]
+    assert (np.abs(got - want) <= 1e-12).all()

@@ -111,10 +111,11 @@ def _exact_pass(metric: str, q_rows, c_rows, k: int | None):
     mapSortDescByValueFloat, sparseMatrix.h:313; the distances ascending,
     sparseMatrix.h:269), so a query's pairs are scored and ranked in one
     pass: the last query of a batch is carried into the next, and a worker
-    holds at most one batch plus one query's pairs."""
+    holds at most one batch plus one query's pairs. The kernel's scratch
+    vector is allocated once a partition."""
 
-    def score(qid, cid):
-        d = K.table_pair_metric(q_rows.value, c_rows.value, qid, cid, metric)
+    def score(qid, cid, scratch):
+        d = K.table_pair_metric(q_rows.value, c_rows.value, qid, cid, metric, scratch)
         if metric == "euclidean":
             d = np.sqrt(d)
         cols = [qid, cid, d]
@@ -126,6 +127,7 @@ def _exact_pass(metric: str, q_rows, c_rows, k: int | None):
         )
 
     def run(batches):
+        scratch = K.pair_scratch(q_rows.value, c_rows.value, metric)
         qid = cid = np.empty(0, np.int64)
         for b in batches:
             qid = np.concatenate([qid, b.column(0).to_numpy()])
@@ -133,60 +135,50 @@ def _exact_pass(metric: str, q_rows, c_rows, k: int | None):
             if qid.size:
                 cut = np.searchsorted(qid, qid[-1])
                 if cut:
-                    yield score(qid[:cut], cid[:cut])
+                    yield score(qid[:cut], cid[:cut], scratch)
                 qid, cid = qid[cut:], cid[cut:]
         if qid.size:
-            yield score(qid, cid)
+            yield score(qid, cid, scratch)
 
     return run
 
 
-def _row_table(feat: DataFrame, metric: str, name: str, vocab=None):
-    """(table, vocab): feat's rows read with one Arrow collect, holding
-    only what ``metric`` reads — Jaccard ``kernels.code_rows`` codes (over
-    ``vocab``, else feat's own, returned), the others ids and values
-    (``kernels.row_table``; vocab None). ``name`` is for the repeated-id
-    error."""
-    jac = metric == "jaccard"
-    cols = ["id", "fpk"] + (["vpk"] if not jac and "vpk" in feat.columns else [])
-    t = feat.select(*cols).toArrow()
-    ids = t["id"].to_numpy()
-    if jac:
-        return K.code_rows(ids, t["fpk"], vocab, name)
-    vpk = t["vpk"].combine_chunks() if "vpk" in cols else None
-    return K.row_table(ids, t["fpk"].combine_chunks(), vpk, name), None
+def _row_table(feat: DataFrame, name: str, vocab=None):
+    """(table, vocab): feat's rows and their values, if it has them, read
+    with one Arrow collect into a ``kernels.code_rows`` table coded over
+    ``vocab``, else over feat's own ids, which it returns. ``name`` is for
+    the repeated-id error."""
+    t = feat.select("id", "fpk", *(["vpk"] if "vpk" in feat.columns else [])).toArrow()
+    vpk = t["vpk"] if "vpk" in t.column_names else None
+    return K.code_rows(t["id"].to_numpy(), t["fpk"], vpk, vocab, name)
 
 
 class _FittedRows:
-    """One fitted leaf's rows as a broadcast ``kernels.RowTable`` per
-    metric kind (Jaccard codes, or ids and values), each built once, at
-    the leaf's first exact query of that kind (the streaming thread may
-    query too, hence the lock), and destroyed with the scope owning the
-    leaf."""
+    """One fitted leaf's rows as one broadcast ``kernels.RowTable``, which
+    every metric reads, built at the leaf's first exact query (the
+    streaming thread may query too, hence the lock) and destroyed with the
+    scope owning the leaf."""
 
     def __init__(self, leaf: DataFrame):
         self._leaf = leaf
         self._lock = threading.Lock()
-        self._tables = {}  # metric == "jaccard" -> (broadcast, vocab)
-        self.n_rows = None  # the leaf's row count, once a table is built
+        self._table = None  # (broadcast, vocab)
+        self.n_rows = None  # the leaf's row count, once the table is built
 
-    def get(self, metric: str):
-        """→ (the broadcast table, the fitted vocabulary or None)."""
-        kind = metric == "jaccard"
+    def get(self):
+        """→ (the broadcast table, the fitted vocabulary)."""
         with self._lock:
-            if kind not in self._tables:
-                name = "the fitted rows (fit / partial_fit)"
-                table, vocab = _row_table(self._leaf, metric, name)
+            if self._table is None:
+                table, vocab = _row_table(self._leaf, "the fitted rows (fit / partial_fit)")
                 self.n_rows = table.ids.size
-                bc = self._leaf.sparkSession.sparkContext.broadcast(table)
-                self._tables[kind] = bc, vocab
-            return self._tables[kind]
+                self._table = self._leaf.sparkSession.sparkContext.broadcast(table), vocab
+            return self._table
 
     def destroy(self) -> None:
         with self._lock:
-            for bc, _ in self._tables.values():
-                bc.destroy()
-            self._tables.clear()
+            if self._table is not None:
+                self._table[0].destroy()
+                self._table = None
 
 
 def _graph(edges: DataFrame, mode: str, symmetric: bool) -> DataFrame:
@@ -521,11 +513,11 @@ class MinHashNeighbors:
     def _query_rows(self, query_feat: DataFrame):
         """The broadcast row table of the query side of the exact re-rank:
         the fitted leaf's own for a self-query; else one built now from the
-        featurized X (Jaccard: coded over the fitted vocabulary) and
-        destroyed with the caller's persist scope."""
+        featurized X, coded over the fitted vocabulary, and destroyed with
+        the caller's persist scope."""
         metric = self._resolved_metric()
         if query_feat is self._fitted:
-            return self._rows.get(metric)[0]
+            return self._rows.get()[0]
         q_has_values = "vpk" in query_feat.columns
         if metric in ("euclidean", "cosine") and q_has_values != self._has_values:
             # mirrors the reference's single-CSR-format contract: fit and
@@ -538,8 +530,7 @@ class MinHashNeighbors:
                 f"has_values={q_has_values}; {metric} needs one consistent "
                 "CSR format — add/drop the 'values' column on the query side"
             )
-        vocab = self._rows.get(metric)[1]
-        table, _ = _row_table(query_feat, metric, "the query X", vocab)
+        table, _ = _row_table(query_feat, "the query X", self._rows.get()[1])
         rows = self._fitted.sparkSession.sparkContext.broadcast(table)
         track_release(rows.destroy)
         return rows
@@ -567,7 +558,7 @@ class MinHashNeighbors:
         schema = "query_id long, cand_id long, distance double" + (
             ", rnk int" if k is not None else ""
         )
-        body = _exact_pass(metric, q_rows, self._rows.get(metric)[0], k)
+        body = _exact_pass(metric, q_rows, self._rows.get()[0], k)
         return (
             cand.select("query_id", "cand_id")
             .sortWithinPartitions("query_id")
@@ -617,16 +608,17 @@ class MinHashNeighbors:
         up in broadcast row tables: one per fitted leaf, built at its
         first fast=False query, and one per call for an explicit X. Each
         is built from one Arrow collect of that side's packed rows (8 bytes
-        an id), so they must fit in ``spark.driver.maxResultSize`` and the
-        driver (Spark's own collect error above that), and that side's ids
-        must be unique. Each Python worker loads the tables: for Jaccard
-        the smallest unsigned int that holds the fitted vocabulary's size
-        an id (2 bytes up to 65,535 distinct ids), for euclidean/cosine 16
-        bytes an id. There is no join fallback. On generated pages (4-core
-        host, fit + kneighbors, the packed-row joins these tables replaced
-        → the tables) the tables were faster at every size measured, with
-        peak memory inside the joins' range: self-query
-        20,000 pages 14.3-17.1 → 8.9-9.8 s; 200,000 pages (82.6M ids: 631
+        an id, 16 with ``values``), so they must fit in
+        ``spark.driver.maxResultSize`` and the driver (Spark's own collect
+        error above that), and that side's ids must be unique. Each Python
+        worker loads the tables, whatever the metric: the smallest
+        unsigned int that holds the fitted vocabulary's size an id (2
+        bytes up to 65,535 distinct ids), plus 8 bytes an id for a value
+        and 8 a row for its squared norm when the rows have ``values``.
+        There is no join fallback. On generated pages (4-core host, fit +
+        kneighbors, the packed-row joins these tables replaced → the
+        tables) the tables were faster at every size measured, with peak
+        memory inside the joins' range: self-query 20,000 pages 14.3-17.1 → 8.9-9.8 s; 200,000 pages (82.6M ids: 631
         MB collected, a 162 MB table) 37.9-49.2 → 31.0-33.2 s at 7.4-8.4
         vs 7.6-8.0 GB; fit on 2,000 pages, X of 20,000 39.3-39.4 → 18.9-21.2 s.
         """

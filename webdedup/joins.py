@@ -37,8 +37,6 @@ import threading
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
-from webdedup.config import BROADCAST_ID_LIMIT
-
 #: guards every _LIVE_SCOPES mutation: a streaming micro-batch thread can
 #: track_persist() concurrently with a main-thread release_persisted(), and
 #: unsynchronized check-then-act on the shared list can double-register a
@@ -285,7 +283,7 @@ def semi_join_ids(
     df: DataFrame,
     ids: DataFrame,
     key: str,
-    max_broadcast_ids: int = BROADCAST_ID_LIMIT,
+    max_broadcast_ids: int,
     known_max: int | None = None,
 ) -> DataFrame:
     """df LEFT SEMI JOIN ids ON key, broadcasting ids iff ``known_max`` is

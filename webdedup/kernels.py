@@ -21,13 +21,11 @@ These are the vectorized re-expressions of the reference's C++ inner loops
                          ``packed_pair_scores`` over ``unpack_rows`` (the one
                          packed-row decoder); the kNN exact re-rank
                          (``computation/nearestNeighbors.cpp:122-190``)
-                         scores the same value, or ``sparse_metric``, with
-                         ``table_pair_metric``: only the pairs' row ids cross
-                         the Python boundary, and both rows are looked up in a
-                         broadcast ``RowTable`` built by ``row_table`` (ids
-                         and values) or ``code_rows`` (Jaccard's codes);
-                         ``rank_cut`` then keeps each query's top k as
-                         Spark's ``rank()`` would.
+                         scores it, or ``sparse_metric``'s euclidean and
+                         cosine, with ``table_pair_metric`` over a broadcast
+                         ``RowTable`` built by ``code_rows`` (only the pairs'
+                         row ids cross the Python boundary); ``rank_cut``
+                         keeps each query's top k as Spark's ``rank()`` would.
 * ``rolling_hash`` / ``winnow`` — Rabin fingerprints + winnowing for the
                          exact-substring duplicate pass (north-rule extra).
 
@@ -338,7 +336,7 @@ def shingle_text(text: str, n: int) -> np.ndarray:
 
 def jaccard_sorted(a: np.ndarray, b: np.ndarray) -> float:
     """Exact Jaccard of two id arrays, each unique, in any order and of
-    any integer dtype (the exact re-rank passes int64 rows as given)."""
+    any integer dtype."""
     a = np.asarray(a)
     b = np.asarray(b)
     if a.size == 0 and b.size == 0:
@@ -388,19 +386,19 @@ def packed_pair_scores(a, b, dtype: str) -> np.ndarray:
 class RowTable(NamedTuple):
     """Rows looked up by row id (the reference's in-core row-major matrix,
     sparseMatrix.h:44-53). The row with id ``ids[i]`` is ``r = rows[i]``,
-    ``elems[off[r]:off[r+1]]`` in its given order: int64 ids
-    (:func:`row_table`), or unsigned codes over a vocabulary of
-    ``vocab_size`` ids (:func:`code_rows`), the code ``vocab_size``
-    standing for an id the vocabulary lacks.
-    ``vals`` are the elements' values, ones where a row had none (None: no
-    values)."""
+    ``elems[off[r]:off[r+1]]``: codes over a vocabulary of ``vocab_size``
+    ids, ``vocab_size`` for an id it lacks; ``vals`` their values (ones
+    where a row had none) and ``sq`` each row's squared norm (the
+    reference's precomputed ``xx``, sparseMatrix.h:60-123), both None
+    for rows without values."""
 
     ids: np.ndarray  # sorted row ids, int64
     rows: np.ndarray  # rows[i]: the row number of ids[i]
     off: np.ndarray  # n+1 row offsets into elems, int64
     elems: np.ndarray
     vals: np.ndarray | None  # float64
-    vocab_size: int = 0
+    sq: np.ndarray | None  # float64, one a row
+    vocab_size: int
 
 
 def _row_positions(start: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -408,6 +406,16 @@ def _row_positions(start: np.ndarray, lens: np.ndarray) -> np.ndarray:
     concatenated."""
     ends = np.cumsum(lens)
     return np.repeat(start - (ends - lens), lens) + np.arange(ends[-1] if lens.size else 0)
+
+
+def _row_sums(x: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """Sum of each segment ``x[ends[i]:ends[i+1]]``, 0.0 for an empty one
+    (``np.add.reduceat`` alone returns the next element there)."""
+    out = np.zeros(ends.size - 1)
+    full = np.flatnonzero(ends[1:] > ends[:-1])
+    if full.size:
+        out[full] = np.add.reduceat(x, ends[full])
+    return out
 
 
 def _by_id(ids, name: str):
@@ -425,35 +433,23 @@ def _by_id(ids, name: str):
     return sorted_ids, rows
 
 
-def row_table(ids, fpk: pa.Array, vpk: pa.Array | None = None, name: str = "rows") -> RowTable:
-    """RowTable of row ids and their packed ``<i8`` id rows ``fpk`` (and
-    ``<f8`` value rows ``vpk``, a null one read as ones). The rows stay
-    where ``fpk`` has them; only the ids are sorted."""
-    elems, off, _ = unpack_rows(fpk, "<i8")
-    off = off.astype(np.int64)
-    vals = None
-    if vpk is not None:
-        w, woff, ok = unpack_rows(vpk, "<f8")
-        vals = np.ones(elems.size)
-        lens = np.diff(off)[ok]
-        vals[_row_positions(off[:-1][ok], lens)] = w[_row_positions(woff[:-1][ok], lens)]
-    return RowTable(*_by_id(ids, name), off, elems, vals)
-
-
-def code_rows(ids, fpk: pa.ChunkedArray, vocab: np.ndarray | None = None, name: str = "rows"):
-    """(RowTable of the rows as codes, vocab), for Jaccard: like
-    :func:`row_table`, but each id is its index in ``vocab``.
+def code_rows(
+    ids, fpk: pa.ChunkedArray, vpk: pa.ChunkedArray | None = None, vocab=None, name: str = "rows"
+):
+    """(RowTable, vocab) of row ids, their packed ``<i8`` id rows ``fpk``,
+    each id coded as its index in ``vocab``, and their packed ``<f8`` value
+    rows ``vpk`` (a null one read as ones), in ``fpk``'s order.
 
     ``vocab=None`` codes over the rows' own distinct ids, which it
     returns; a query table passes the fitted rows' ``vocab``, and its ids
     absent from it get the code ``len(vocab)``, which no fitted row holds:
-    they match nothing but still count in the row's size. Codes take the
-    smallest unsigned dtype that holds ``len(vocab)`` and are made chunk
-    by chunk with pandas' hash tables, so only one chunk's int64 codes
-    exist at a time. At 200,000 pages (82.6M ids, 4,021 distinct) pandas
-    coded in 1.8 s where ``np.unique`` + ``searchsorted`` took 12.8 s, and
-    the driver peaked at 0.84-0.86 GB where ``np.unique`` over the
-    combined, id-sorted rows peaked at 2.0 GB.
+    they match nothing but still count in the row's size and norm. Codes
+    take the smallest unsigned dtype that holds ``len(vocab)`` and are
+    made chunk by chunk with pandas' hash tables, so only one chunk's
+    int64 codes exist at a time. At 200,000 pages (82.6M ids, 4,021
+    distinct) pandas coded in 1.8 s where ``np.unique`` + ``searchsorted``
+    took 12.8 s, and the driver peaked at 0.84-0.86 GB where ``np.unique``
+    over the combined, id-sorted rows peaked at 2.0 GB.
     """
     parts = [unpack_rows(c, "<i8")[:2] for c in fpk.chunks]
     if vocab is None:
@@ -468,80 +464,94 @@ def code_rows(ids, fpk: pa.ChunkedArray, vocab: np.ndarray | None = None, name: 
         off.append(o[1:] - o[0] + n)
         n += int(o[-1] - o[0])
     elems = np.concatenate(codes) if codes else np.empty(0, dtype)
-    return RowTable(*_by_id(ids, name), np.concatenate(off), elems, None, int(vocab.size)), vocab
+    off = np.concatenate(off)
+    vals = sq = None
+    if vpk is not None:
+        vals, r = np.ones(elems.size), 0
+        for chunk in vpk.chunks:
+            w, woff, ok = unpack_rows(chunk, "<f8")
+            start = off[r : r + len(chunk)][ok]
+            lens = off[r + 1 : r + 1 + len(chunk)][ok] - start
+            vals[_row_positions(start, lens)] = w[_row_positions(woff[:-1][ok], lens)]
+            r += len(chunk)
+        sq = _row_sums(vals * vals, off)
+    return RowTable(*_by_id(ids, name), off, elems, vals, sq, int(vocab.size)), vocab
+
+
+def pair_scratch(q: RowTable, c: RowTable, metric: str) -> np.ndarray:
+    """:func:`table_pair_metric`'s zeroed scratch vector for ``metric`` over
+    ``q`` and ``c``: a slot per code, float if values are read, else bool."""
+    valued = metric != "jaccard" and (q.vals is not None or c.vals is not None)
+    return np.zeros(c.vocab_size + 1, dtype=np.float64 if valued else bool)
 
 
 _PAIR_CHUNK = 4096
 
 
-def table_pair_metric(q: RowTable, c: RowTable, qid, cid, metric: str) -> np.ndarray:
+def table_pair_metric(q: RowTable, c: RowTable, qid, cid, metric: str, scratch) -> np.ndarray:
     """:func:`sparse_metric` of each pair of rows ``(q[qid[i]], c[cid[i]])``,
-    looked up by id; every id must be a row of its table. Jaccard reads
-    :func:`code_rows` tables, ``q`` coded over ``c``'s vocabulary; the
-    other metrics read id tables.
+    looked up by id; every id must be a row of its table, and ``q`` be
+    coded over ``c``'s vocabulary. ``scratch`` is :func:`pair_scratch`'s
+    vector, left zeroed on return.
 
-    Jaccard scores each run of pairs sharing a query at once: it sets a
-    boolean mask over the vocabulary at the query's codes, counts every
-    candidate row's hits with one gather, and clears the mask — so pairs
-    sorted by query give long runs, but any order is exact. ``1 - inter /
-    (|q| + |c| - inter)``, 0.0 for two empty rows, equals ``1 -
-    jaccard_sorted`` bit for bit. Euclidean and cosine call sparse_metric
-    per pair on the rows in their given order.
+    Each run of pairs sharing a query is scored at once, as one ``xy`` a
+    pair: the query's codes are set in the scratch vector, every
+    candidate row's elements are gathered from it, and the query's codes
+    are cleared again — so pairs sorted by query give long runs, but any
+    order is exact. Jaccard and rows without values gather bool hits,
+    valued rows the query's values times the candidate's, summed per pair
+    by ``np.add.reduceat``. ``xx`` and ``yy`` are the tables' squared
+    norms, or the row lengths. Then Jaccard is ``1 - xy / (xx + yy -
+    xy)`` (0.0 for two empty rows), equal to ``1 - jaccard_sorted`` bit
+    for bit; euclidean ``max(xx - 2xy + yy, 0)``; cosine ``max(xy /
+    (sqrt(xx) sqrt(yy)), 0)``, 0 when a norm is 0. For integer values
+    every sum is exact, so these equal ``sparse_metric`` bit for bit; for
+    real ones only the summation order differs.
 
-    The mask does not contradict :func:`packed_pair_scores`' case for a
-    per-pair loop: its temporaries are one bool per fitted vocabulary id
-    (4,021 at ``kneighbors_5k``) and the candidate codes of at most
-    ``_PAIR_CHUNK`` pairs, with their hits and prefix sum, however many
-    pairs a caller passes. Scored in one piece, 54,000 pairs of the
-    ``kneighbors_5k`` seed-1 pages (416 ids a row, runs of 40 pairs a
-    query, about one round-2 partition on 4 cores) took 267-295 ms and
-    408 MiB of temporaries; in 4,096-pair chunks 151-155 ms and 33 MiB
-    (one process, 7 repetitions). Measured on ``kneighbors_5k``
-    (4-core host, seeds 1-10, alternating pairs): a per-pair
-    ``jaccard_sorted`` loop over id tables with unsorted pairs read
-    ``wall_s`` 7.81 s against 6.65 s for this kernel on sorted pairs (this
-    kernel faster in 8/10 pairs); the loop spent 7.6 % less executor CPU,
-    having no sort.
+    This does not contradict :func:`packed_pair_scores`' case for a
+    per-pair loop: the temporaries are one slot per fitted vocabulary id
+    (4,021 at ``kneighbors_5k``) and the candidate elements of at most
+    ``_PAIR_CHUNK`` pairs, however many pairs a caller passes (54,000
+    ``kneighbors_5k`` pairs: 267-295 ms and 408 MiB of temporaries in one
+    piece, 151-155 ms and 33 MiB in 4,096-pair chunks).
     """
     qr = q.rows[np.searchsorted(q.ids, qid)]
     cr = c.rows[np.searchsorted(c.ids, cid)]
     out = np.empty(qr.size)
-    if metric != "jaccard":
-        for i in range(qr.size):
-            a, b = slice(q.off[qr[i]], q.off[qr[i] + 1]), slice(c.off[cr[i]], c.off[cr[i] + 1])
-            va = q.vals[a] if q.vals is not None else np.ones(a.stop - a.start)
-            vb = c.vals[b] if c.vals is not None else np.ones(b.stop - b.start)
-            out[i] = sparse_metric(q.elems[a], va, c.elems[b], vb, metric)
-        return out
-    mask = np.zeros(c.vocab_size + 1, dtype=bool)
     for s in range(0, qr.size, _PAIR_CHUNK):
         e = min(s + _PAIR_CHUNK, qr.size)
-        out[s:e] = _jaccard_chunk(q, c, qr[s:e], cr[s:e], mask)
+        out[s:e] = _pair_chunk(q, c, qr[s:e], cr[s:e], metric, scratch)
     return out
 
 
-def _jaccard_chunk(q: RowTable, c: RowTable, qr, cr, mask) -> np.ndarray:
-    """1 - Jaccard of the rows ``(q row qr[i], c row cr[i])`` (row numbers,
-    not ids) with ``mask``, all False, over ``c``'s vocabulary; see
-    :func:`table_pair_metric`."""
-    qlen = q.off[qr + 1] - q.off[qr]
+def _pair_chunk(q: RowTable, c: RowTable, qr, cr, metric: str, scratch) -> np.ndarray:
+    """``metric`` of the rows ``(q row qr[i], c row cr[i])`` (row numbers,
+    not ids); see :func:`table_pair_metric`."""
+    qv, cv = (t.vals is not None and scratch.dtype != bool for t in (q, c))
     clen = c.off[cr + 1] - c.off[cr]
-    ends = np.zeros(qr.size + 1, dtype=np.int64)
-    np.cumsum(clen, out=ends[1:])
-    cand = c.elems[_row_positions(c.off[cr], clen)]
-    hits = np.empty(cand.size, dtype=bool)
+    ends = np.r_[0, np.cumsum(clen)]
+    at = _row_positions(c.off[cr], clen)
+    cand = c.elems[at]
+    hits = np.empty(cand.size, dtype=scratch.dtype)
     runs = np.flatnonzero(np.diff(qr)) + 1
     for s, e in zip(np.r_[0, runs], np.r_[runs, qr.size]):
-        row = q.elems[q.off[qr[s]] : q.off[qr[s] + 1]]
-        mask[row] = True
-        hits[ends[s] : ends[e]] = mask[cand[ends[s] : ends[e]]]
-        mask[row] = False
-    seen = np.zeros(cand.size + 1, dtype=np.int64)
-    np.cumsum(hits, out=seen[1:])
-    inter = seen[ends[1:]] - seen[ends[:-1]]
-    union = qlen + clen - inter
-    sim = np.divide(inter, union, out=np.ones(qr.size), where=union > 0)
-    return 1.0 - sim
+        a, b = q.off[qr[s]], q.off[qr[s] + 1]
+        scratch[q.elems[a:b]] = q.vals[a:b] if qv else 1
+        hits[ends[s] : ends[e]] = scratch[cand[ends[s] : ends[e]]]
+        scratch[q.elems[a:b]] = 0
+    xy = _row_sums(hits * c.vals[at] if cv else hits, ends)
+    xx = q.sq[qr] if qv else q.off[qr + 1] - q.off[qr]
+    yy = c.sq[cr] if cv else clen
+    if metric == "jaccard":
+        union = xx + yy - xy
+        return 1.0 - np.divide(xy, union, out=np.ones(qr.size), where=union > 0)
+    if metric == "euclidean":
+        return np.maximum(xx - 2.0 * xy + yy, 0.0)
+    if metric == "cosine":
+        norm = np.sqrt(xx) * np.sqrt(yy)
+        cos = np.divide(xy, norm, out=np.zeros(qr.size), where=(xx > 0) & (yy > 0))
+        return np.maximum(cos, 0.0)
+    raise ValueError(f"unknown metric {metric!r}")
 
 
 def rank_cut(qid: np.ndarray, cid: np.ndarray, dist: np.ndarray, k: int, descending: bool):

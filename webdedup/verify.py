@@ -14,21 +14,20 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import DoubleType
 
 from webdedup import kernels as K
-from webdedup.config import BROADCAST_ID_LIMIT
 from webdedup.joins import semi_join_ids
 
 
 @arrow_udf(DoubleType())
 def jaccard_udf(a: pa.Array, b: pa.Array) -> pa.Array:
     """Exact Jaccard over packed ``<u4`` shingle blobs (sorted unique; a
-    null blob is the empty set): kernels.packed_pair_scores, the same
-    pair kernel as the kNN exact re-rank."""
+    null blob is the empty set): kernels.packed_pair_scores, one
+    ``jaccard_sorted`` per pair."""
     return pa.array(K.packed_pair_scores(a, b, "<u4"))
 
 
 def attach_shingles(
     pairs: DataFrame, feat: DataFrame,
-    max_broadcast_ids: int = BROADCAST_ID_LIMIT,
+    max_broadcast_ids: int,
     known_max: int | None = None,
 ) -> DataFrame:
     """Join (a, b) pairs to both sides' shingle arrays, narrowing feat to
@@ -87,7 +86,7 @@ def exact_jaccard_gate(pairs_with_shingles: DataFrame, threshold: float) -> Data
 
 def verified_pairs(
     pairs: DataFrame, feat: DataFrame, threshold: float,
-    max_broadcast_ids: int = BROADCAST_ID_LIMIT,
+    max_broadcast_ids: int,
     known_max: int | None = None,
 ) -> DataFrame:
     """(a, b, jaccard) for candidate pairs passing the exact-Jaccard gate.
