@@ -217,8 +217,10 @@ def test_kneighbors_exact_rounds_plan_and_job_budget(spark, data, run_jobs):
     """The self-query's exact rounds are one mapInArrow pass each (score
     and rank() in Python, no Arrow UDF node and no Window over the
     distance), over pairs partitioned by query_id once per round. Jobs of
-    one collect with the fitted row table built: 11 (the parent's
-    scalar-UDF rounds with a rank() window each ran 14)."""
+    one collect with the fitted row table built: 10 (the scalar-UDF
+    rounds with a rank() window each ran 14; 11 while the collision join
+    was planned from Catalyst's size estimate, sort-merge on this input,
+    until AQE switched it to a broadcast)."""
     import re
 
     from capture_plans import final_sections
@@ -237,7 +239,7 @@ def test_kneighbors_exact_rounds_plan_and_job_budget(spark, data, run_jobs):
     assert not [ln for ln in plan.splitlines() if "Window [" in ln and "distance" in ln]
     # the round-1 pass is printed under each scan of its cache
     assert len(set(re.findall(r"MapInArrow \S+\(.*?\)#(\d+)", plan))) == 2
-    assert n_jobs == 11, n_jobs
+    assert n_jobs == 10, n_jobs
 
 
 def test_predict_proba_sums_to_one(spark, data):
@@ -344,23 +346,31 @@ def test_save_load_roundtrip(spark, data, tmp_path):
     want = {(r["query_id"], r["cand_id"]): r["distance"] for r in nn.kneighbors().collect()}
     nn.save(str(tmp_path / "model"))
     nn2 = MinHashNeighbors.load(spark, str(tmp_path / "model"))
-    assert nn2._fitted.columns == ["id", "bands", "fpk"]
+    assert nn2._fitted.columns == ["id", "bands", "features"]
     got = {(r["query_id"], r["cand_id"]): r["distance"] for r in nn2.kneighbors().collect()}
     assert got == want
 
 
-def test_load_rejects_unpacked_layout(spark, data, tmp_path):
-    """A model saved as (id, features, bands), before the fitted rows were
-    packed, fails at load with the missing column named."""
+def test_load_rejects_packed_layout(spark, data, tmp_path):
+    """A model saved as (id, bands, fpk), its rows packed as ``<i8``
+    bytes, fails at load with the missing ``features`` column named; one
+    saved as (id, features, bands), the layout before that, loads."""
     df, _, _, _ = data
     path = str(tmp_path / "old")
     nn = MinHashNeighbors(number_of_hash_functions=16, max_bin_size=10_000).fit(df)
+    want = sorted(nn.kneighbors().collect())
     nn.save(path)
-    nn._fitted.select("id", "bands").join(df, "id").select(
-        "id", "features", "bands"
-    ).write.mode("overwrite").parquet(path + "/fitted")
-    with pytest.raises(ValueError, match="'fpk'.*re-fit"):
+    nn._fitted.select("id", "features", "bands").write.mode("overwrite").parquet(path + "/fitted")
+    assert sorted(MinHashNeighbors.load(spark, path).kneighbors().collect()) == want
+    nn._fitted.select("id", "bands", F.lit(b"\0" * 8).alias("fpk")).write.mode(
+        "overwrite"
+    ).parquet(path + "/fitted")
+    with pytest.raises(ValueError, match="'features'.*re-fit"):
         MinHashNeighbors.load(spark, path)
+
+
+def _lists(rows, list_of, typ):
+    return pa.array(rows, list_of(typ))
 
 
 def _packed(rows, dtype, typ):
@@ -384,12 +394,16 @@ def _batches(qid, cid, size):
     ]
 
 
-@pytest.mark.parametrize("typ", [pa.binary(), pa.large_binary()])
+@pytest.mark.parametrize(
+    "typ", [(pa.list_, pa.binary()), (pa.large_list, pa.large_binary())]
+)
 def test_packed_metric_kernels_match_numpy_kernels(typ):
     """The exact re-rank's and the dedup verify's Arrow kernels read
-    zero-copy views of packed rows. The re-rank's mapInArrow body gets
-    only (query_id, cand_id) record batches and looks both rows up in row
-    tables; it agrees exactly with kernels.jaccard_sorted / sparse_metric
+    zero-copy views of Arrow rows: the re-rank's row tables are coded
+    from ``list`` id and value rows, the verify reads packed ``<u4``
+    shingle blobs. The re-rank's mapInArrow body gets only (query_id,
+    cand_id) record batches and looks both rows up in row tables; it
+    agrees exactly with kernels.jaccard_sorted / sparse_metric
     (euclidean's square root taken) on pairs in any order (one query split
     over many runs), queries whose pairs span batch boundaries, empty
     partitions and batches, empty rows on either or both sides, negative
@@ -397,9 +411,9 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
     (they still count in |q|), null value rows (= ones), null ``<u4``
     shingle blobs (= empty sets), sliced arrays whose offset is > 0 and
     tables coded from several chunks, their id and value rows chunked
-    apart, with 32-bit offsets and with the 64-bit ones
-    ``spark.sql.execution.arrow.useLargeVarTypes`` sends. With a k cut it
-    keeps each query's top k by rank()."""
+    apart, with 32-bit offsets and with the 64-bit ones of ``large_list``
+    and ``large_binary`` (``spark.sql.execution.arrow.useLargeVarTypes``).
+    With a k cut it keeps each query's top k by rank()."""
     from types import SimpleNamespace
 
     from webdedup.api import _exact_pass
@@ -422,16 +436,18 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
     query = [[0], [7, 99], [], [1, 2, 3], [-3, 2**41, 4, -1], [2**40]]
     qvals = [[0.0], [2.0, 1.0], [], [1.0, 1.0, 2.0], None, [3.0]]
     q_ids = [0, 5, 1, -2, 2**33, 4][1:]
-    fpk, qpk = _packed(fit, "<i8", typ).slice(1), _packed(query, "<i8", typ).slice(1)
-    fvpk, qvpk = _packed(fvals, "<f8", typ).slice(1), _packed(qvals, "<f8", typ).slice(1)
+    list_of, blob = typ
+    f_rows, q_rows = (_lists(r, list_of, pa.int64()).slice(1) for r in (fit, query))
+    f_vals, q_vals = (_lists(v, list_of, pa.float64()).slice(1) for v in (fvals, qvals))
+    assert f_rows.offset == f_vals.offset == 1
     # tables are built chunk by chunk: split the fitted rows, their values
     # elsewhere; Jaccard reads tables without values, the others with them
-    fchunks = pa.chunked_array([fpk.slice(0, 3), fpk.slice(3)])
+    fchunks = pa.chunked_array([f_rows.slice(0, 3), f_rows.slice(3)])
     fc, vocab = K.code_rows(fit_ids, fchunks)
-    qc, _ = K.code_rows(q_ids, pa.chunked_array([qpk]), vocab=vocab)
-    fvchunks = pa.chunked_array([fvpk.slice(0, 1), fvpk.slice(1, 4), fvpk.slice(5)])
+    qc, _ = K.code_rows(q_ids, pa.chunked_array([q_rows]), vocab=vocab)
+    fvchunks = pa.chunked_array([f_vals.slice(0, 1), f_vals.slice(1, 4), f_vals.slice(5)])
     ft, fvocab = K.code_rows(fit_ids, fchunks, fvchunks)
-    qt, _ = K.code_rows(q_ids, pa.chunked_array([qpk]), pa.chunked_array([qvpk]), vocab)
+    qt, _ = K.code_rows(q_ids, pa.chunked_array([q_rows]), pa.chunked_array([q_vals]), vocab)
     assert list(fvocab) == list(vocab)
     fit, fvals, query, qvals = fit[1:], fvals[1:], query[1:], qvals[1:]
     assert 99 not in vocab and 2**41 not in vocab and -1 not in vocab
@@ -488,10 +504,10 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
         [pa.array([], pa.int64())] * 2, ["query_id", "cand_id"]
     )
     assert list(body(iter([empty_batch]))) == []
-    nc, _ = K.code_rows([], pa.chunked_array([], typ), vocab=vocab)
+    nc, _ = K.code_rows([], pa.chunked_array([], list_of(pa.int64())), vocab=vocab)
     assert exact("jaccard", nc, fc)([], []) == []
-    rep = _packed([[1], [2], [5]], "<i8", typ)
-    rep_vals = pa.chunked_array([pa.nulls(3, typ)])
+    rep = _lists([[1], [2], [5]], list_of, pa.int64())
+    rep_vals = pa.chunked_array([pa.nulls(3, list_of(pa.float64()))])
     with pytest.raises(ValueError, match="the query X: id 3 appears more than once"):
         K.code_rows([3, 4, 3], pa.chunked_array([rep]), rep_vals, vocab, "the query X")
     with pytest.raises(ValueError, match="the query X: id 3 appears more than once"):
@@ -501,7 +517,7 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
     # null blob; an element-size mistake in the decoder misplaces rows
     sa = [[7], [], None, [1, 2, 3], [5, 7, 2**32 - 1], [4, 9], [2, 4, 6, 8]]
     sb = [[7], [], [1], None, [1, 5, 7], [4, 9, 11], [1, 2, 4, 8, 9]]
-    ua, ub = _packed(sa, "<u4", typ).slice(1), _packed(sb, "<u4", typ).slice(1)
+    ua, ub = _packed(sa, "<u4", blob).slice(1), _packed(sb, "<u4", blob).slice(1)
     assert ua.offset == 1 and ua.null_count == ub.null_count == 1
 
     def u4(r):
@@ -510,13 +526,17 @@ def test_packed_metric_kernels_match_numpy_kernels(typ):
     want = [K.jaccard_sorted(u4(sa[i]), u4(sb[i])) for i in range(1, len(sa))]
     assert jaccard_udf.func(ua, ub).to_pylist() == want
 
-    # every row empty: the batch's data buffer holds no bytes
-    empty = _packed([[], []], "<i8", typ)
-    assert empty.buffers()[2].size == 0
-    et, _ = K.code_rows([1, 2], pa.chunked_array([empty]), pa.chunked_array([pa.nulls(2, typ)]))
+    # every row empty: the list's child and the blobs' data buffer hold
+    # nothing
+    empty = _lists([[], []], list_of, pa.int64())
+    assert len(empty.values) == 0
+    nulls = pa.chunked_array([pa.nulls(2, list_of(pa.float64()))])
+    et, _ = K.code_rows([1, 2], pa.chunked_array([empty]), nulls)
     ec, _ = K.code_rows([1, 2], pa.chunked_array([empty]))
     assert exact("jaccard", ec, ec)([1, 2], [2, 1]) == [0.0, 0.0]
     assert exact("euclidean", et, et)([1, 2], [2, 1]) == [0.0, 0.0]
+    empty = _packed([[], []], "<u4", blob)
+    assert empty.buffers()[2].size == 0
     assert jaccard_udf.func(empty, empty).to_pylist() == [1.0, 1.0]
 
 
@@ -579,9 +599,9 @@ def _signature_batches(spark, tmp_path, action) -> int:
 
 @pytest.mark.parametrize("query", ["kneighbors", "radius_neighbors"])
 def test_explicit_query_featurized_once(spark, data, tmp_path, query):
-    """fast=False reads an explicit X's packed rows in the collision join
-    and in each exact re-rank; the signature UDF still runs once over X
-    (one batch for a one-partition X)."""
+    """fast=False reads an explicit X's rows in its row table's collect
+    and its bands in the collision join; the signature UDF still runs
+    once over X (one batch for a one-partition X)."""
     df = data[0]
     q = df.where("id < 30").coalesce(1)
     with scoped_persists() as scope:
@@ -590,6 +610,62 @@ def test_explicit_query_featurized_once(spark, data, tmp_path, query):
         n = _signature_batches(spark, tmp_path, lambda: getattr(nn, query)(q).count())
     scope.release()
     assert n == 1
+
+
+def test_explicit_query_caches_nothing(spark, data, monkeypatch):
+    """fast=False with an explicit X tracks no persisted frame in the
+    caller's scope, only X's row table broadcast, and neither row table's
+    collect runs a Python UDF: Catalyst prunes the signature UDF from a
+    plan that reads only X's own columns."""
+    df = data[0]
+    plans = []
+    to_arrow = type(df).toArrow
+
+    def traced(self):
+        out = to_arrow(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(type(df), "toArrow", traced)
+    with scoped_persists() as outer:
+        nn = MinHashNeighbors(n_neighbors=3, number_of_hash_functions=64, max_bin_size=10_000)
+        nn.fit(df)
+        with scoped_persists() as scope:
+            edges = nn.kneighbors(df.where("id < 30"), neighbor_of_neighbor=False)
+            assert edges.count() > 0
+        assert scope._frames == [] and len(scope._callbacks) == 1
+        scope.release()
+    outer.release()
+    assert len(plans) == 2  # the fitted rows' table, then X's
+    assert not [p for p in plans if "EvalPython" in p]
+
+
+@pytest.mark.parametrize("slack, join", [(0, "BroadcastHashJoin"), (-1, "SortMergeJoin")])
+def test_collision_join_planned_from_fitted_count(spark, data, monkeypatch, slack, join):
+    """fit observes its row count on the checkpoint action it runs, and the
+    collision join is planned as a broadcast of the index side, before it
+    runs, when fitted rows × signature length is within
+    BROADCAST_ID_LIMIT, whatever Catalyst's size estimate (size-based
+    broadcasts are off here); one row over the limit, it is planned
+    sort-merge."""
+    from webdedup import api
+
+    df = data[0]
+    monkeypatch.setattr(api, "BROADCAST_ID_LIMIT", 120 * 16 + slack)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        with scoped_persists() as scope:
+            nn = MinHashNeighbors(number_of_hash_functions=16, max_bin_size=10_000).fit(df)
+            assert nn._n_fitted == 120
+            plan = nn._collisions(nn._fitted)._jdf.queryExecution().executedPlan().toString()
+        scope.release()
+    finally:
+        spark.conf.set(key, threshold)
+    assert "isFinalPlan=false" in plan
+    inner = [ln.strip(" +-:*()0123456789") for ln in plan.splitlines() if "Join" in ln and "Inner" in ln]
+    assert len(inner) == 1 and inner[0].startswith(join), plan
 
 
 def test_radius_graph_symmetric(spark, data):

@@ -129,8 +129,8 @@ def test_kneighbors_similarity_flag_selects_cosine(spark, valued):
 
 
 def test_save_load_roundtrip_valued(spark, valued, tmp_path):
-    """A valued (euclidean) model keeps its packed value rows through
-    save/load: same metric, same neighbors, same distances."""
+    """A valued (euclidean) model keeps its ``values`` through save/load:
+    same metric, same neighbors, same distances."""
     _, df = valued
     nn = MinHashNeighbors(
         n_neighbors=4, number_of_hash_functions=64, max_bin_size=10_000
@@ -138,7 +138,7 @@ def test_save_load_roundtrip_valued(spark, valued, tmp_path):
     want = {(r["query_id"], r["cand_id"]): r["distance"] for r in nn.kneighbors().collect()}
     nn.save(str(tmp_path / "model"))
     nn2 = MinHashNeighbors.load(spark, str(tmp_path / "model"))
-    assert nn2._fitted.columns == ["id", "bands", "fpk", "vpk"]
+    assert nn2._fitted.columns == ["id", "bands", "features", "values"]
     assert nn2._resolved_metric() == "euclidean"
     got = {(r["query_id"], r["cand_id"]): r["distance"] for r in nn2.kneighbors().collect()}
     assert want and got == want

@@ -251,6 +251,38 @@ def test_clean_corpus_release_loop_keeps_persisted_rdds_flat(spark):
     assert sizes == [base] * 3
 
 
+@pytest.mark.parametrize("run", ["dedup", "clean_corpus"])
+def test_failed_run_releases_its_blocks(spark, monkeypatch, run):
+    """A run that raises part-way pins nothing: dedup releases its scope
+    when connected components fails after the docs and featurize leaves
+    are filled, and clean_corpus releases its dedup run's scope when the
+    canonical pick after it fails."""
+    from webdedup import pipeline
+
+    rows = generate_pages(40, 23).rows
+    docs = spark.createDataFrame(
+        [(i, r["text"]) for i, r in enumerate(rows)], "doc_id long, text string"
+    )
+    release_persisted()
+    jsc = spark.sparkContext._jsc
+    base = jsc.getPersistentRDDs().size()
+
+    def fail(*_):
+        raise RuntimeError("injected failure")
+
+    if run == "dedup":
+        monkeypatch.setattr(pipeline, "connected_components", fail)
+        call = lambda: dedup(docs, CFG, id_col="doc_id")  # noqa: E731
+    else:
+        monkeypatch.setattr(pipeline, "select_canonical", fail)
+        call = lambda: clean_corpus(docs, CFG)  # noqa: E731
+    with scoped_persists() as scope:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            call()
+    scope.release()
+    assert jsc.getPersistentRDDs().size() == base
+
+
 def _token_sets(spark, n_clusters=10, per=6, seed=5):
     """(id, features): clusters of rows sharing ~90 % of their ids."""
     rng = np.random.RandomState(seed)

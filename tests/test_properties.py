@@ -212,12 +212,11 @@ def _pair_metrics(fit, query, valued, pairs, chunk):
     pairs (query row i, fitted row j) of the coded tables of ``fit`` and
     ``query``, scored in chunks of ``chunk`` pairs."""
 
-    def packed(rows, dtype):
-        blobs = [None if r is None else np.asarray(r, dtype).tobytes() for r in rows]
-        return pa.chunked_array([pa.array(blobs, pa.binary())])
+    def lists(rows, typ):
+        return pa.chunked_array([pa.array(rows, pa.list_(typ))])
 
     def table(rows, vals, ids, vocab=None):
-        return K.code_rows(ids, packed(rows, "<i8"), packed(vals, "<f8") if valued else None, vocab)
+        return K.code_rows(ids, lists(rows, pa.int64()), lists(vals, pa.float64()) if valued else None, vocab)
 
     def ones_if_null(v, r):
         return np.ones(len(r)) if v is None or not valued else np.asarray(v, np.float64)

@@ -27,7 +27,7 @@ import threading
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from webdedup import kernels as K
@@ -44,40 +44,34 @@ def _signature_udf(
     hash_algorithm: int = 0,
     range_k_wta: int = 20,
 ):
-    """(features array<long>, values array<double>) → struct(bands, fpk,
-    vpk), one Python pass per row.
+    """(features array<long>, values array<double>) → bands array<bigint>,
+    one Python pass per row.
 
-    bands: shingle=False gives one entry per raw signature slot (the
-    reference's default shingle=0 — one hash table per hash function,
+    shingle=False gives one entry per raw signature slot (the reference's
+    default shingle=0 — one hash table per hash function,
     inverseIndexStorageUnorderedMap.h:19-38); shingle=True folds the slots
     by the chained wang32 (P4). hash_algorithm=1: WTA-Hash signatures (P5)
     instead of MinHash; WTA is the one signature family that reads feature
     VALUES (inverseIndex.cpp:319-328 picks the max-value key among the
-    rangeK smallest hashed keys). MinHash stays presence-only
-    (inverseIndex.cpp:256), matching the reference.
-
-    fpk / vpk: the row's ids as ``<i8`` bytes (the reference's uint64 id
-    domain, exact) and its values as ``<f8`` bytes, in the given order so
-    euclidean/cosine sum in the same order; vpk is null where ``values``
-    is (callers without values pass a null literal and drop vpk).
+    rangeK smallest hashed keys), and a null ``values`` row reads as ones.
+    MinHash stays presence-only (inverseIndex.cpp:256), matching the
+    reference. Only the bands come out of Python: the fitted leaf keeps
+    the caller's ``features``/``values`` columns as they are.
     """
 
-    @pandas_udf("bands array<bigint>, fpk binary, vpk binary")
-    def sig(features: pd.Series, values: pd.Series) -> pd.DataFrame:
-        ids = [np.asarray(r, dtype="<i8") for r in features]
+    @pandas_udf("array<bigint>")
+    def sig(features: pd.Series, values: pd.Series) -> pd.Series:
         if hash_algorithm == 1:
             sigs = np.array(
                 [K.wta_signature(r, v, num_hashes, range_k_wta)
-                 for r, v in zip(ids, values)],
+                 for r, v in zip(features, values)],
                 dtype=np.uint32,
             ).reshape(-1, num_hashes)
         else:
-            sigs = K.minhash_signatures(ids, num_hashes)
+            sigs = K.minhash_signatures(list(features), num_hashes)
         if shingle:
             sigs = K.fold_bands(sigs, rows_per_band)
-        fpk = [r.tobytes() for r in ids]
-        vpk = [None if v is None else np.asarray(v, "<f8").tobytes() for v in values]
-        return pd.DataFrame({"bands": list(sigs.astype(np.int64)), "fpk": fpk, "vpk": vpk})
+        return pd.Series(list(sigs.astype(np.int64)))
 
     return sig
 
@@ -144,13 +138,13 @@ def _exact_pass(metric: str, q_rows, c_rows, k: int | None):
 
 
 def _row_table(feat: DataFrame, name: str, vocab=None):
-    """(table, vocab): feat's rows and their values, if it has them, read
-    with one Arrow collect into a ``kernels.code_rows`` table coded over
-    ``vocab``, else over feat's own ids, which it returns. ``name`` is for
-    the repeated-id error."""
-    t = feat.select("id", "fpk", *(["vpk"] if "vpk" in feat.columns else [])).toArrow()
-    vpk = t["vpk"] if "vpk" in t.column_names else None
-    return K.code_rows(t["id"].to_numpy(), t["fpk"], vpk, vocab, name)
+    """(table, vocab): feat's ``features`` and its ``values``, if it has
+    them, read with one Arrow collect into a ``kernels.code_rows`` table
+    coded over ``vocab``, else over feat's own ids, which it returns.
+    ``name`` is for the repeated-id error."""
+    values = "values" in feat.columns
+    t = feat.select("id", "features", *(["values"] if values else [])).toArrow()
+    return K.code_rows(t["id"].to_numpy(), t["features"], t["values"] if values else None, vocab, name)
 
 
 class _FittedRows:
@@ -163,14 +157,12 @@ class _FittedRows:
         self._leaf = leaf
         self._lock = threading.Lock()
         self._table = None  # (broadcast, vocab)
-        self.n_rows = None  # the leaf's row count, once the table is built
 
     def get(self):
         """→ (the broadcast table, the fitted vocabulary)."""
         with self._lock:
             if self._table is None:
                 table, vocab = _row_table(self._leaf, "the fitted rows (fit / partial_fit)")
-                self.n_rows = table.ids.size
                 self._table = self._leaf.sparkSession.sparkContext.broadcast(table), vocab
             return self._table
 
@@ -263,11 +255,11 @@ class MinHashNeighbors:
         self.lsb_bits = store_value_with_least_sigificant_bit
         self.metric = metric
         self._index: DataFrame | None = None   # (id, slot, hash) bucket rows
-        self._fitted: DataFrame | None = None  # (id, bands, fpk[, vpk])
+        self._fitted: DataFrame | None = None  # (id, bands, features[, values])
+        self._n_fitted = 0  # _fitted's row count, observed as it is filled
         self._rows: _FittedRows | None = None  # _fitted as a broadcast table
         self._labels: DataFrame | None = None
         self._released = False  # the scope owning the fitted leaf was released
-        self._has_values = False
         self._sig_len = (
             number_of_hash_functions // shingle_size if shingle else number_of_hash_functions
         )
@@ -280,13 +272,15 @@ class MinHashNeighbors:
             return "cosine"
         if self.metric is not None:
             return self.metric
-        return "euclidean" if self._has_values else "jaccard"
+        return "euclidean" if "values" in self._fitted.columns else "jaccard"
 
     # ---------------- index build (B1) ----------------
 
     def _featurize(self, X: DataFrame) -> DataFrame:
-        """X → (id, bands, fpk[, vpk]); vpk only when X has ``values``."""
-        has_values = "values" in X.columns
+        """X → (id, bands, features[, values]): X's own columns (cast to
+        array<bigint> / array<double>) beside the signature UDF's bands."""
+        feats = F.col("features").cast("array<bigint>")
+        vals = F.col("values").cast("array<double>") if "values" in X.columns else None
         udf = _signature_udf(
             self.number_of_hash_functions,
             self.shingle_size,
@@ -294,19 +288,17 @@ class MinHashNeighbors:
             self.hash_algorithm,
             self.rangeK_wta,
         )
-        values = F.col("values") if has_values else F.lit(None).cast("array<double>")
-        return X.select("id", udf("features", values).alias("_s")).select(
-            "id", "_s.bands", "_s.fpk", *(["_s.vpk"] if has_values else [])
-        )
+        # only WTA reads values; MinHash gets a null literal
+        read = vals if vals is not None and self.hash_algorithm == 1 else F.lit(None).cast("array<double>")
+        rows = [feats.alias("features")] + ([vals.alias("values")] if vals is not None else [])
+        return X.select("id", udf(feats, read).alias("bands"), *rows)
 
     def _query_feat(self, X: DataFrame | None) -> DataFrame:
         """The fitted leaf for a self-query (X=None), else X featurized.
-        With fast=False two readers take X's signature UDF output, the query
-        table's collect (``_query_rows``) and the collision join, so it is
-        cached in the caller's persist scope."""
-        if X is None:
-            return self._fitted
-        return self._featurize(X) if self.fast else track_persist(self._featurize(X))
+        Nothing is cached: the query table's collect (``_query_rows``)
+        reads only X's own columns, so Catalyst prunes the signature UDF
+        from it, and the UDF runs once, in the collision join."""
+        return self._fitted if X is None else self._featurize(X)
 
     def _build_index(self, feat: DataFrame) -> DataFrame:
         idx = feat.select("id", F.posexplode("bands").alias("slot", "hash"))
@@ -319,13 +311,15 @@ class MinHashNeighbors:
 
     def _set_fitted(self, feat: DataFrame) -> None:
         """Make ``feat`` the fitted data: one eager checkpoint leaf owned by
-        the caller's persist scope, with the index rebuilt over it and a
-        fresh row table for the exact re-rank. Releasing that scope destroys
-        the table's broadcast and un-fits the model unless a later leaf
-        replaced this one."""
-        leaf = track_checkpoint(feat)
+        the caller's persist scope (its row count observed as it fills),
+        the index rebuilt over it and a fresh row table for the exact
+        re-rank. Releasing that scope destroys the table's broadcast and
+        un-fits the model unless a later leaf replaced this one."""
+        ob = Observation()
+        leaf = track_checkpoint(feat.observe(ob, F.count(F.lit(1)).alias("n")))
         rows = _FittedRows(leaf)
         self._fitted, self._rows, self._released = leaf, rows, False
+        self._n_fitted = ob.get["n"]
         self._index = self._build_index(leaf)
 
         def unfit():
@@ -361,7 +355,6 @@ class MinHashNeighbors:
         raises ``ValueError`` naming the fitted rows and a repeated id.
         That query collects the fitted rows once into a broadcast row
         table; ``kneighbors`` gives its size limit."""
-        self._has_values = "values" in X.columns
         self._set_fitted(self._featurize(X))
         self._labels = y
         return self
@@ -419,8 +412,8 @@ class MinHashNeighbors:
     # ---------------- persistence (S4) ----------------
 
     def save(self, path: str) -> None:
-        """Persist the fitted data (id, bands, fpk[, vpk]) and config to
-        parquet + JSON — the partial_fit-able on-disk form of the model."""
+        """Persist the fitted data (id, bands, features[, values]) and config
+        to parquet + JSON — the partial_fit-able on-disk form of the model."""
         import json
         import os
 
@@ -450,12 +443,11 @@ class MinHashNeighbors:
         lsb = cfg.pop("lsb_bits")
         obj = cls(**cfg, store_value_with_least_sigificant_bit=lsb)
         feat = spark.read.parquet(os.path.join(path, "fitted"))
-        if "fpk" not in feat.columns:
+        if "features" not in feat.columns:
             raise ValueError(
-                f"{path}: the fitted data has no 'fpk' column (packed feature "
-                "ids); it was saved in an older layout — re-fit and save again"
+                f"{path}: the fitted data has no 'features' column; it was "
+                "saved in the packed-row layout — re-fit and save again"
             )
-        obj._has_values = "vpk" in feat.columns
         obj._set_fitted(feat)
         lab = os.path.join(path, "labels")
         if os.path.exists(lab):
@@ -469,11 +461,14 @@ class MinHashNeighbors:
 
         Hot buckets (>= max_bin_size members on the INDEX side) are skipped
         entirely at query time, matching inverseIndex.cpp:555's bucket-size
-        guard with B2 tombstone semantics.
+        guard with B2 tombstone semantics. The index side broadcasts when
+        fitted rows × signature length is within ``BROADCAST_ID_LIMIT``.
         """
         idx_ok = drop_hot(self._index, ["slot", "hash"], self.max_bin_size).select(
             F.col("id").alias("cand_id"), "slot", "hash"
         )
+        if self._n_fitted * self._sig_len <= BROADCAST_ID_LIMIT:
+            idx_ok = F.broadcast(idx_ok)
         q = query_feat.select(
             F.col("id").alias("query_id"), F.posexplode("bands").alias("slot", "hash")
         )
@@ -512,22 +507,22 @@ class MinHashNeighbors:
 
     def _query_rows(self, query_feat: DataFrame):
         """The broadcast row table of the query side of the exact re-rank:
-        the fitted leaf's own for a self-query; else one built now from the
-        featurized X, coded over the fitted vocabulary, and destroyed with
-        the caller's persist scope."""
+        the fitted leaf's own for a self-query; else one built now from X's
+        rows, coded over the fitted vocabulary, and destroyed with the
+        caller's persist scope."""
         metric = self._resolved_metric()
         if query_feat is self._fitted:
             return self._rows.get()[0]
-        q_has_values = "vpk" in query_feat.columns
-        if metric in ("euclidean", "cosine") and q_has_values != self._has_values:
+        fit_values, q_values = ("values" in f.columns for f in (self._fitted, query_feat))
+        if metric in ("euclidean", "cosine") and q_values != fit_values:
             # mirrors the reference's single-CSR-format contract: fit and
             # query share one (indices, data) layout. Silently substituting
             # ones for the missing side computes euclidean/cosine between
             # weighted candidates and implicitly-binary queries — plausible-
             # looking but inconsistent vectors (ADVICE r2).
             raise ValueError(
-                f"fit data has_values={self._has_values} but query data "
-                f"has_values={q_has_values}; {metric} needs one consistent "
+                f"fit data has_values={fit_values} but query data "
+                f"has_values={q_values}; {metric} needs one consistent "
                 "CSR format — add/drop the 'values' column on the query side"
             )
         table, _ = _row_table(query_feat, "the query X", self._rows.get()[1])
@@ -584,9 +579,9 @@ class MinHashNeighbors:
         (Q9, :326-382). Disable the expansion with
         ``neighbor_of_neighbor=False``.
 
-        fast=False caches the featurized X (see ``_query_feat``), its row
-        table (see ``_query_rows``) and, with the expansion, the round-1
-        edge table in the CALLER's persist scope. In a loop use one
+        fast=False keeps an explicit X's row table (see ``_query_rows``)
+        and, with the expansion, the round-1 edge table in the CALLER's
+        persist scope. In a loop use one
         ``scoped_persists()`` per call, released once the result is
         materialized (a release also un-fits a model fitted inside that
         scope).
@@ -607,20 +602,16 @@ class MinHashNeighbors:
         The exact rounds look both rows of each (query_id, cand_id) pair
         up in broadcast row tables: one per fitted leaf, built at its
         first fast=False query, and one per call for an explicit X. Each
-        is built from one Arrow collect of that side's packed rows (8 bytes
-        an id, 16 with ``values``), so they must fit in
+        is built from one Arrow collect of that side's ``features`` and
+        ``values`` (8 bytes an id, 16 with ``values``), so they must fit in
         ``spark.driver.maxResultSize`` and the driver (Spark's own collect
         error above that), and that side's ids must be unique. Each Python
         worker loads the tables, whatever the metric: the smallest
         unsigned int that holds the fitted vocabulary's size an id (2
         bytes up to 65,535 distinct ids), plus 8 bytes an id for a value
         and 8 a row for its squared norm when the rows have ``values``.
-        There is no join fallback. On generated pages (4-core host, fit +
-        kneighbors, the packed-row joins these tables replaced → the
-        tables) the tables were faster at every size measured, with peak
-        memory inside the joins' range: self-query 20,000 pages 14.3-17.1 → 8.9-9.8 s; 200,000 pages (82.6M ids: 631
-        MB collected, a 162 MB table) 37.9-49.2 → 31.0-33.2 s at 7.4-8.4
-        vs 7.6-8.0 GB; fit on 2,000 pages, X of 20,000 39.3-39.4 → 18.9-21.2 s.
+        There is no join fallback. At 200,000 generated pages (82.6M ids)
+        the fitted side collects 631 MB into a 162 MB table.
         """
         self._check_fitted()
         k = n_neighbors or self.n_neighbors
@@ -659,7 +650,7 @@ class MinHashNeighbors:
         # reported its size yet, and one side was shuffled before the switch
         # to a broadcast: one more job and 4 % more shuffle at kneighbors_5k.
         mids = base.select(F.col("query_id").alias("_mid"), F.col("cand_id"))
-        if self._rows.n_rows * limit <= BROADCAST_ID_LIMIT:
+        if self._n_fitted * limit <= BROADCAST_ID_LIMIT:
             mids = F.broadcast(mids)
         hop2 = (
             round1.select("query_id", F.col("cand_id").alias("_mid"))
@@ -687,10 +678,11 @@ class MinHashNeighbors:
         the reference, whose desc-sorted `val <= pRadius → push else break`
         loop (nearestNeighbors.cpp:172-181) drops everything for any
         meaningful similarity radius; a floor is the semantics its callers
-        would want. fast=False with an explicit X caches it featurized and
-        its row table in the CALLER's persist scope, as ``kneighbors`` does;
-        X's packed rows must then fit in ``spark.driver.maxResultSize`` and
-        its ids must be unique (see ``kneighbors``).
+        would want. fast=False with an explicit X keeps its row table in
+        the CALLER's persist scope, as ``kneighbors`` does; X's
+        ``features`` and ``values`` must then fit in
+        ``spark.driver.maxResultSize`` and its ids must be unique (see
+        ``kneighbors``).
         """
         self._check_fitted()
         r = radius if radius is not None else self.radius
@@ -849,9 +841,9 @@ class MinHashClassifier(MinHashNeighbors):
         """→ (query_id, label): mode over neighbor labels; deterministic
         tie-break = smallest label (Counter.most_common order is
         insertion-dependent in the reference; we pin it). fast=False with
-        an explicit X collects X's packed rows into a row table per call:
-        they must fit in ``spark.driver.maxResultSize`` and X's ids must
-        be unique (see ``kneighbors``)."""
+        an explicit X collects X's ``features`` and ``values`` into a row
+        table per call: they must fit in ``spark.driver.maxResultSize``
+        and X's ids must be unique (see ``kneighbors``)."""
         votes = self._votes(X, n_neighbors)
         w = Window.partitionBy("query_id").orderBy(F.desc("v"), F.asc("label"))
         return (

@@ -23,9 +23,9 @@ These are the vectorized re-expressions of the reference's C++ inner loops
                          (``computation/nearestNeighbors.cpp:122-190``)
                          scores it, or ``sparse_metric``'s euclidean and
                          cosine, with ``table_pair_metric`` over a broadcast
-                         ``RowTable`` built by ``code_rows`` (only the pairs'
-                         row ids cross the Python boundary); ``rank_cut``
-                         keeps each query's top k as Spark's ``rank()`` would.
+                         ``RowTable`` that ``code_rows`` builds from Arrow
+                         ``list`` rows (only the pairs' ids cross the Python
+                         boundary); ``rank_cut`` keeps each query's top k.
 * ``rolling_hash`` / ``winnow`` — Rabin fingerprints + winnowing for the
                          exact-substring duplicate pass (north-rule extra).
 
@@ -348,7 +348,7 @@ def jaccard_sorted(a: np.ndarray, b: np.ndarray) -> float:
 
 def unpack_rows(arr: pa.Array, dtype: str):
     """Zero-copy views of a binary Arrow column of packed ``dtype`` rows →
-    (elements, n+1 row offsets in elements, validity). Row i is
+    (elements, n+1 row offsets in elements). Row i is
     ``elements[off[i]:off[i+1]]``, empty when null; ``arr.offset`` and the
     64-bit offsets of ``large_binary`` (useLargeVarTypes) are honoured."""
     size = np.dtype(dtype).itemsize
@@ -358,7 +358,7 @@ def unpack_rows(arr: pa.Array, dtype: str):
         offsets, f"<i{width}", count=len(arr) + 1, offset=arr.offset * width
     ) // size
     elems = np.frombuffer(data, dtype, count=data.size // size) if data else np.empty(0, dtype)
-    return elems, off, arr.is_valid().to_numpy(zero_copy_only=False)
+    return elems, off
 
 
 def packed_pair_scores(a, b, dtype: str) -> np.ndarray:
@@ -375,8 +375,8 @@ def packed_pair_scores(a, b, dtype: str) -> np.ndarray:
     the per-pair arrays stay L1/L2-resident — same bandwidth argument as
     :func:`substring_fingerprints_batch`.
     """
-    ia, oa, _ = unpack_rows(a, dtype)
-    ib, ob, _ = unpack_rows(b, dtype)
+    ia, oa = unpack_rows(a, dtype)
+    ib, ob = unpack_rows(b, dtype)
     out = np.empty(len(a))
     for i in range(len(a)):
         out[i] = jaccard_sorted(ia[oa[i] : oa[i + 1]], ib[ob[i] : ob[i + 1]])
@@ -434,11 +434,12 @@ def _by_id(ids, name: str):
 
 
 def code_rows(
-    ids, fpk: pa.ChunkedArray, vpk: pa.ChunkedArray | None = None, vocab=None, name: str = "rows"
+    ids, features: pa.ChunkedArray, values: pa.ChunkedArray | None = None, vocab=None, name: str = "rows"
 ):
-    """(RowTable, vocab) of row ids, their packed ``<i8`` id rows ``fpk``,
-    each id coded as its index in ``vocab``, and their packed ``<f8`` value
-    rows ``vpk`` (a null one read as ones), in ``fpk``'s order.
+    """(RowTable, vocab) of row ids, their ``list``/``large_list`` int64
+    id rows ``features``, each id coded as its index in ``vocab``, and
+    their double value rows ``values`` (a null one read as ones), read
+    as zero-copy views of each chunk's ``.values`` and ``.offsets``.
 
     ``vocab=None`` codes over the rows' own distinct ids, which it
     returns; a query table passes the fitted rows' ``vocab``, and its ids
@@ -451,9 +452,9 @@ def code_rows(
     took 12.8 s, and the driver peaked at 0.84-0.86 GB where ``np.unique``
     over the combined, id-sorted rows peaked at 2.0 GB.
     """
-    parts = [unpack_rows(c, "<i8")[:2] for c in fpk.chunks]
+    parts = [(c.values.to_numpy(zero_copy_only=False), c.offsets.to_numpy()) for c in features.chunks]
     if vocab is None:
-        vocab = pd.unique(np.concatenate([pd.unique(e) for e, _ in parts] or [np.empty(0, np.int64)]))
+        vocab = pd.unique(np.concatenate([pd.unique(e[o[0] : o[-1]]) for e, o in parts] or [np.empty(0, np.int64)]))
     index, dtype = pd.Index(vocab), np.min_scalar_type(vocab.size)
     codes, off, n = [], [np.zeros(1, np.int64)], 0
     for e, o in parts:
@@ -466,10 +467,11 @@ def code_rows(
     elems = np.concatenate(codes) if codes else np.empty(0, dtype)
     off = np.concatenate(off)
     vals = sq = None
-    if vpk is not None:
+    if values is not None:
         vals, r = np.ones(elems.size), 0
-        for chunk in vpk.chunks:
-            w, woff, ok = unpack_rows(chunk, "<f8")
+        for chunk in values.chunks:
+            w, woff = chunk.values.to_numpy(zero_copy_only=False), chunk.offsets.to_numpy()
+            ok = chunk.is_valid().to_numpy(zero_copy_only=False)
             start = off[r : r + len(chunk)][ok]
             lens = off[r + 1 : r + 1 + len(chunk)][ok] - start
             vals[_row_positions(start, lens)] = w[_row_positions(woff[:-1][ok], lens)]

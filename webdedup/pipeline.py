@@ -131,11 +131,15 @@ def dedup(
     reading either from the result raises a RuntimeError, and a frame
     taken from it before the release raises Spark's
     ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing (see
-    :class:`DedupResult`).
+    :class:`DedupResult`). A run that raises releases its scope first.
     """
     cfg = cfg or DedupConfig()
     with scoped_persists() as scope:
-        result = _dedup_impl(pages, cfg, text_col, id_col)
+        try:
+            result = _dedup_impl(pages, cfg, text_col, id_col)
+        except BaseException:
+            scope.release()  # a failed run leaves nothing pinned
+            raise
     result.scope = scope
     return result
 
@@ -403,25 +407,27 @@ def clean_corpus(
 
     Cache lifecycle: the keeper id set is an eager checkpoint leaf
     (``joins.track_checkpoint``) and the inner dedup run's persist scope is
-    released immediately after, so the pipeline's large caches never
-    outlive this call. The keeper leaf and the final span stage's narrow
-    hashed-block table both belong to the CALLER's active persist scope
-    (they back the lazily returned frame) — wrap the call in
-    ``scoped_persists()`` or call ``release_persisted()`` after
-    materializing the output.
+    released right after, or when anything before that raises, so the
+    pipeline's large caches never outlive this call. The keeper leaf and
+    the final span stage's narrow hashed-block table both belong to the
+    CALLER's active persist scope (they back the lazily returned frame) —
+    wrap the call in ``scoped_persists()`` or call ``release_persisted()``
+    after materializing the output.
     """
     from webdedup.textstats import quality_scores, span_dedup
 
     cfg = cfg or DedupConfig()
     res = dedup(pages, cfg, text_col=text_col, id_col="doc_id")
-    qual = quality_scores(pages, text_col=text_col)
-    canon = select_canonical(res.clusters, qual)
-    keep_ids = track_checkpoint(
-        canon.where(F.col("is_canonical") == 1)
-        .join(qual.where(F.col("ttr_ppm") >= min_ttr_ppm), "doc_id", "left_semi")
-        .select("doc_id", "cluster_id")
-    )
-    res.release()
+    try:
+        qual = quality_scores(pages, text_col=text_col)
+        canon = select_canonical(res.clusters, qual)
+        keep_ids = track_checkpoint(
+            canon.where(F.col("is_canonical") == 1)
+            .join(qual.where(F.col("ttr_ppm") >= min_ttr_ppm), "doc_id", "left_semi")
+            .select("doc_id", "cluster_id")
+        )
+    finally:
+        res.release()
     kept = pages.join(keep_ids, "doc_id").select("doc_id", "cluster_id", text_col)
     cleaned = span_dedup(kept, span=span, min_docs=min_span_docs, text_col=text_col)
     return (
